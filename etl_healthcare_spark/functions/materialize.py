@@ -48,6 +48,17 @@ def _backend(df: DataFrame) -> str:
     )
 
 
+def _reliable_checkpoint(df: DataFrame, eager: bool) -> DataFrame:
+    sc = df.sparkSession.sparkContext
+    if sc._jsc.sc().getCheckpointDir().isEmpty():
+        sc.setCheckpointDir(
+            os.environ.get(
+                "SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/etl_healthcare_spark_ckpt"
+            )
+        )
+    return df.checkpoint(eager=eager)
+
+
 def _materialize(df: DataFrame, eager: bool) -> DataFrame:
     backend = _backend(df)
     if backend == "local":
@@ -60,14 +71,7 @@ def _materialize(df: DataFrame, eager: bool) -> DataFrame:
             out.count()  # materialize every partition now (cache stores full rows)
         return out
     if backend == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            sc.setCheckpointDir(
-                os.environ.get(
-                    "SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/etl_healthcare_spark_ckpt"
-                )
-            )
-        return df.checkpoint(eager=eager)
+        return _reliable_checkpoint(df, eager)
     raise ValueError(
         f"unknown checkpoint backend {backend!r}: 'local', 'disk' or 'reliable'"
     )
@@ -90,21 +94,15 @@ def materialize_lazy(df: DataFrame) -> DataFrame:
 def cut_lineage(df: DataFrame) -> DataFrame:
     """Materialization that MUST also sever the plan from its sources.
 
-    Required by read-modify-OVERWRITE stores (ParquetStateStore, the
-    streaming quarantine) — the frame is consumed after the path it was read
-    from is rewritten — and by frames containing non-deterministic columns
-    (uuid()), where any lineage-backed recompute silently changes values.
-    The ``disk`` backend's plain persist keeps lineage (block loss triggers
-    re-evaluation against the NEW file contents), so this entry point maps
-    disk -> reliable ``checkpoint`` instead; local/reliable behave as in
-    ``materialize``."""
+    Required where a frame must not be evaluated a second time: by
+    ParquetStateStore.merge, whose write and returned commit log must come
+    from one evaluation (``dedup_batch`` may break a timestamp tie either
+    way); by the streaming quarantine, whose frame is consumed after the path
+    it was read from is rewritten; and by frames containing non-deterministic
+    columns (uuid()), where any lineage-backed recompute silently changes
+    values.  The ``disk`` backend's plain persist keeps lineage (block loss
+    triggers re-evaluation), so this entry point maps disk -> reliable
+    ``checkpoint`` instead; local/reliable behave as in ``materialize``."""
     if _backend(df) == "disk":
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            sc.setCheckpointDir(
-                os.environ.get(
-                    "SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/etl_healthcare_spark_ckpt"
-                )
-            )
-        return df.checkpoint(eager=True)
+        return _reliable_checkpoint(df, eager=True)
     return _materialize(df, eager=True)

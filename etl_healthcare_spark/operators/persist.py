@@ -13,17 +13,28 @@ Reference semantics (services/persist/handler.ts:20-80):
 
 Spark-first: MERGE semantics as a full-outer join between current state and
 the (deduplicated, U2) batch.  On disk the store is parquet partitioned by
-``tenantId``; a merge only reads + rewrites the partitions that appear in the
-batch (dynamic partition overwrite), which is the scale story: merging a
-tenant's micro-batch into a 100 TB store touches only that tenant's files.
-With Delta available this maps 1:1 onto ``MERGE INTO`` — the parquet fallback
-is self-contained here (SURVEY §7.3).
+``tenantId``, one directory per tenant commit; a merge reads and writes only
+the tenants that appear in the batch and publishes them with one atomic
+pointer flip, which is the scale story: merging a tenant's micro-batch into a
+100 TB store touches only that tenant's files, and a crash at any point
+leaves the previous version whole.  With Delta available this maps 1:1 onto
+``MERGE INTO`` — the parquet fallback is self-contained here (SURVEY §7.3).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import contextlib
+import glob
+import json
+import os
+import re
+import shutil
+import tempfile
+
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
 from ..functions.materialize import cut_lineage
 
 MERGE_KEYS = ["tenantId", "entityType", "entityId"]
@@ -86,7 +97,23 @@ def merge_frames(state: DataFrame, batch: DataFrame, updated_at, keys: list[str]
 
 
 class ParquetStateStore:
-    """The serving-store on parquet, partitioned by tenantId.
+    """The serving store on parquet: per-tenant commits behind an atomic
+    version pointer — the native stand-in for a Delta/Iceberg table.
+
+    Layout::
+
+        <path>/tenantId=<t>/commit=<n>/*.parquet   tenant t's rows as commit n wrote them
+        <path>/_manifest/<n>.json                  version n: each tenant's live commit
+        <path>/_current                            the live version number
+
+    Commit n writes only the tenants it touches, into new ``commit=n``
+    directories, then writes manifest n (version n-1's map with those tenants
+    repointed and emptied ones dropped) and flips the pointer via write-temp +
+    ``os.replace`` (atomic on POSIX).  A reader resolves the pointer once per
+    ``read()``, so it sees one whole version, never a mix; a crash before the
+    flip leaves only unreferenced ``commit=n`` directories, which the next
+    attempt at n removes.  Other tenants' files are never rewritten, and old
+    versions stay readable (``read(version=)``, ``diff``) until ``vacuum``.
 
     GSI2's (patient, time) timeline becomes an in-file sort
     (``sortWithinPartitions``) so parquet min/max stats give data skipping on
@@ -94,102 +121,165 @@ class ParquetStateStore:
     index (SURVEY §4).
     """
 
+    POINTER = "_current"
+    MANIFESTS = "_manifest"
+
     def __init__(self, spark, path: str, keys: list[str] | None = None):
         self.spark = spark
         self.path = path
         self.keys = keys or MERGE_KEYS
 
-    def exists(self) -> bool:
-        """True iff an initialized store exists at ``path``.
-
-        Only genuine absence maps to False: PATH_NOT_FOUND (never written) or
-        UNABLE_TO_INFER_SCHEMA (an empty directory).  Anything else — corrupt
-        footers, permission or transport failures — RAISES: treating a
-        damaged store as "absent" would make the next merge silently
-        re-initialize (and so destroy) it."""
-        from pyspark.errors import AnalysisException
-
+    def current_version(self) -> int:
+        """0 = uninitialized; the pointer file holds the live version."""
+        pointer = os.path.join(self.path, self.POINTER)
         try:
-            self.spark.read.parquet(self.path).limit(0).collect()
+            with open(pointer) as f:
+                return int(f.read().strip())
+        except FileNotFoundError:
+            return 0
+        except ValueError as e:
+            raise RuntimeError(f"corrupt version pointer at {pointer}") from e
+
+    def _manifest(self, version: int) -> dict:
+        try:
+            with open(os.path.join(self.path, self.MANIFESTS, f"{version}.json")) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            raise ValueError(f"no version {version} at {self.path}") from None
+
+    def _replace(self, name: str, text: str) -> None:
+        """Write ``name`` under the store atomically: write-temp + os.replace."""
+        target = os.path.join(self.path, name)
+        os.makedirs(os.path.dirname(target), exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(target), prefix=".tmp.")
+        with os.fdopen(fd, "w") as f:
+            f.write(text)
+        os.replace(tmp, target)
+
+    def exists(self) -> bool:
+        """True iff a committed store exists at ``path`` — a filesystem check,
+        no Spark job.
+
+        Only genuine absence maps to False: no directory, or one holding
+        nothing but hidden entries and the commit directories of a first
+        commit that crashed before its pointer flip.  Anything else — a
+        corrupt pointer, a missing manifest, foreign files, a store in another
+        layout — RAISES: treating a damaged store as "absent" would make the
+        next merge silently re-initialize (and so destroy) it."""
+        version = self.current_version()
+        if version:
+            self._manifest(version)
             return True
-        except AnalysisException as e:
-            cond = e.getCondition() if hasattr(e, "getCondition") else e.getErrorClass()
-            if cond in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-                return False
-            raise
+        if not os.path.isdir(self.path):
+            return False
+        for entry in os.listdir(self.path):
+            d = os.path.join(self.path, entry)
+            if entry.startswith(("_", ".")) or (
+                entry.startswith("tenantId=")
+                and os.path.isdir(d)
+                and all(re.fullmatch(r"commit=\d+", c) for c in os.listdir(d))
+            ):
+                continue
+            raise RuntimeError(f"{d} is not part of a state store")
+        return False
 
-    def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+    def read(self, version: int | None = None) -> DataFrame:
+        """The store as of ``version``, by default the live one."""
+        m = self._manifest(self.current_version() if version is None else version)
+        if not m["tenants"]:
+            return self.spark.createDataFrame([], StructType.fromJson(m["schema"]))
+        paths = [os.path.join(self.path, d) for d in m["tenants"].values()]
+        return self.spark.read.option("basePath", self.path).parquet(*paths).drop("commit")
 
-    def merge(self, batch: DataFrame, updated_at, order_col: str = "effectiveDateTime") -> DataFrame:
-        """U1+U2+U3: dedup the batch, merge into the store rewriting only the
-        tenant partitions present in the batch; returns the commit log
-        (etl.persisted.v1 analog: key cols + version + action)."""
-        batch = dedup_batch(batch, order_col=order_col, keys=self.keys)
-        if not self.exists():
-            new_state = merge_frames(
-                self.spark.createDataFrame([], batch.schema)
-                .withColumn("version", F.lit(1).cast("long"))
-                .withColumn("updatedAt", F.lit(updated_at).cast("timestamp")),
-                batch,
-                updated_at,
-                keys=self.keys,
-            )
-            (
-                new_state.drop(ACTION_COL)
-                .repartition("tenantId")
-                .sortWithinPartitions("patientId", "effectiveDateTime")
-                .write.mode("overwrite")
-                .partitionBy("tenantId")
-                .parquet(self.path)
-            )
-            return new_state.select(*self.keys, "version", F.col(ACTION_COL).alias("action"))
+    def versions(self) -> list[int]:
+        """The committed versions still on disk, oldest first."""
+        d = os.path.join(self.path, self.MANIFESTS)
+        if not os.path.isdir(d):
+            return []
+        live = self.current_version()
+        found = (re.fullmatch(r"(\d+)\.json", f) for f in os.listdir(d))
+        return sorted(v for v in (int(m.group(1)) for m in found if m) if v <= live)
 
-        # prune the state scan to the batch's tenants via a BROADCAST SEMI-JOIN
-        # on the partition column — dynamic partition pruning reuses the
-        # broadcast to skip non-batch tenant directories at the scan, with no
-        # driver-side collect: a million-partition batch would have made the
-        # old collect+isin build a giant literal list on the driver, while a
-        # semi-join prune is shape-identical at any tenant cardinality
-        tenant_ids = F.broadcast(batch.select("tenantId").distinct())
-        state = self.read().join(tenant_ids, "tenantId", "left_semi")
-        # localCheckpoint (eager) BEFORE the overwrite: the merged plan reads
-        # the same path it is about to rewrite — without cutting lineage here,
-        # any later evaluation (the commit log) would silently re-read the
-        # NEW state and report wrong actions
-        merged = merge_frames(state, batch, updated_at, keys=self.keys).transform(cut_lineage)
+    def _commit(self, rows: DataFrame, touched: Observation | None = None) -> None:
+        """Publish ``rows`` as version n = live + 1: write them as commit n of
+        their tenants, then manifest n — the live map without the ``touched``
+        tenants (an Observation of their ``tenants`` set; default: the
+        written ones), each written tenant at commit n — then flip the
+        pointer.  The written tenant set is observed on the write itself."""
+        n = self.current_version() + 1
+        tenants = self._manifest(n - 1)["tenants"] if n > 1 else {}
+        # the pointer is below n, so only a crashed attempt at n can have
+        # left these; its half-written task output must not merge into ours
+        shutil.rmtree(os.path.join(self.path, "_temporary"), ignore_errors=True)
+        for d in glob.glob(os.path.join(glob.escape(self.path), "tenantId=*", f"commit={n}")):
+            shutil.rmtree(d)
+        written = Observation()
         (
-            merged.drop(ACTION_COL)
+            rows.withColumn("commit", F.lit(n))
             .repartition("tenantId")
             .sortWithinPartitions("patientId", "effectiveDateTime")
-            .write.mode("overwrite")
-            # per-write, NOT session-conf-dependent: under the default static
-            # mode this same overwrite would silently delete every non-batch
-            # tenant partition of the store
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("tenantId")
+            # at the top of the plan: an observation below an operator that
+            # AQE replaces with an empty relation never reports
+            .observe(written, F.collect_set("tenantId").alias("tenants"))
+            .write.mode("append")
+            .partitionBy("tenantId", "commit")
             .parquet(self.path)
         )
+        escape = self.spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+        for t in (touched or written).get["tenants"]:
+            tenants.pop(t, None)
+        for t in written.get["tenants"]:
+            tenants[t] = f"tenantId={escape(t)}/commit={n}"
+        self._replace(
+            f"{self.MANIFESTS}/{n}.json",
+            json.dumps({"schema": rows.schema.jsonValue(), "tenants": tenants}),
+        )
+        self._replace(self.POINTER, str(n))
+
+    def merge(self, batch: DataFrame, updated_at, order_col: str = "effectiveDateTime") -> DataFrame:
+        """U1+U2+U3: dedup the batch, merge it into the state of the batch's
+        tenants and commit those as the next version; returns the commit log
+        (etl.persisted.v1 analog: key cols + version + action), which covers
+        every row of those tenants."""
+        batch = dedup_batch(batch, order_col=order_col, keys=self.keys)
+        if self.exists():
+            # prune the state scan to the batch's tenants via a BROADCAST
+            # SEMI-JOIN on the partition column — dynamic partition pruning
+            # reuses the broadcast to skip non-batch tenant directories at the
+            # scan, with no driver-side collect, at any tenant cardinality
+            tenant_ids = F.broadcast(batch.select("tenantId").distinct())
+            state = self.read().join(tenant_ids, "tenantId", "left_semi")
+        else:
+            state = (
+                self.spark.createDataFrame([], batch.schema)
+                .withColumn("version", F.lit(1).cast("long"))
+                .withColumn("updatedAt", F.lit(updated_at).cast("timestamp"))
+            )
+        # eager, so the write and the returned log come from ONE evaluation and
+        # agree even where dedup_batch breaks a timestamp tie arbitrarily
+        merged = merge_frames(state, batch, updated_at, keys=self.keys).transform(cut_lineage)
+        self._commit(merged.drop(ACTION_COL))
         return merged.select(*self.keys, "version", F.col(ACTION_COL).alias("action"))
 
     def delete_subjects(self, subjects: DataFrame) -> DataFrame:
         """Targeted right-to-be-forgotten delete: remove every row whose
         (tenantId, patientId) appears in ``subjects``, rewriting ONLY the
-        tenant partitions the delete set touches — the same dynamic-
-        partition-overwrite discipline as merge(), so a delete for one
-        tenant never rewrites (or even reads) the others at any store size.
+        tenants the delete set touches — the same commit as merge(), so a
+        delete for one tenant never rewrites (or even reads) the others at
+        any store size.  A tenant left with no rows drops out of the
+        manifest, and ``vacuum(keep_last=1)`` then removes every older
+        version, so no retained version still holds a deleted row.
 
         The anti-join is the Delta/Iceberg `DELETE WHERE` shape expressed
-        natively: broadcast the (small) subject set, keep non-matching rows,
-        overwrite matched partitions.  Returns the tombstone ledger
-        (tenantId, patientId, n_deleted) — the auditable record a GDPR
-        pipeline must emit; a subject with no rows reports n_deleted = 0
-        (proof of absence, not silence)."""
+        natively: broadcast the (small) subject set, keep non-matching rows.
+        Returns the tombstone ledger (tenantId, patientId, n_deleted) — the
+        auditable record a GDPR pipeline must emit; a subject with no rows
+        reports n_deleted = 0 (proof of absence, not silence)."""
         subj = F.broadcast(subjects.select("tenantId", "patientId").distinct())
         tenants = F.broadcast(subj.select("tenantId").distinct())
         state = self.read().join(tenants, "tenantId", "left_semi")
-        # ledger BEFORE the rewrite; checkpoint so it cannot re-read the
-        # post-delete files (same lineage hazard as merge())
+        touched = Observation()
+        # materialized now: the vacuum below removes the files it reads
         ledger = (
             subj.join(
                 state.groupBy("tenantId", "patientId").agg(F.count(F.lit(1)).alias("n_deleted")),
@@ -197,31 +287,56 @@ class ParquetStateStore:
                 "left",
             )
             .select("tenantId", "patientId", F.coalesce("n_deleted", F.lit(0)).alias("n_deleted"))
+            .observe(touched, F.collect_set(F.when(F.col("n_deleted") > 0, F.col("tenantId"))).alias("tenants"))
             .transform(cut_lineage)
         )
-        survivors = state.join(subj, ["tenantId", "patientId"], "left_anti").transform(cut_lineage)
-        (
-            survivors.repartition("tenantId")
-            .sortWithinPartitions("patientId", "effectiveDateTime")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("tenantId")
-            .parquet(self.path)
-        )
-        # dynamic overwrite only replaces partitions PRESENT in the written
-        # data: a tenant whose every row was deleted writes nothing and its
-        # stale files would survive — the classic leak.  Those directories
-        # are removed explicitly (the set is O(|subject tenants|), already
-        # driver-small; Delta/Iceberg's DELETE subsumes this transactionally).
-        import shutil
-
-        emptied = (
-            tenants.join(survivors.select("tenantId").distinct(), "tenantId", "left_anti")
-            .collect()
-        )
-        for r in emptied:
-            shutil.rmtree(f"{self.path}/tenantId={r['tenantId']}", ignore_errors=True)
+        self._commit(state.join(subj, ["tenantId", "patientId"], "left_anti"), touched)
+        self.vacuum(keep_last=1)
         return ledger
+
+    def diff(self, v_old: int, v_new: int) -> DataFrame:
+        """Version DIFF — what changed between two committed versions, as a
+        key-grained change set: action in {added, deleted, version_bumped}.
+        The lakehouse table_changes()/CDF read expressed natively: one
+        full-outer join of the two versions on the merge keys (both sides
+        partitioned identically on tenantId, so at scale the join
+        co-partitions), comparing the row version.
+
+        Commit directories never mutate, so the diff is reproducible for as
+        long as both versions are retained — the audit answer to "what did
+        batch N actually do", computable long after the fact without a
+        commit log."""
+        old, new = self.read(v_old), self.read(v_new)
+        o = old.select(*self.keys, F.col("version").alias("__vo"))
+        n = new.select(*self.keys, F.col("version").alias("__vn"))
+        j = o.join(n, self.keys, "full_outer")
+        action = (
+            F.when(F.col("__vo").isNull(), F.lit("added"))
+            .when(F.col("__vn").isNull(), F.lit("deleted"))
+            .when(F.col("__vn") != F.col("__vo"), F.lit("version_bumped"))
+            .otherwise(F.lit("unchanged"))
+        )
+        return (
+            j.select(*self.keys, F.col("__vo").alias("version_old"),
+                     F.col("__vn").alias("version_new"), action.alias("action"))
+            .where(F.col("action") != "unchanged")
+        )
+
+    def vacuum(self, keep_last: int = 2) -> list[int]:
+        """Drop the versions older than the newest ``keep_last`` (never the
+        live one) and every commit directory only they reference.  Returns
+        the dropped version numbers."""
+        versions = self.versions()
+        drop = versions[:-keep_last] if keep_last > 0 else []
+        dirs = lambda vs: {d for v in vs for d in self._manifest(v)["tenants"].values()}  # noqa: E731
+        for d in dirs(drop) - dirs(v for v in versions if v not in drop):
+            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+            with contextlib.suppress(OSError):  # the tenant's last commit: drop its directory too
+                os.rmdir(os.path.dirname(os.path.join(self.path, d)))
+        # manifests last: a vacuum cut short leaves them for the next to finish
+        for v in drop:
+            os.remove(os.path.join(self.path, self.MANIFESTS, f"{v}.json"))
+        return drop
 
 
 def compact_small_files(
@@ -259,155 +374,10 @@ def compact_small_files(
     # is being read from, so the rewrite lands beside it and replaces it only
     # after fully committing — a crash mid-compaction leaves the original
     writer.parquet(path + ".compact_tmp")
-    import shutil
-
     shutil.rmtree(path)
     shutil.move(path + ".compact_tmp", path)
     files_after = len(spark.read.parquet(path).inputFiles())
     return {"files_before": files_before, "files_after": files_after, "rows": rows}
-
-
-class SnapshotStateStore(ParquetStateStore):
-    """ParquetStateStore with ATOMIC commits and time travel — the native
-    stand-in for a Delta/Iceberg table when neither is on the cluster.
-
-    Layout::
-
-        <path>/v00000001/...parquet     immutable snapshot directories
-        <path>/v00000002/...parquet
-        <path>/_current                 tiny pointer file naming the live one
-
-    A merge writes the ENTIRE next snapshot beside the live one, then
-    replaces the pointer via write-temp + os.replace (atomic on POSIX).
-    Readers resolve the pointer once per read, so they always see a complete
-    snapshot: a crash mid-write leaves a dangling (unreferenced) directory,
-    never a half-visible table — the parquet dynamic-overwrite path cannot
-    make that guarantee.  Old snapshots stay readable (``read(version=n)``)
-    until ``vacuum(keep_last=...)`` drops them.
-
-    Trade-off vs the partition-overwrite store: commits are whole-table
-    copies, so this fits dimension/state tables (the reference's serving
-    store) rather than append-heavy facts; at fact scale the same pointer
-    discipline is applied per partition (or by a real Delta/Iceberg commit
-    log, whose MERGE INTO this merge() maps onto 1:1).
-    """
-
-    POINTER = "_current"
-
-    def _pointer_path(self) -> str:
-        import os
-
-        return os.path.join(self.path, self.POINTER)
-
-    def current_version(self) -> int:
-        """0 = uninitialized; pointer file holds the live snapshot number."""
-        import os
-
-        try:
-            with open(self._pointer_path()) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return 0
-        except ValueError as e:
-            raise RuntimeError(f"corrupt snapshot pointer at {self._pointer_path()}") from e
-
-    def _snap_dir(self, version: int) -> str:
-        import os
-
-        return os.path.join(self.path, f"v{version:08d}")
-
-    def exists(self) -> bool:
-        return self.current_version() > 0
-
-    def read(self, version: int | None = None) -> DataFrame:
-        v = self.current_version() if version is None else version
-        if v <= 0:
-            raise ValueError(f"no snapshot at {self.path}")
-        return self.spark.read.parquet(self._snap_dir(v))
-
-    def versions(self) -> list[int]:
-        import os
-        import re as _re
-
-        if not os.path.isdir(self.path):
-            return []
-        return sorted(
-            int(m.group(1))
-            for d in os.listdir(self.path)
-            if (m := _re.fullmatch(r"v(\d{8})", d))
-        )
-
-    def merge(self, batch: DataFrame, updated_at, order_col: str = "effectiveDateTime") -> DataFrame:
-        """U1+U2+U3 with snapshot isolation: same merge semantics as the
-        parent, but committed as next-snapshot-then-pointer-flip."""
-        import os
-        import tempfile
-
-        batch = dedup_batch(batch, order_col=order_col, keys=self.keys)
-        v = self.current_version()
-        if v == 0:
-            state = (
-                self.spark.createDataFrame([], batch.schema)
-                .withColumn("version", F.lit(1).cast("long"))
-                .withColumn("updatedAt", F.lit(updated_at).cast("timestamp"))
-            )
-        else:
-            state = self.read()
-        merged = merge_frames(state, batch, updated_at, keys=self.keys).transform(cut_lineage)
-        (
-            merged.drop(ACTION_COL)
-            .repartition("tenantId")
-            .sortWithinPartitions("patientId", "effectiveDateTime")
-            .write.mode("overwrite")
-            .parquet(self._snap_dir(v + 1))
-        )
-        # atomic pointer flip: readers see v fully, then v+1 fully — never a mix
-        os.makedirs(self.path, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=self.path, prefix="._current.")
-        with os.fdopen(fd, "w") as f:
-            f.write(str(v + 1))
-        os.replace(tmp, self._pointer_path())
-        return merged.select(*self.keys, "version", F.col(ACTION_COL).alias("action"))
-
-    def diff(self, v_old: int, v_new: int) -> DataFrame:
-        """Snapshot DIFF — what changed between two committed versions, as
-        a key-grained change set: action in {added, deleted, changed,
-        version_bumped}.  The lakehouse table_changes()/CDF read expressed
-        natively: one full-outer join of the two immutable snapshots on the
-        merge keys (both sides partitioned identically on tenantId, so at
-        scale the join co-partitions), comparing the row version.
-
-        Immutability is what makes this exact: snapshots never mutate, so
-        the diff is reproducible forever — the audit answer to "what did
-        batch N actually do", computable long after the fact without a
-        commit log."""
-        old, new = self.read(v_old), self.read(v_new)
-        o = old.select(*self.keys, F.col("version").alias("__vo"))
-        n = new.select(*self.keys, F.col("version").alias("__vn"))
-        j = o.join(n, self.keys, "full_outer")
-        action = (
-            F.when(F.col("__vo").isNull(), F.lit("added"))
-            .when(F.col("__vn").isNull(), F.lit("deleted"))
-            .when(F.col("__vn") != F.col("__vo"), F.lit("version_bumped"))
-            .otherwise(F.lit("unchanged"))
-        )
-        return (
-            j.select(*self.keys, F.col("__vo").alias("version_old"),
-                     F.col("__vn").alias("version_new"), action.alias("action"))
-            .where(F.col("action") != "unchanged")
-        )
-
-    def vacuum(self, keep_last: int = 2) -> list[int]:
-        """Drop snapshots older than the newest ``keep_last``; never the live
-        one.  Returns the dropped version numbers."""
-        import shutil
-
-        live = self.current_version()
-        vs = self.versions()
-        drop = [x for x in vs[:-keep_last] if x != live] if keep_last > 0 else []
-        for x in drop:
-            shutil.rmtree(self._snap_dir(x), ignore_errors=True)
-        return drop
 
 
 def apply_cdc(

@@ -26,7 +26,6 @@ from .operators.validate import validate_dto, validate_fhir
 from .sources.audit import append_audit
 from .sources.csv_labx import parse_labx_csv
 from .sources.hl7 import parse_hl7v2
-from .functions.materialize import cut_lineage
 
 
 class PipelineResult(NamedTuple):
@@ -83,7 +82,9 @@ def run_batch_pipeline(
         "idempotencyKey",
     )
     store = ParquetStateStore(spark, state_dir)
-    log = store.merge(batch, updated_at=batch_time).transform(cut_lineage)
+    log = store.merge(batch, updated_at=batch_time)
+    # keep the live version and the one a concurrent reader may still hold
+    store.vacuum(keep_last=2)
 
     if audit_dir:
         lines = log.select(

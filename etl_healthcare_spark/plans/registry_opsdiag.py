@@ -372,8 +372,8 @@ def j12_pit_scd2(spark, sf_dir):
     "is id-only and BROADCAST; each table answers with one semi-join "
     "count + one total count fused into the same scan — at 100 TB each "
     "table is read once, and the rewrite this plans (anti-join + "
-    "partition overwrite) is the merge() machinery operators/persist.py "
-    "already exercises.  Completes the privacy family: "
+    "per-tenant commit) is ParquetStateStore.delete_subjects in "
+    "operators/persist.py.  Completes the privacy family: "
     "privacy_k_anonymity measures disclosure risk, this executes the "
     "subject's remedy.",
 )

@@ -998,10 +998,11 @@ def profile_json_types(spark, sf_dir):
            CAST(sum(in1 + in2 + in3) AS BIGINT)
     FROM m WHERE in1 = 1 OR in2 = 1 OR in3 = 1
     """,
-    doc="U11 TIME TRAVEL: three deterministic batches merge into the ATOMIC "
-    "snapshot store (operators/persist.SnapshotStateStore: whole-snapshot "
-    "write + POSIX-atomic pointer flip, the native stand-in for a "
-    "Delta/Iceberg commit), then every historical version is read back "
+    doc="U11 TIME TRAVEL: three deterministic batches merge into the "
+    "versioned state store (operators/persist.ParquetStateStore: per-tenant "
+    "commit directories + a manifest per version + POSIX-atomic pointer "
+    "flip, the native stand-in for a Delta/Iceberg commit), then every "
+    "historical version is read back "
     "via read(version=v) and summarized — row count, value mass, and the "
     "sum of per-entity VERSION counters, which count exactly how many "
     "batches touched each key.  The oracle reconstructs all three "
@@ -1013,7 +1014,7 @@ def profile_json_types(spark, sf_dir):
 def u11_time_travel(spark, sf_dir):
     import tempfile as _tf
 
-    from ..operators.persist import SnapshotStateStore
+    from ..operators.persist import ParquetStateStore
 
     ev = _t(spark, sf_dir, "events").where(F.col("event_id") < 20000)
     vc = F.expr("CAST(floor(value * 100) AS BIGINT)")
@@ -1030,7 +1031,7 @@ def u11_time_travel(spark, sf_dir):
             F.col("ts").alias("effectiveDateTime"),
         )
 
-    store = SnapshotStateStore(spark, _tf.mkdtemp(prefix="snap_tt_"))
+    store = ParquetStateStore(spark, _tf.mkdtemp(prefix="snap_tt_"))
     store.merge(batch(F.col("event_id") % 2 == 0, "b1", 0), "2024-02-01T00:00:00Z", order_col="effectiveDateTime")
     store.merge(batch(F.col("event_id") % 3 == 0, "b2", 5), "2024-02-02T00:00:00Z", order_col="effectiveDateTime")
     store.merge(batch(F.col("event_id") % 5 == 0, "b3", 9), "2024-02-03T00:00:00Z", order_col="effectiveDateTime")

@@ -89,6 +89,18 @@ def test_exists_raises_on_corrupt_store_instead_of_reinitializing(spark, tmp_pat
     empty = tmp_path / "empty"
     empty.mkdir()
     assert ParquetStateStore(spark, str(empty)).exists() is False
+    # stores in the earlier layouts (one overwritten directory per tenant; a
+    # pointer to whole-table snapshot directories) raise too
+    legacy = tmp_path / "legacy"
+    (legacy / "tenantId=t1").mkdir(parents=True)
+    (legacy / "tenantId=t1" / "part-00000.parquet").write_bytes(b"PAR1")
+    with pytest.raises(RuntimeError):
+        ParquetStateStore(spark, str(legacy)).exists()
+    snap = tmp_path / "snap"
+    (snap / "v00000001").mkdir(parents=True)
+    (snap / "_current").write_text("1")
+    with pytest.raises(ValueError):
+        ParquetStateStore(spark, str(snap)).exists()
 
 
 def test_merge_survives_static_partition_overwrite_session_conf(spark, tmp_path):
@@ -175,14 +187,12 @@ def test_compact_small_files_reduces_file_count_preserving_rows(spark, tmp_path)
 
 
 def test_snapshot_store_atomic_commits_and_time_travel(spark, tmp_path):
-    """SnapshotStateStore: same merge semantics as the parquet store, plus
+    """ParquetStateStore versions: same merge semantics, plus
     (a) a reader holding the old pointer keeps a complete consistent view
     while a merge commits, (b) time travel to any retained snapshot,
     (c) vacuum drops old snapshots but never the live one."""
-    from etl_healthcare_spark.operators.persist import SnapshotStateStore
-
     t0 = dt.datetime(2025, 1, 1)
-    store = SnapshotStateStore(spark, str(tmp_path / "snap"))
+    store = ParquetStateStore(spark, str(tmp_path / "snap"))
     assert store.exists() is False
 
     log1 = store.merge(_batch(spark, [_row(value=1.0, idk="k1")]), updated_at=t0)
@@ -250,16 +260,19 @@ def test_delete_subjects_targeted_rewrite(spark, tmp_path):
     assert left == {("t1", "pB", "e3"), ("t2", "pC", "e4")}
     assert files("t2") == t2_before  # untouched tenant: same files, same mtimes
     assert files("t3") is None  # fully-emptied tenant leaves no stale partition
+    # right to be forgotten: no retained version still holds a deleted row
+    assert store.versions()
+    for v in store.versions():
+        kept = {(r.tenantId, r.patientId) for r in store.read(version=v).collect()}
+        assert not kept & {("t1", "pA"), ("t3", "pD")}, f"version {v} keeps deleted rows"
 
 
 def test_snapshot_diff_key_grained_change_set(spark, tmp_path):
     """diff(v1, v3): inserts show as added, idempotent re-sends don't
     surface, key rewrites show as version_bumped, and unchanged keys stay
     silent.  Reproducible against immutable snapshots at any later time."""
-    from etl_healthcare_spark.operators.persist import SnapshotStateStore
-
     t0 = dt.datetime(2025, 1, 1)
-    store = SnapshotStateStore(spark, str(tmp_path / "snap"))
+    store = ParquetStateStore(spark, str(tmp_path / "snap"))
     store.merge(_batch(spark, [_row(entity="e1", idk="k1"), _row(entity="e2", idk="k2")]), updated_at=t0)
     store.merge(_batch(spark, [_row(entity="e2", idk="k2")]), updated_at=t0)  # idempotent noop
     store.merge(_batch(spark, [_row(entity="e2", idk="k9"), _row(entity="e3", idk="k3")]), updated_at=t0)
@@ -270,3 +283,63 @@ def test_snapshot_diff_key_grained_change_set(spark, tmp_path):
     assert store.diff(2, 2).count() == 0
     d31 = {r.entityId: r.action for r in store.diff(3, 1).collect()}
     assert d31 == {"e2": "version_bumped", "e3": "deleted"}  # reverse view
+
+
+def test_merge_crash_before_pointer_flip_keeps_old_version(spark, tmp_path):
+    """A merge stopped between its data write and the pointer flip, once on
+    the first commit and once on a later one: readers still see the old
+    version, and the replayed merge gives the same log, versions and rows as
+    a run without the crash (its leftover commit directories are not read)."""
+    import pytest
+
+    t0 = dt.datetime(2025, 1, 1)
+    batches = [
+        _batch(spark, [_row(entity="e1", idk="k1"), _row(entity="e2", tenant="t2", idk="k1")]),
+        _batch(spark, [_row(entity="e1", value=5.0, idk="k2"), _row(entity="e3", idk="k3")]),
+    ]
+
+    def rows(store):
+        return sorted((r.tenantId, r.entityId, r.value, r.version) for r in store.read().collect())
+
+    def run(name, crash_at=None):
+        store = ParquetStateStore(spark, str(tmp_path / name))
+        logs, states = [], []
+        for i, b in enumerate(batches):
+            if i == crash_at:
+                replace = store._replace
+
+                def crash(target, text):
+                    if target == store.POINTER:
+                        raise RuntimeError("injected crash before the pointer flip")
+                    replace(target, text)
+
+                store._replace = crash
+                with pytest.raises(RuntimeError, match="injected crash"):
+                    store.merge(b, updated_at=t0)
+                del store._replace
+                if i == 0:
+                    assert store.exists() is False and store.versions() == []
+                else:
+                    assert rows(store) == clean_states[i - 1] and store.versions() == [i]
+            log = store.merge(b, updated_at=t0).collect()
+            logs.append(sorted((r.tenantId, r.entityId, r.version, r.action) for r in log))
+            states.append(rows(store))
+        return logs, states, store.versions()
+
+    clean_logs, clean_states, clean_versions = run("clean")
+    assert clean_versions == [1, 2]
+    for crash_at in (0, 1):
+        assert run(f"crash{crash_at}", crash_at) == (clean_logs, clean_states, clean_versions)
+
+
+def test_exists_runs_no_spark_job(spark, tmp_path):
+    """exists() is a filesystem check: it launches no Spark job."""
+    store = ParquetStateStore(spark, str(tmp_path / "state"))
+    store.merge(_batch(spark, [_row()]), updated_at=dt.datetime(2025, 1, 1))
+    sc = spark.sparkContext
+    sc.setJobGroup("test-exists-probe", "exists()")
+    try:
+        assert store.exists() is True
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("test-exists-probe")) == []
