@@ -97,7 +97,9 @@ def cut_lineage(df: DataFrame) -> DataFrame:
     Required where a frame must not be evaluated a second time: by
     ParquetStateStore.merge, whose write and returned commit log must come
     from one evaluation (``dedup_batch`` may break a timestamp tie either
-    way); by the streaming quarantine, whose frame is consumed after the path
+    way); by run_batch_pipeline, whose gate counts (an Observation on the
+    tagged batch) and merged rows must come from one parse of its inputs; by
+    the streaming quarantine, whose frame is consumed after the path
     it was read from is rewritten; and by frames containing non-deterministic
     columns (uuid()), where any lineage-backed recompute silently changes
     values.  The ``disk`` backend's plain persist keeps lineage (block loss

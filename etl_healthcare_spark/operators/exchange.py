@@ -37,9 +37,9 @@ from pyspark.sql import DataFrame
 # optimizer-stats bytes per reduce task (see module docstring for the
 # stats-bytes -> in-memory multiplier reasoning)
 TARGET_STATS_BYTES = 8 << 20
-# guardrail against pathological stats (e.g. Long.MaxValue when a relation
-# reports unknown size): 2^16 tasks x 8 MiB target ~ 512 GiB of scan stats,
-# far past any single exchange this engine plans
+# guardrail against pathological (known but absurd) stats: 2^16 tasks x
+# 8 MiB target ~ 512 GiB of scan stats, far past any single exchange this
+# engine plans.  An UNKNOWN size never reaches it (see below).
 MAX_SHUFFLE_PARTITIONS = 65_536
 
 
@@ -63,7 +63,8 @@ def sized_shuffle_partitions(
     cannot exceed ``target × session_default`` the sizing answer is the
     session default regardless of exact stats, so the pass is skipped —
     zero plan-time cost at toy scale, full sizing once the data is big
-    enough for the pass to matter (round-8 verdict item 6)."""
+    enough for the pass to matter (round-8 verdict item 6).  An input whose
+    size the optimizer cannot estimate gets the session default too."""
     session_default = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if (
         upper_bound_bytes is not None
@@ -71,4 +72,9 @@ def sized_shuffle_partitions(
     ):
         return session_default
     stats_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    # a relation that cannot estimate its size (an RDD-backed frame, e.g. a
+    # local createDataFrame) reports spark.sql.defaultSizeInBytes: unknown,
+    # not huge — sizing it to the cap would plan tens of thousands of tasks
+    if stats_bytes >= df.sparkSession._jconf.defaultSizeInBytes():
+        return session_default
     return max(session_default, min(cap, -(-stats_bytes // target_stats_bytes)))

@@ -189,7 +189,14 @@ class ParquetStateStore:
         if not m["tenants"]:
             return self.spark.createDataFrame([], StructType.fromJson(m["schema"]))
         paths = [os.path.join(self.path, d) for d in m["tenants"].values()]
-        return self.spark.read.option("basePath", self.path).parquet(*paths).drop("commit")
+        # the manifest's schema, not a footer read: opening the store runs no
+        # Spark job, and read(version=n) keeps version n's exact schema
+        return (
+            self.spark.read.schema(StructType.fromJson(m["schema"]))
+            .option("basePath", self.path)
+            .parquet(*paths)
+            .drop("commit")
+        )
 
     def versions(self) -> list[int]:
         """The committed versions still on disk, oldest first."""
@@ -240,14 +247,18 @@ class ParquetStateStore:
         """U1+U2+U3: dedup the batch, merge it into the state of the batch's
         tenants and commit those as the next version; returns the commit log
         (etl.persisted.v1 analog: key cols + version + action), which covers
-        every row of those tenants."""
+        every row of those tenants.
+
+        The state scan is pruned to the batch's tenants by a BROADCAST
+        SEMI-JOIN on the partition column — dynamic partition pruning reuses
+        the broadcast to skip non-batch tenant directories at the scan, with
+        no driver-side collect, at any tenant cardinality.  The tenant set is
+        taken from the batch BEFORE ``dedup_batch``: dedup never drops a
+        tenant, so the set is the same, and the broadcast side skips the
+        dedup window's exchange."""
+        tenant_ids = F.broadcast(batch.select("tenantId").distinct())
         batch = dedup_batch(batch, order_col=order_col, keys=self.keys)
         if self.exists():
-            # prune the state scan to the batch's tenants via a BROADCAST
-            # SEMI-JOIN on the partition column — dynamic partition pruning
-            # reuses the broadcast to skip non-batch tenant directories at the
-            # scan, with no driver-side collect, at any tenant cardinality
-            tenant_ids = F.broadcast(batch.select("tenantId").distinct())
             state = self.read().join(tenant_ids, "tenantId", "left_semi")
         else:
             state = (

@@ -250,6 +250,10 @@ def test_candidate_keys_exchanges_are_size_aware(spark):
     sized = sized_shuffle_partitions(li, target_stats_bytes=4096)
     assert sized == -(-stats // 4096) > session_default
     assert sized_shuffle_partitions(li, target_stats_bytes=1, cap=64) == 64
+    # an unknown size estimate (an RDD-backed local frame reports
+    # spark.sql.defaultSizeInBytes) is unknown, not huge -> session default
+    local = spark.createDataFrame([(i, i) for i in range(4)], "k long, v long")
+    assert sized_shuffle_partitions(local) == session_default
     # and the registered query actually uses it: every corpus repartition
     # carries an explicit numPartitions (rendered as ", N" after the keys;
     # an unsized one renders bare "RepartitionByExpression [keys]")

@@ -2,7 +2,9 @@
 validate -> FHIR gate -> envelope -> idempotent merge -> audit -> queries."""
 
 import datetime as dt
+import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_healthcare_spark.pipeline import run_batch_pipeline
@@ -66,3 +68,83 @@ def test_write_path_then_replay(spark, tmp_path):
         ParquetStateStore(spark, state).read(), "t1", "pat-001", "718-7"
     ).collect()
     assert len(latest) == 1 and latest[0].value == 5.6
+
+
+def _within(seconds, fn):
+    """fn() on a daemon thread: an Observation that never reports blocks its
+    ``get`` forever, so a hang must fail the test instead of stalling it."""
+    out = {}
+
+    def run():
+        try:
+            out["value"] = fn()
+        except Exception as e:  # re-raised on the test's thread
+            out["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"run_batch_pipeline did not return within {seconds}s"
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
+
+
+@pytest.fixture(params=("local", "disk", "reliable"))
+def backend(request, spark):
+    key = "spark.graft.checkpoint.backend"
+    spark.conf.set(key, request.param)
+    yield request.param
+    spark.conf.unset(key)
+
+
+def test_all_rows_rejected_by_dto_gate(spark, tmp_path, backend):
+    """Every row fails the DTO gate: exact counts, an empty commit log, and
+    the tenant's earlier rows stay live."""
+    csv_p, hl7_p = _write_fixtures(tmp_path)
+    state = str(tmp_path / "state")
+    run_batch_pipeline(spark, tenant_id="t1", state_dir=state, csv_path=csv_p, hl7_path=hl7_p)
+    bad = tmp_path / "bad.csv"
+    bad.write_text(
+        "patientId,code,value,unit,effectiveDateTime\n"
+        ",718-7,5.6,mmol/L,2025-09-30T10:00:00Z\n"
+        "pat-002,8867-4,not-a-number,/min,2025-09-30T10:05:00Z\n"
+        "pat-003,718-7,5.1,,2025-09-30T10:10:00Z\n"
+    )
+    r = _within(300, lambda: run_batch_pipeline(
+        spark, tenant_id="t1", state_dir=state, csv_path=str(bad), batch_time=dt.datetime(2025, 10, 2)
+    ))
+    assert (r.dto_valid, r.dto_invalid, r.fhir_invalid) == (0, 3, 0)
+    assert r.commit_log.collect() == []
+    assert ParquetStateStore(spark, state).read().count() == 4
+
+
+def test_header_only_csv_without_hl7(spark, tmp_path, backend):
+    """An empty batch: zero counts and an empty commit log, no hang."""
+    empty = tmp_path / "empty.csv"
+    empty.write_text("patientId,code,value,unit,effectiveDateTime\n")
+    state = str(tmp_path / "state")
+    r = _within(300, lambda: run_batch_pipeline(spark, tenant_id="t1", state_dir=state, csv_path=str(empty)))
+    assert (r.dto_valid, r.dto_invalid, r.fhir_invalid) == (0, 0, 0)
+    assert r.commit_log.collect() == []
+    assert ParquetStateStore(spark, state).read().count() == 0
+
+
+def test_batch_parses_its_inputs_once(spark, tmp_path):
+    """A warm micro-batch derives the batch once: the gate counts ride the
+    batch's one materialisation and the merge reads the pinned rows.  Each
+    re-derivation re-runs the CSV + HL7 parse (about 6 jobs), so counting
+    the gates with separate actions lands above 30 jobs; one pass is 14."""
+    csv_p, hl7_p = _write_fixtures(tmp_path)
+    state = str(tmp_path / "state")
+    run_batch_pipeline(spark, tenant_id="t1", state_dir=state, csv_path=csv_p, hl7_path=hl7_p)
+    sc = spark.sparkContext
+    sc.setJobGroup("test-one-parse", "run_batch_pipeline")
+    try:
+        r = run_batch_pipeline(spark, tenant_id="t1", state_dir=state, csv_path=csv_p, hl7_path=hl7_p,
+                               audit_dir=str(tmp_path / "audit"), batch_time=dt.datetime(2025, 10, 2))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert (r.dto_valid, r.dto_invalid, r.fhir_invalid) == (4, 0, 0)
+    jobs = sc.statusTracker().getJobIdsForGroup("test-one-parse")
+    assert len(jobs) <= 16, f"{len(jobs)} Spark jobs for one micro-batch"
