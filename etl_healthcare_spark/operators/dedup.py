@@ -424,6 +424,15 @@ def embedding_lsh_dedup_pairs(
     measured 1e-3-wide distribution gaps, so membership — and the emitted
     (id_a, id_b, bucket) rows — are identical.
 
+    Input domain: a NULL vector lands in the all-"0" bucket and never pairs
+    on both kernels (its dots and norm are NULL).  The arrow kernel raises a
+    ValueError naming the row id for a vector holding a NULL, NaN or ±inf
+    element, of the wrong dimension, or whose int64 dot could overflow:
+    Arrow hands it NULL elements as NaN, so it cannot tell the two apart,
+    and the expression kernel gives no defined bucket there either (under
+    ANSI it raises ARITHMETIC_OVERFLOW on ±inf; NaN quantizes to 0 and a
+    NULL element or a short vector zeroes every bit).
+
     Returns (id_a, id_b, cos, bucket)."""
     if kernel == "expr":
         b = df.withColumn("__lsh_bkt", hyperplane_bucket_exact(F.col(vec_col), planes, scale))
@@ -454,6 +463,8 @@ def embedding_lsh_dedup_pairs(
         [[int(math.floor(float(x) * float(scale))) for x in p] for p in planes],
         dtype=np.int64,
     ).T  # dim x n_planes
+    n_dims, n_planes = qp_t.shape
+    abs_qp = np.abs(qp_t).astype(np.float64)
 
     id_t = df.schema[id_col].dataType.simpleString()
     vec_t = df.schema[vec_col].dataType.simpleString()
@@ -463,16 +474,33 @@ def embedding_lsh_dedup_pairs(
             if len(pdf) == 0:
                 yield pdf.assign(__lsh_bkt=pd.Series([], dtype=object))
                 continue
-            m = np.array(pdf["__vec"].tolist(), dtype=np.float64)
-            q = np.floor(m * float(scale)).astype(np.int64)
-            bits = np.where(q @ qp_t >= 0, "1", "0")
+            live = pdf["__vec"].notna().to_numpy()
+            # a NULL vector: every dot is NULL, so every bit is "0"
+            bits = np.full((len(pdf), n_planes), "0")
+            if live.any():
+                ids, vecs = pdf["__id"][live].to_numpy(), pdf["__vec"][live]
+                ok = vecs.map(len).to_numpy() == n_dims
+                if ok.all():
+                    q = np.floor(np.array(vecs.tolist(), dtype=np.float64) * float(scale))
+                    # finite, and no partial dot can leave int64 (2^62 covers
+                    # the float64 rounding of the bound itself)
+                    with np.errstate(invalid="ignore"):
+                        ok = np.isfinite(q).all(axis=1) & (np.abs(q) @ abs_qp < 2.0 ** 62).all(axis=1)
+                if not ok.all():
+                    raise ValueError(
+                        f"embedding LSH arrow kernel: row {ids[~ok][0]!r} is not a finite "
+                        f"{n_dims}-dim vector within the exact int64 range"
+                    )
+                bits[live] = np.where(q.astype(np.int64) @ qp_t >= 0, "1", "0")
             out = pdf.copy()
             out["__lsh_bkt"] = ["".join(r) for r in bits]
             yield out
 
     def score(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        bucket = pdf["__lsh_bkt"].iloc[0]
+        pdf = pdf[pdf["__vec"].notna()]  # a NULL vector never pairs
         ids = pdf["__id"].to_numpy()
-        m = np.array(pdf["__vec"].tolist(), dtype=np.float64)
+        m = np.array(pdf["__vec"].tolist(), dtype=np.float64).reshape(len(ids), n_dims)
         nrm = np.sqrt((m * m).sum(axis=1))
         out_a, out_b, out_c = [], [], []
         for lo in range(0, len(ids), gemm_block):
@@ -488,7 +516,7 @@ def embedding_lsh_dedup_pairs(
                 "id_a": np.concatenate(out_a) if out_a else np.array([], dtype=np.int64),
                 "id_b": np.concatenate(out_b) if out_b else np.array([], dtype=np.int64),
                 "cos": np.concatenate(out_c) if out_c else np.array([], dtype=np.float64),
-                "bucket": pdf["__lsh_bkt"].iloc[0],
+                "bucket": bucket,
             }
         )
 

@@ -102,8 +102,8 @@ def validate_fhir(df: DataFrame, fhir_col: str = "fhir") -> SplitResult:
     return split_valid(df, fhir_rules(fhir_col))
 
 
-def tenant_guard(df: DataFrame, tenant_id: str, tenant_col: str = "tenantId") -> DataFrame:
-    """V6: row-level security predicate prepended to every serving query
-    (services/api-query/src/handler.ts:15-19).  Partition pruning makes this
-    free when the table is partitioned by tenant."""
-    return df.where(F.col(tenant_col) == F.lit(tenant_id))
+def tenant_guard(tenant_id: str, tenant_col: str = "tenantId") -> Column:
+    """V6: the row-level security predicate every serving query folds into
+    its one ``where`` (services/api-query/src/handler.ts:15-19).  Partition
+    pruning makes it free when the table is partitioned by tenant."""
+    return F.col(tenant_col) == F.lit(tenant_id)

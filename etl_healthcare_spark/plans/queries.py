@@ -5,9 +5,16 @@ observationsByPatient :64-108, latestObservation :110-139),
 services/audit-list-api/src/handler.ts:23-67, services/health-api/src/
 handler.ts:82-130, docs/VALIDATION.md:163-168 tenant scan.
 
-Every function prepends the V6 tenant guard; on a tenant-partitioned store
-Catalyst turns it into partition pruning (the reference's GSI access paths are
-physical layout here, not code — SURVEY §4).
+Every read is ONE ``where`` whose predicate folds in the V6 tenant guard
+(``validate.tenant_guard``), the patient / code / time bounds and, on a
+next page, the keyset predicate (``pagination.keyset_after``).  On the
+tenant-partitioned store Catalyst turns the tenant term into partition
+pruning and pushes the rest into the Parquet scan (the reference's GSI access
+paths are physical layout here, not code — SURVEY §4).  The timeline page and
+the latest value each plan as a single TakeOrderedAndProject over that scan:
+no Exchange, no aggregate, one Spark job per read.  Timeline pages sort
+ascending, NULLS FIRST.  Each new keyset token inlines fresh literals, so a
+next page pays one whole-stage compile.
 
 Deliberate divergence (SURVEY §2.8 Q3): latestObservation implements TRUE
 latest-per-(patient,code).  The reference scans only the newest 50 rows and
@@ -20,15 +27,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.pagination import clamp_limit, keyset_page
+from ..operators.pagination import clamp_limit, keyset_after
 from ..operators.validate import tenant_guard
 
 
 def get_patient(patients: DataFrame, tenant_id: str, patient_id: str) -> DataFrame:
     """Q1: tenant-scoped point lookup, 5-field projection."""
     return (
-        tenant_guard(patients, tenant_id)
-        .where(F.col("patientId") == patient_id)
+        patients.where(tenant_guard(tenant_id) & (F.col("patientId") == patient_id))
         .select("patientId", "tenantId", "name", "birthDate", "updatedAt")
     )
 
@@ -46,26 +52,35 @@ def observations_by_patient(
 ) -> DataFrame:
     """Q2: ascending timeline range scan with optional code equality and
     time bounds, clamped limit, keyset pagination (handler.ts:64-108)."""
-    df = tenant_guard(obs, tenant_id).where(F.col("patientId") == patient_id)
+    sort_cols = ["effectiveDateTime", tiebreak_col]
+    pred = tenant_guard(tenant_id) & (F.col("patientId") == patient_id)
     if code is not None:
-        df = df.where(F.col("code") == code)
+        pred = pred & (F.col("code") == code)
     if ts_from is not None:
-        df = df.where(F.col("effectiveDateTime") >= F.lit(ts_from))
+        pred = pred & (F.col("effectiveDateTime") >= F.lit(ts_from))
     if ts_to is not None:
-        df = df.where(F.col("effectiveDateTime") <= F.lit(ts_to))
-    n = clamp_limit(limit)
-    return keyset_page(df, ["effectiveDateTime", tiebreak_col], n, token)
+        pred = pred & (F.col("effectiveDateTime") <= F.lit(ts_to))
+    if token is not None:
+        pred = pred & keyset_after(sort_cols, token)
+    return obs.where(pred).orderBy(*sort_cols).limit(clamp_limit(limit))
 
 
 def latest_observation(obs: DataFrame, tenant_id: str, patient_id: str, code: str) -> DataFrame:
-    """Q3: true newest observation for (patient, code) — max_by form, a single
-    partial-aggregable shuffle (no global sort)."""
-    df = tenant_guard(obs, tenant_id).where((F.col("patientId") == patient_id) & (F.col("code") == code))
-    cols = [c for c in df.columns]
+    """Q3: the newest dated observation of (patient, code), as a top-1 of the
+    tenant-pruned, patient-pushed scan (one TakeOrderedAndProject, one Spark
+    job).  Undated rows never win, so a (patient, code) with only undated
+    rows returns no row; a tie on ``effectiveDateTime`` goes to the larger
+    ``entityId``.  Columns come back in ``obs.columns`` order."""
+    pred = (
+        tenant_guard(tenant_id)
+        & (F.col("patientId") == patient_id)
+        & (F.col("code") == code)
+        & F.col("effectiveDateTime").isNotNull()
+    )
     return (
-        df.groupBy("tenantId", "patientId", "code")
-        .agg(F.max_by(F.struct(*cols), F.col("effectiveDateTime")).alias("r"))
-        .select("r.*")
+        obs.where(pred)
+        .orderBy(F.col("effectiveDateTime").desc(), F.col("entityId").desc())
+        .limit(1)
     )
 
 
@@ -117,7 +132,7 @@ def latest_per_group(
 
 def tenant_scan(state: DataFrame, tenant_id: str, entity_type: str = "observation") -> DataFrame:
     """Q6: all items of a type for a tenant (begins_with(SK,...) analog)."""
-    return tenant_guard(state, tenant_id).where(F.col("entityType") == entity_type)
+    return state.where(tenant_guard(tenant_id) & (F.col("entityType") == entity_type))
 
 
 def health_report(metrics: DataFrame, window_min: int = 15) -> DataFrame:

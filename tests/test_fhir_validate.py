@@ -55,4 +55,4 @@ def test_dto_validation_split(spark):
 
 def test_tenant_guard(spark):
     df = spark.createDataFrame([("t1", 1), ("t2", 2)], ["tenantId", "x"])
-    assert tenant_guard(df, "t1").collect() == [("t1", 1)]
+    assert df.where(tenant_guard("t1")).collect() == [("t1", 1)]

@@ -1,6 +1,7 @@
 """LLM-pipeline operators: dedup finds planted duplicates, ANN agrees with
 brute force on its bucket, multimodal plumbing produces the contract schema."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_healthcare_spark.operators.dedup import (
@@ -508,3 +509,23 @@ def test_embedding_lsh_bucket_gemm_kernel_matches_expression(spark):
         ).collect()
     )
     assert expr == gemm and len(expr) > 0
+
+    # a NULL vector: the all-"0" bucket and no pair on both kernels
+    ddl = "vec_id long, embedding array<float>"
+    with_null = df.union(spark.createDataFrame([(60, None)], ddl))
+    pairs = {
+        k: sorted(
+            (r.id_a, r.id_b, r.bucket)
+            for r in embedding_lsh_dedup_pairs(with_null, "embedding", "vec_id", planes, kernel=k, **kw).collect()
+        )
+        for k in ("expr", "arrow")
+    }
+    assert pairs["expr"] == pairs["arrow"] == expr
+    # a NULL, NaN or infinite element, or a short vector: the arrow kernel
+    # names the row (under ANSI the expression kernel raises on ±inf, and
+    # Arrow delivers a NULL element as NaN)
+    bad = [None, float("nan"), float("inf"), float("-inf")]
+    for i, vec in enumerate([[0.1] * 7 + [x] for x in bad] + [[0.1] * 7]):
+        row = spark.createDataFrame([(1000 + i, vec)], ddl)
+        with pytest.raises(Exception, match=f"row {1000 + i} is not a finite 8-dim vector"):
+            embedding_lsh_dedup_pairs(df.union(row), "embedding", "vec_id", planes, kernel="arrow", **kw).collect()

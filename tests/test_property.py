@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -73,19 +73,24 @@ def test_hl7_ts_matches_python_model(spark, samples):
 
 # ---------------------------------------------------------------------------
 # Keyset pagination: full traversal visits every row exactly once, in order
+# (ascending, NULLS FIRST — a NULL in the token must resume, not stop)
 # ---------------------------------------------------------------------------
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     st.lists(
-        st.tuples(st.integers(min_value=0, max_value=50), st.integers(min_value=0, max_value=10**6)),
+        st.tuples(
+            st.one_of(st.none(), st.integers(min_value=0, max_value=50)),
+            st.integers(min_value=0, max_value=10**6),
+        ),
         min_size=1,
         max_size=120,
         unique=True,
     ),
     st.integers(min_value=1, max_value=25),
 )
+@example(rows=[(None, 1), (None, 2), (1, 3), (2, 4)], page_size=2)
 def test_keyset_pagination_total_traversal(spark, rows, page_size):
     df = spark.createDataFrame(rows, "k long, id long")
     seen: list[tuple[int, int]] = []
@@ -98,7 +103,8 @@ def test_keyset_pagination_total_traversal(spark, rows, page_size):
         token = next_token_from_rows(page, ["k", "id"], page_size)
         if token is None:
             break
-    assert seen == sorted(rows), "keyset traversal must be exactly the sorted input, no dup/skip"
+    want = sorted(rows, key=lambda r: (r[0] is not None, r[0] or 0, r[1]))
+    assert seen == want, "keyset traversal must be exactly the sorted input, no dup/skip"
 
 
 # ---------------------------------------------------------------------------

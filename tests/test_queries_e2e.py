@@ -60,6 +60,74 @@ def test_q3_latest_observation(spark, tmp_path):
     assert latest_observation(state, "t1", "pat-9", "718-7").collect() == []  # null if absent
 
 
+def test_q3_latest_skips_undated_and_breaks_ties_by_entity_id(spark):
+    t0, t1 = dt.datetime(2025, 10, 1), dt.datetime(2025, 10, 2)
+    rows = [
+        ("t1", "pat-1", "718-7", "e-dated", 1.0, t0),
+        ("t1", "pat-1", "718-7", "e-undated", 9.0, None),
+        ("t1", "pat-1", "8867-4", "e-only-undated", 2.0, None),
+        ("t1", "pat-1", "2345-7", "e-tie-a", 3.0, t1),
+        ("t1", "pat-1", "2345-7", "e-tie-b", 4.0, t1),
+        ("t1", "pat-1", "2345-7", "e-older", 5.0, t0),
+    ]
+    ddl = "tenantId string, patientId string, code string, entityId string, value double, effectiveDateTime timestamp"
+    for order in (rows, rows[::-1]):
+        for obs in (spark.createDataFrame(order, ddl).coalesce(1), spark.createDataFrame(order, ddl).repartition(3)):
+            got = latest_observation(obs, "t1", "pat-1", "718-7").collect()
+            assert [r.entityId for r in got] == ["e-dated"]  # an undated row never wins
+            assert latest_observation(obs, "t1", "pat-1", "8867-4").collect() == []  # undated only: no row
+            tie = latest_observation(obs, "t1", "pat-1", "2345-7").collect()
+            assert [(r.entityId, r.value) for r in tie] == [("e-tie-b", 4.0)]  # tie: the larger entityId
+            assert list(tie[0].asDict()) == obs.columns
+
+
+def _one_job_top_k(spark, df, group):
+    """Collect ``df`` inside a job group; assert it planned a single
+    TakeOrderedAndProject over the scan (no Exchange, no aggregate) and ran
+    one Spark job.  Returns the rows and the scan's partition and pushed
+    filters."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1, f"{group}: {len(jobs)} Spark jobs"
+    plan = df._jdf.queryExecution().executedPlan()
+    text = plan.toString()
+    assert plan.nodeName() == "TakeOrderedAndProject", text
+    for node in ("Exchange", "SortAggregate", "HashAggregate"):
+        assert node not in text, text
+    meta = plan.collectLeaves().head().metadata()
+    return rows, meta.apply("PartitionFilters"), meta.apply("PushedFilters")
+
+
+def test_reads_plan_one_pruned_top_k_job(spark, tmp_path):
+    """Latest, first page and keyset page each run as one job over the
+    tenant-pruned scan with the patient equality (and the keyset Or) pushed
+    into Parquet."""
+    state = _state(spark, tmp_path)
+    latest, parts, pushed = _one_job_top_k(
+        spark, latest_observation(state, "t1", "pat-1", "718-7"), "q-latest")
+    assert [r.value for r in latest] == [6.1]
+    assert "(tenantId#" in parts and "= t1)" in parts
+    assert "EqualTo(patientId,pat-1)" in pushed and "EqualTo(code,718-7)" in pushed
+
+    page1, parts, pushed = _one_job_top_k(
+        spark, observations_by_patient(state, "t1", "pat-1", limit=2), "q-page1")
+    assert [r.value for r in page1] == [5.6, 72.0]
+    assert "(tenantId#" in parts and "= t1)" in parts
+    assert "EqualTo(patientId,pat-1)" in pushed and "Or(" not in pushed
+
+    token = next_token_from_rows(page1, ["effectiveDateTime", "entityId"], 2)
+    page2, parts, pushed = _one_job_top_k(
+        spark, observations_by_patient(state, "t1", "pat-1", limit=2, token=token), "q-page2")
+    assert [r.value for r in page2] == [6.1]
+    assert "(tenantId#" in parts and "= t1)" in parts
+    assert "EqualTo(patientId,pat-1)" in pushed and "Or(GreaterThan(effectiveDateTime," in pushed
+
+
 def test_q6_tenant_scan_and_guard(spark, tmp_path):
     state = _state(spark, tmp_path)
     assert tenant_scan(state, "t1").count() == 4
