@@ -19,12 +19,12 @@ All column-expression based (sha256 via ``sha2``), no Python UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..functions.text import shingles_from_tokens, simhash16, tokens
+from ..functions.text import shingles_from_tokens, simhash16, tokens, word_shingles
 from ..functions.vectors import cosine, hyperplane_bucket_exact
-from ..functions.materialize import materialize, materialize_lazy
+from ..functions.materialize import materialize
 
 
 def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
@@ -52,23 +52,25 @@ def minhash_signatures(
     # downstream groupBy("doc") so the shuffle is not repeated.  Explicit
     # partition count: AQE would coalesce a bare repartition("doc") down to
     # ~2 tasks (it sizes by bytes) and serialize this CPU-bound stage.
-    # Tokenize AFTER the exchange (round-11): a projection below the
+    # Shingle AFTER the exchange (round-11): a projection below the
     # repartition evaluates MAP-SIDE at scan parallelism — the 16 MB-split
-    # local scan is 1 task, so the regex ran serially (probed 0.24 -> 0.14 s
-    # min-of-6 at sf0.1 for the tokenize stage); shuffling the raw text
-    # instead of the token array moves no more bytes.
+    # local scan is 1 task, so the regex ran serially.  The shingles are one
+    # regex (word_shingles, no lambda), so the explode, the hashing and the
+    # per-doc min compile into one whole-stage code stage.
     npart = df.sparkSession.sparkContext.defaultParallelism
-    tok = (
+    sh = (
         df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__raw"))
         .repartition(npart, "doc")
-        .select("doc", tokens(F.col("__raw")).alias("t"))
-    )
-    sh = tok.select(
-        "doc",
-        F.explode(F.array_distinct(shingles_from_tokens(F.col("t"), 3))).alias("s"),
+        .select("doc", F.explode(F.array_distinct(word_shingles(F.col("__raw"), 3))).alias("s"))
     )
     slices = 64 // width  # independent slices per sha256 hex digest
-    digests = {g: F.sha2(F.concat(F.lit(f"{g}:"), F.col("s")), 256) for g in range((n + slices - 1) // slices)}
+    # Slice the hex digest as BINARY before conv: its bytes are ASCII, so a
+    # byte slice is the same text, but a binary substring is one array copy
+    # where a string substring walks the UTF-8 characters one by one.
+    digests = {
+        g: F.sha2(F.concat(F.lit(f"{g}:"), F.col("s")), 256).cast("binary")
+        for g in range((n + slices - 1) // slices)
+    }
     # Aggregate the slices as BIGINTs, not hex strings: a min(string) buffer
     # is not UnsafeRow-mutable, so Spark plans the groupBy as SORTAGGREGATE —
     # a full sort of the exploded shingle stream (n x 16 x 12-char rows
@@ -82,7 +84,7 @@ def minhash_signatures(
     hashed = sh.select(
         "doc",
         *[
-            F.conv(F.substring(digests[i // slices], 1 + width * (i % slices), width), 16, 10)
+            F.conv(F.substring(digests[i // slices], 1 + width * (i % slices), width).cast("string"), 16, 10)
             .cast("long")
             .alias(f"h{i}")
             for i in range(n)
@@ -156,18 +158,15 @@ def _lsh_buckets(
     return buckets
 
 
-def _pair_combos(ds: Column) -> Column:
-    """All (a, b) index-ordered pairs from a sorted array — the in-bucket pair
-    generator.  Two-parameter lambda is intentional here: the second transform
-    parameter IS the element index."""
-    return F.flatten(
-        F.transform(
-            ds,
-            lambda x, i: F.transform(
-                F.slice(ds, i + F.lit(2), F.size(ds)),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
+def _bucket_pairs(buckets: DataFrame, a: str = "doc_a", b: str = "doc_b") -> DataFrame:
+    """The distinct (a, b) pairs of docs sharing a bucket, index-ordered
+    within each sorted ``ds`` array: a posexplode, then an explode of the
+    tail after each position.  Neither generator takes a lambda, so both
+    compile into the whole-stage code around them."""
+    return (
+        buckets.select("ds", F.posexplode("ds").alias("__i", a))
+        .select(a, F.explode(F.slice("ds", F.col("__i") + 2, F.size("ds"))).alias(b))
+        .distinct()
     )
 
 
@@ -191,11 +190,7 @@ def minhash_lsh_pairs(
     no task ever expands quadratically — see _lsh_buckets for the counters."""
     b = minhash_bands(df, text_col, id_col, bands, rows)
     buckets = _lsh_buckets(b, max_bucket, observation)
-    return (
-        buckets.select(F.explode(_pair_combos(F.col("ds"))).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .distinct()
-    )
+    return _bucket_pairs(buckets)
 
 
 def simhash_fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -535,60 +530,61 @@ def connected_components(pairs: DataFrame, src: str = "doc_a", dst: str = "doc_b
     becomes whole duplicate CLUSTERS, not just pairwise hits.
 
     Min-label propagation to fixpoint: each round joins labels to the
-    (symmetrized) edges and takes the min over {self} ∪ neighbors.  Rounds
+    (symmetrized) edges and takes the min over the neighbours.  Rounds
     needed = graph diameter, which for near-dup clusters is tiny (dup groups
-    are dense); ``localCheckpoint`` truncates lineage each round so the plan
-    does not grow exponentially.  At 100 TB the same loop holds — each round
-    is one shuffle join on node id — and pathological chain-shaped graphs can
-    switch to large-star/small-star (Kiveris et al., "Connected Components in
-    MapReduce"), which squares the diameter away with the identical
-    DataFrame-join building blocks.
+    are dense).  Each label frame is eagerly materialized with its sum(lbl)
+    riding the same job as an Observation, so a round is one job chain and
+    the plan does not grow with the rounds.  At 100 TB the same loop holds —
+    each round is one shuffle join on node id — and pathological
+    chain-shaped graphs can switch to large-star/small-star
+    (connected_components_star), which squares the diameter away with the
+    identical DataFrame-join building blocks.
 
     Returns (node, cluster_id) for every node that appears in >=1 pair.
     """
-    # checkpoint BEFORE the symmetrizing union: both union branches read the
-    # materialized pairs instead of each re-running the upstream (LSH) plan
-    p = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).transform(materialize)
-    edges = (
-        p.union(p.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .transform(materialize)
-    )
+    # both orientations of every pair from ONE pass over the pairs (an
+    # inline of a two-element array), so the upstream plan runs once.  No
+    # distinct: a repeated edge only repeats a min, and LSH pairs are
+    # distinct already
+    edges = pairs.select(
+        F.inline(
+            F.array(
+                F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+                F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
+            )
+        )
+    ).transform(materialize)
+
+    def pinned(labels: DataFrame):
+        # the convergence probe rides the labels' eager materialization as an
+        # Observation: sum(lbl) arrives with the pinned blocks, no extra job
+        obs = Observation()
+        out = labels.observe(obs, F.sum("lbl").alias("s")).transform(materialize)
+        return out, obs.get["s"]
+
     # seed labels with the ONE-HOP minimum (min of self and all neighbors)
     # instead of self: near-dup clusters are near-cliques (LSH expands
     # all-pairs inside a bucket), so for a clique this seed IS the fixpoint
-    # and the loop exits after a single confirming round — typically saving
-    # one full propagate round versus identity seeding.  Correctness is
-    # unchanged: labels stay >= the min-reachable fixpoint and monotonically
-    # non-increasing.
-    # LAZY checkpoint: the convergence-sum collect below and round 1's
-    # propagate join both consume the seed — un-materialized, each re-ran
-    # the edges-wide seed aggregation (one redundant corpus-scale agg per
-    # run, round-10).  Lazy (not eager) because the prev_sum collect is the
-    # sole FIRST consumer and runs alone: it materializes the blocks
-    # without the extra blocking job an eager checkpoint launches, and no
-    # concurrent stage can race the persist.
-    labels = (
-        edges.groupBy("a")
-        .agg(F.min("b").alias("_mn"))
-        .select(F.col("a").alias("node"), F.least(F.col("a"), F.col("_mn")).alias("lbl"))
-        .transform(materialize_lazy)
+    # and the loop exits after a single confirming round.
+    labels, prev_sum = pinned(
+        edges.select(F.col("a").alias("node"), F.least("a", "b").alias("lbl"))
+        .groupBy("node")
+        .agg(F.min("lbl").alias("lbl"))
     )
-    # labels are monotonically non-increasing, so sum(lbl) strictly decreases
-    # until the fixpoint — an O(1)-output agg is the convergence test, no join.
-    # Seeding prev_sum with the one-hop labels' sum lets a clique-shaped graph
-    # (the common LSH case: the seed IS the fixpoint) exit after ONE confirming
-    # propagate round instead of two — the propagate that finds sum unchanged
-    # proves no label moved, which is exactly the fixpoint condition.
-    prev_sum = labels.agg(F.sum("lbl")).collect()[0][0]
+    # A round takes each node's min over its neighbours' labels only: from
+    # the one-hop seed on, some neighbour of every node already holds a label
+    # at most its own (the node's label came from a neighbour, or it is the
+    # node's id and every neighbour took that id or less in the seed), so the
+    # {self} term of the min never wins and the union with the old labels is
+    # not needed.  Labels never increase, so sum(lbl) falls until the
+    # fixpoint: a round that leaves the sum unchanged moved no label.  An
+    # empty pair set sums to NULL twice and exits the same way.
     for _ in range(max_iter):
-        prop = edges.join(labels, edges["a"] == labels["node"]).select(
-            F.col("b").alias("node"), F.col("lbl")
+        labels, cur_sum = pinned(
+            edges.join(labels, edges["a"] == labels["node"])
+            .groupBy(F.col("b").alias("node"))
+            .agg(F.min("lbl").alias("lbl"))
         )
-        labels = (
-            labels.union(prop).groupBy("node").agg(F.min("lbl").alias("lbl")).transform(materialize)
-        )
-        cur_sum = labels.agg(F.sum("lbl")).collect()[0][0]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
@@ -706,7 +702,6 @@ def ngram_contamination(
     (benchmarks are MBs, corpora are TBs) — broadcast them, so the corpus
     pass is one scan + broadcast-hash semi-count, no corpus shuffle besides
     the per-doc count."""
-    from ..functions.text import shingles_from_tokens, tokens
 
     def distinct_shingles(df: DataFrame, fan_out: bool) -> DataFrame:
         # corpus side (round-11): repartition the raw text by doc FIRST —
@@ -719,9 +714,9 @@ def ngram_contamination(
         src = df.select(F.col(id_col), F.col(text_col).alias("__raw"))
         if fan_out:
             src = src.repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
-        tok = src.select(F.col(id_col), tokens(F.col("__raw")).alias("t")).where(F.size("t") >= k)
-        return tok.select(
-            F.col(id_col), F.explode(F.array_distinct(shingles_from_tokens(F.col("t"), k))).alias("s")
+        # a doc below k tokens has no shingles and so no rows
+        return src.select(
+            F.col(id_col), F.explode(F.array_distinct(word_shingles(F.col("__raw"), k))).alias("s")
         )
 
     corpus_sh = distinct_shingles(corpus, fan_out=True)
@@ -774,11 +769,7 @@ def minhash_scored_pairs(
     stack_expr = ", ".join(f"'{b}', band{b}" for b in range(bands))
     bands_df = sig.select("doc", *band_cols).selectExpr("doc", f"stack({bands}, {stack_expr}) AS (band, key)")
     buckets = _lsh_buckets(bands_df, max_bucket, observation)
-    pairs = (
-        buckets.select(F.explode(_pair_combos(F.col("ds"))).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .distinct()
-    )
+    pairs = _bucket_pairs(buckets)
     a = sig.select(F.col("doc").alias("doc_a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(n)])
     b = sig.select(F.col("doc").alias("doc_b"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(n)])
     n_match = sum((F.col(f"a{i}") == F.col(f"b{i}")).cast("long") for i in range(n))

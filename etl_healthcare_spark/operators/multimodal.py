@@ -724,7 +724,7 @@ def ahash_near_pairs(
     minhash for degenerate corpora (e.g. monochrome frames all hashing to
     zero); it is off by default so the exactness contract holds.
 
-    Shares _lsh_buckets/_pair_combos with operators/dedup.py — the identical
+    Shares _lsh_buckets/_bucket_pairs with operators/dedup.py — the identical
     scale shape: one bucket shuffle, no self-join, bounded task fan-out.
 
     The hash frame is checkpointed once: it feeds THREE consumers (the band
@@ -734,7 +734,7 @@ def ahash_near_pairs(
     nodes for one kernel, i.e. every image decoded three times (guide §8:
     decode once, move hashes).  The checkpointed frame is (id, 64-char hash)
     — corpus-linear but payload-free."""
-    from .dedup import _lsh_buckets, _pair_combos
+    from .dedup import _bucket_pairs, _lsh_buckets
 
     h = hashes.where(F.col("ahash").isNotNull()).transform(materialize)
     bands = h.selectExpr(
@@ -743,11 +743,7 @@ def ahash_near_pairs(
         "'2', substr(ahash, 33, 16), '3', substr(ahash, 49, 16)) AS (band, key)",
     )
     buckets = _lsh_buckets(bands, max_bucket=max_bucket)
-    pairs = (
-        buckets.select(F.explode(_pair_combos(F.col("ds"))).alias("p"))
-        .select(F.col("p.doc_a").alias("id_a"), F.col("p.doc_b").alias("id_b"))
-        .distinct()
-    )
+    pairs = _bucket_pairs(buckets, "id_a", "id_b")
     ha = h.select(F.col("id").alias("id_a"), F.col("ahash").alias("ha"))
     hb = h.select(F.col("id").alias("id_b"), F.col("ahash").alias("hb"))
     return (

@@ -5,7 +5,7 @@ All native column expressions (functions/text.py)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import (
@@ -254,29 +254,34 @@ def span_overlap(df: DataFrame, text_col: str, id_col: str, k: int = 5) -> DataF
     )
 
 
-def quality_gate(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """First-failing-rule document quality gate (the curation twin of
-    operators/validate.py's DTO gate): too_short -> too_long ->
-    mean_word_len out of [2, 12] -> low_alpha, evaluated in that fixed
-    order; reject_reason is NULL for kept docs.  Every rule is an integer
+def quality_reason(text: Column) -> Column:
+    """The first failing rule of the document quality gate, NULL for a kept
+    doc: too_short -> too_long -> mean_word_len out of [2, 12] ->
+    low_alpha, evaluated in that fixed order.  Every rule is an integer
     cross-multiply over quality_metrics counts — no float ratios, so the
-    decision is bit-identical across engines and scales as a map-only
-    projection (predicates push into the scan)."""
-    from ..functions.text import quality_metrics, token_count_ws
-
-    m = quality_metrics(F.col(text_col))
-    n_tok = token_count_ws(F.col(text_col))
+    decision is bit-identical across engines.  ``quality_reason(t).isNull()``
+    is the keep predicate: a row-wise filter, no second scan or join."""
+    m = quality_metrics(text)
+    n_tok = m["n_tokens_ws"]
     alnum = m["n_alpha"] + m["n_digit"]
-    reason = (
+    return (
         F.when(n_tok < 20, F.lit("too_short"))
         .when(m["n_chars"] > 100000, F.lit("too_long"))
         .when((alnum < 2 * n_tok) | (alnum > 12 * n_tok), F.lit("mean_word_len"))
         .when(10 * m["n_alpha"] < 6 * m["n_chars"], F.lit("low_alpha"))
     )
+
+
+def quality_gate(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """First-failing-rule document quality gate (the curation twin of
+    operators/validate.py's DTO gate): one row per document with its counts,
+    ``reject_reason`` (quality_reason) and ``kept``.  A map-only projection."""
+    m = quality_metrics(F.col(text_col))
+    reason = quality_reason(F.col(text_col))
     return df.select(
         F.col(id_col),
         m["n_chars"].alias("n_chars"),
-        n_tok.alias("n_tokens"),
+        m["n_tokens_ws"].alias("n_tokens"),
         reason.alias("reject_reason"),
         reason.isNull().alias("kept"),
     )

@@ -706,41 +706,35 @@ def _funnel_oracle() -> str:
     "quality gate -> exact dedup (min-id keeper per sha256) -> minhash-LSH "
     "near-dup keep-list (connected components over candidate pairs of the "
     "SURVIVING set) -> 5-gram benchmark decontamination (>=50% contaminated "
-    "shingles dropped).  Returns the attrition funnel (stage, n_docs).  "
-    "Every stage reuses the registry operator it corresponds to; survivor "
-    "frames are eagerly materialized once per stage, and the quality/"
-    "exact_dedup/near_dedup counts RIDE those materialization jobs as "
-    "Observations (round-11, verdict item 3) instead of re-counting the "
-    "cached frames in the final union — the declared output (the funnel "
-    "table) is byte-identical, three count branches cheaper.",
+    "shingles dropped).  Returns the attrition funnel (stage, n_docs).  The "
+    "quality gate is a row-wise predicate (textops.quality_reason IS NULL) "
+    "on the documents scan; the near-dup stage drops the non-keeper cluster "
+    "members with one anti-join.  Survivor frames are eagerly materialized "
+    "once per stage and every count but the last rides a materialization "
+    "as an Observation (raw and eval_holdout on the scan that feeds the "
+    "quality stage); the output is one count over the decontaminated "
+    "frame, exploded into the six funnel rows.",
 )
 def curation_e2e(spark, sf_dir):
     from pyspark.sql import Observation
 
-    from ..operators.dedup import (
-        connected_components,
-        dedup_keep_list,
-        minhash_lsh_pairs,
-        ngram_contamination,
-    )
-    from ..operators.textops import quality_gate
+    from ..operators.dedup import connected_components, minhash_lsh_pairs, ngram_contamination
+    from ..operators.textops import quality_reason
 
     docs = _t(spark, sf_dir, "documents")
-    eval_df = docs.where(F.col("source") == "src0")
-    corpus = docs.where(F.col("source") != "src0")
-    gate = quality_gate(corpus, "text", "doc_id")
-    # EAGER materialization (round-11; was a lazy .persist()): q feeds BOTH
-    # the exact-dedup key derivation and the survivor semi-join, which are
-    # CONCURRENT leaf stages of the first CC action — the SCALE.md §50 race
-    # class the r10 allowlist excused as "warmed by the CC loop".  Eager
-    # gives each frame a dedicated single-consumer materialization job,
-    # which (a) removes the race outright and (b) makes the riding
-    # Observation exactly-once by construction (a raced cache recompute
-    # would double-count the CollectMetrics accumulator).
+    is_eval = F.col("source") == "src0"
+    eval_df = docs.where(is_eval)
+    # EAGER materialization of every survivor frame: each feeds concurrent
+    # leaf stages of a later action (the exact-dedup key derivation beside
+    # the survivor semi-join, contam's tokenize pass beside the decontam
+    # anti-join), the SCALE.md §50 race class.  Eager gives each frame one
+    # single-consumer materialization job, which also makes the riding
+    # Observations exactly-once (a raced recompute would double-count).
     n_of = F.count(F.lit(1)).alias("n")
-    obs_q, obs_ex, obs_nd = Observation(), Observation(), Observation()
+    obs_in, obs_q, obs_ex, obs_nd = Observation(), Observation(), Observation(), Observation()
     q = (
-        corpus.join(gate.where(F.col("kept")).select("doc_id"), "doc_id", "left_semi")
+        docs.observe(obs_in, n_of, F.count(F.when(~is_eval, 1)).alias("corpus"))
+        .where(~is_eval & quality_reason(F.col("text")).isNull())
         .observe(obs_q, n_of)
         .transform(materialize)
     )
@@ -749,50 +743,35 @@ def curation_e2e(spark, sf_dir):
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    ex_surv = (
-        q.join(exk, "doc_id", "left_semi").observe(obs_ex, n_of).transform(materialize)
-    )
-    pairs = minhash_lsh_pairs(ex_surv, "text", "doc_id", bands=4, rows=4)
-    keep = dedup_keep_list(ex_surv, "doc_id", connected_components(pairs, "doc_a", "doc_b"))
-    # eager (round-10): contam's tokenize pass and the decontam anti-join
-    # consume nd_surv from concurrent stages of the final funnel job
-    nd_surv = (
-        ex_surv.join(keep.where(F.col("kept")).select("doc_id"), "doc_id", "left_semi")
-        .observe(obs_nd, n_of)
-        .transform(materialize)
-    )
+    ex_surv = q.join(exk, "doc_id", "left_semi").observe(obs_ex, n_of).transform(materialize)
+    clusters = connected_components(minhash_lsh_pairs(ex_surv, "text", "doc_id", bands=4, rows=4))
+    # a cluster keeps its min id: drop the members labelled with another id
+    dropped = clusters.where(F.col("node") != F.col("cluster_id")).select(F.col("node").alias("doc_id"))
+    nd_surv = ex_surv.join(dropped, "doc_id", "left_anti").observe(obs_nd, n_of).transform(materialize)
     contam = ngram_contamination(nd_surv, eval_df, "text", "doc_id", k=5)
     final = nd_surv.join(
         contam.where(F.col("contam_ppm") >= 500000).select("doc_id"), "doc_id", "left_anti"
     )
-    # the three observed counts are already collected (their frames
-    # materialized above — Observation.get returns without a new action);
-    # raw/eval_holdout have no materialization job to ride and decontam IS
-    # the final computation, so those three stay computed branches
-    def _count_row(i: int, name: str, sdf):
-        return sdf.agg(F.count("*").alias("n_docs")).select(
-            F.lit(i).alias("stage_ord"), F.lit(name).alias("stage"), F.col("n_docs")
-        )
-
-    def _lit_row(i: int, name: str, n: int):
-        return spark.range(1).select(
-            F.lit(i).alias("stage_ord"),
-            F.lit(name).alias("stage"),
-            F.lit(n).cast("long").alias("n_docs"),
-        )
-
-    rows = [
-        _count_row(1, "raw", docs),
-        _count_row(2, "eval_holdout", corpus),
-        _lit_row(3, "quality", obs_q.get["n"]),
-        _lit_row(4, "exact_dedup", obs_ex.get["n"]),
-        _lit_row(5, "near_dedup", obs_nd.get["n"]),
-        _count_row(6, "decontam", final),
+    counts = [
+        ("raw", F.lit(obs_in.get["n"])),
+        ("eval_holdout", F.lit(obs_in.get["corpus"])),
+        ("quality", F.lit(obs_q.get["n"])),
+        ("exact_dedup", F.lit(obs_ex.get["n"])),
+        ("near_dedup", F.lit(obs_nd.get["n"])),
+        ("decontam", F.col("n")),
     ]
-    out = rows[0]
-    for row in rows[1:]:
-        out = out.unionAll(row)
-    return out
+    return final.agg(n_of).select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("stage_ord"), F.lit(name).alias("stage"), n.cast("long").alias("n_docs")
+                    )
+                    for i, (name, n) in enumerate(counts, 1)
+                ]
+            )
+        )
+    )
 
 
 @register(

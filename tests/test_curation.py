@@ -3,9 +3,13 @@ clusters (including multi-hop chains), hash sampling is deterministic and
 rule-exact, rare-token quality is integer-exact, int8 quantization respects
 range bounds."""
 
+import random
+import threading
+
+import pytest
 from pyspark.sql import functions as F
 
-from etl_healthcare_spark.operators.dedup import connected_components
+from etl_healthcare_spark.operators.dedup import connected_components, connected_components_star
 from etl_healthcare_spark.operators.quantize import int8_quantize
 from etl_healthcare_spark.operators.sampling import (
     hash_fraction_hex,
@@ -15,6 +19,25 @@ from etl_healthcare_spark.operators.sampling import (
 )
 from etl_healthcare_spark.operators.textops import rare_token_ratio
 
+def _within(seconds, fn):
+    """fn() on a daemon thread: an Observation that never reports blocks its
+    ``get`` forever, so a hang must fail the test instead of stalling it."""
+    out = {}
+
+    def run():
+        try:
+            out["value"] = fn()
+        except Exception as e:  # re-raised on the test's thread
+            out["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"did not return within {seconds}s"
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
+
 
 def test_connected_components_chain_and_islands(spark):
     # chain 1-2-3-4 (diameter > 1 forces multiple propagation rounds) + island 7-8
@@ -23,6 +46,52 @@ def test_connected_components_chain_and_islands(spark):
     )
     got = {r.node: r.cluster_id for r in connected_components(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7}
+
+
+def _labels(df):
+    return {r.node: r.cluster_id for r in df.collect()}
+
+
+def test_connected_components_empty_pairs(spark):
+    """No pairs: the seed's and the first round's sum(lbl) are both NULL, so
+    the loop exits at once with no rows."""
+    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+    got = _labels(_within(300, lambda: connected_components(pairs)))
+    assert got == {} == _labels(connected_components_star(pairs))
+
+
+def test_connected_components_multi_round_chain(spark):
+    """A 12-node chain with its ids shuffled needs several propagation
+    rounds past the one-hop seed; labels equal the star method's."""
+    order = [7, 3, 11, 0, 9, 5, 1, 10, 4, 8, 2, 6]
+    pairs = spark.createDataFrame(
+        [(min(a, b), max(a, b)) for a, b in zip(order, order[1:])] + [(20, 21)],
+        "doc_a long, doc_b long",
+    )
+    got = _labels(connected_components(pairs))
+    assert got == _labels(connected_components_star(pairs))
+    assert got == {**{i: 0 for i in range(12)}, 20: 20, 21: 20}
+
+
+def test_word_shingles_match_token_shingles(spark):
+    """The one-regex shingles equal the token-array shingles, in order and
+    with repeats, and are empty below k tokens (where the token-array form
+    indexes past the array)."""
+    from etl_healthcare_spark.functions.text import shingles_from_tokens, tokens, word_shingles
+
+    texts = ["The quick, brown fox -- jumps over the lazy dog; the quick brown fox!",
+             "  a1 b2\tc3\nd4  a1 b2 c3 ", "ÉtÉ naïve café x9 y8 z7", "two words", "", None]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id int, text string")
+    for k in (3, 5):
+        got = df.select("id", tokens(F.col("text")).alias("t"), word_shingles(F.col("text"), k).alias("s"))
+        for r in got.collect():
+            if r.t is None:
+                assert r.s is None
+            elif len(r.t) < k:
+                assert r.s == [], (k, texts[r.id])
+            else:
+                want = spark.range(1).select(shingles_from_tokens(F.lit(r.t), k)).first()[0]
+                assert r.s == want, (k, texts[r.id])
 
 
 def test_stratified_sample_deterministic_and_rule_exact(spark):
@@ -254,6 +323,19 @@ def test_quality_gate_first_failing_rule_order(spark):
     assert kept == {1: True, 2: False, 3: False, 4: False, 5: False}
 
 
+def test_quality_gate_kept_is_quality_reason_null(spark, corpus_dir):
+    """The gate's kept flag and the funnel's predicate are one definition:
+    row by row, kept == quality_reason(text) IS NULL."""
+    from etl_healthcare_spark.operators.textops import quality_gate, quality_reason
+
+    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    gate = quality_gate(docs, "text", "doc_id").select("doc_id", "kept", "reject_reason")
+    pred = docs.select("doc_id", quality_reason(F.col("text")).isNull().alias("kept"))
+    rows = gate.collect()
+    assert sorted((r.doc_id, r.kept) for r in rows) == sorted(map(tuple, pred.collect()))
+    assert {r.reject_reason for r in rows} == {None, "too_short", "mean_word_len", "low_alpha"}
+
+
 def test_source_cap_keeps_small_sources_whole(spark):
     from etl_healthcare_spark.operators.sampling import source_cap
 
@@ -300,6 +382,107 @@ def test_curation_e2e_funnel_is_monotone(spark):
     counts = [r.n_docs for r in rows]
     assert all(a >= b for a, b in zip(counts, counts[1:])), "each stage only removes docs"
     assert counts[0] > counts[-1] > 0, "the funnel must actually filter and keep something"
+
+
+def _funnel(spark, sf_dir):
+    from etl_healthcare_spark.plans.registry import REGISTRY
+
+    return sorted(tuple(r) for r in REGISTRY["curation_e2e"].fn(spark, sf_dir).collect())
+
+
+def _funnel_oracle(sf_dir):
+    import duckdb
+
+    from etl_healthcare_spark.plans.registry import REGISTRY
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')")
+    return sorted(con.execute(REGISTRY["curation_e2e"].sql).fetchall())
+
+
+WORDS = ("alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima mike "
+         "november oscar papa quebec romeo sierra tango uniform victor whiskey xray yankee zulu").split()
+
+
+def _doc(i):
+    return " ".join(random.Random(i).sample(WORDS, 24))
+
+
+def _write_documents(d, rows):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d.mkdir()
+    cols = list(zip(*rows))
+    pq.write_table(pa.table({"doc_id": cols[0], "source": cols[1], "text": cols[2]}), d / "documents.parquet")
+    return str(d)
+
+
+@pytest.fixture(scope="module")
+def corpus_dir(tmp_path_factory):
+    """A documents table that exercises every funnel stage: 5 eval docs
+    (src0), then per six ids an original, its exact copy, its near copy
+    (last word changed), a copy of an eval doc and two docs failing the gate
+    (too short; mostly digits), plus a second copy of doc_id 6 that fails
+    the gate (one-letter words)."""
+    rows = [(i, "src0", _doc(i)) for i in range(1, 6)]
+    for i in range(6, 96):
+        kind, base = i % 6, i - i % 6
+        text = [_doc(base), _doc(base), _doc(base).rsplit(" ", 1)[0] + " omega", _doc(1 + i % 5),
+                "too short", " ".join(w[:2] + "9999999" for w in WORDS)][kind]
+        rows.append((i, f"src{1 + i % 3}", text))
+    rows.append((6, "src1", " ".join(["x"] * 30)))
+    return _write_documents(tmp_path_factory.mktemp("corpus") / "sf", rows)
+
+
+def test_curation_e2e_gates_each_row(spark, tmp_path):
+    """The quality gate filters rows, as the oracle's q CTE does: a doc_id
+    whose one copy fails the gate keeps only its passing copy."""
+    rows = [(1, "src0", _doc(1)), (2, "src1", _doc(2)), (3, "src1", _doc(3)), (3, "src1", "too short"),
+            (4, "src1", _doc(4)), (5, "src2", _doc(2)), (6, "src2", _doc(1)),
+            (7, "src2", _doc(4).rsplit(" ", 1)[0] + " omega")]
+    d = _write_documents(tmp_path / "sf", rows)
+    got = _funnel(spark, d)
+    assert got == _funnel_oracle(d)
+    # 7 corpus rows: the short copy of doc 3 fails the gate, doc 5 repeats
+    # doc 2, doc 7 is doc 4 with its last word changed, doc 6 copies the
+    # eval doc
+    assert [n for _, _, n in got] == [8, 7, 6, 5, 4, 3]
+
+
+@pytest.fixture(params=("local", "disk", "reliable"))
+def backend(request, spark):
+    key = "spark.graft.checkpoint.backend"
+    spark.conf.set(key, request.param)
+    yield request.param
+    spark.conf.unset(key)
+
+
+def test_curation_e2e_matches_oracle_on_every_backend(spark, backend, corpus_dir):
+    """The funnel's counts ride Observations on the survivor frames'
+    materialisations; under every backend they must report (no hang) and
+    give the oracle's rows."""
+    got = _within(300, lambda: _funnel(spark, corpus_dir))
+    assert got == _funnel_oracle(corpus_dir)
+    assert all(a[2] > b[2] for a, b in zip(got, got[1:])), f"every stage must drop docs: {got}"
+
+
+def test_curation_e2e_warm_pass_job_count(spark, corpus_dir):
+    """A warm pass runs one job per materialisation and per AQE stage: the
+    gate is a predicate on the scan, CC's convergence sums ride its
+    materialisations, and the six counts come from Observations plus one
+    aggregate.  22 measured on this corpus; the semi-joined gate, the
+    second edge branch, the sum probes and the six-branch count union ran
+    32."""
+    _funnel(spark, corpus_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("test-curation-pass", "curation_e2e")
+    try:
+        _funnel(spark, corpus_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test-curation-pass")
+    assert len(jobs) <= 22, f"{len(jobs)} Spark jobs for one warm curation pass"
 
 
 def test_knn_join_finds_planted_neighbors(spark):

@@ -53,9 +53,6 @@ def test_no_direct_localcheckpoint_outside_the_gate():
 # justification; adding a lazy site means reviewing it and extending this
 # list (file, enclosing function, why-safe).
 LAZY_ALLOWLIST = {
-    # connected_components seed labels: first consumer is the prev_sum
-    # .collect() convergence probe, which runs alone before round 1's join
-    ("operators/dedup.py", "connected_components"),
     # pq codebook subvectors: first consumer is the per-subspace k-means
     # seed collect loop — sequential driver actions
     ("operators/pq.py", "pq_codebook_and_codes"),
