@@ -14,8 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .schemas import TESTDATA_TABLES
-
 
 def _swap_ntz(dt: T.DataType) -> tuple[T.DataType, bool]:
     """Recursively replace TIMESTAMP_NTZ with TimestampType anywhere in a
@@ -77,10 +75,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if casts:
         df = df.withColumns(casts)
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
 
 
 def observations(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,8 +7,8 @@ sha256 hex substrings — chosen because sha256 is the one hash function whose
 bytes are identical across engines (Spark `sha2` == DuckDB `sha256`), which
 makes every one of these operators oracle-checkable.
 
-A lexicographic MIN over fixed-width hex strings equals the numeric MIN of the
-underlying values, so minhash works on hex strings directly.
+Minhash signatures (``operators/dedup.py::minhash_signatures``) are built on
+``word_shingles``.
 """
 
 from __future__ import annotations
@@ -35,59 +35,25 @@ def token_count_bpe(text: Column) -> Column:
     return F.size(F.regexp_extract_all(F.lower(text), F.lit("[a-z0-9]+|[^a-z0-9\\s]"), 0))
 
 
-def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
-    """Array of k-word shingles from an ALREADY-MATERIALIZED token array
-    column.  Callers on a hot path must project ``tokens(text)`` into a column
-    first — referencing ``tokens(text)`` inside the per-element lambda would
-    re-run the regex extraction for every shingle element (measured ~8x
-    slowdown on the minhash pipeline)."""
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(0)))
-    return F.transform(idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(k)]))
-
-
 def word_shingles(text: Column, k: int = 3) -> Column:
-    """The k-word shingles of ``text``, in order: the same strings as
-    ``shingles_from_tokens(tokens(text), k)``, and an empty array below k
-    tokens.  One regex pass over the tokens joined by single spaces, each
-    match anchored at a token start by a lookahead.  No lambda: a
-    higher-order function is evaluated interpreted and splits the
-    whole-stage code around it, while this projection and an explode over it
-    compile into the surrounding stage (about 1.5x less CPU than the lambda
-    form on the curation corpus)."""
+    """The k-word shingles of ``text``, in order and with repeats: each run
+    of k consecutive ``tokens(text)`` joined by single spaces.  Empty below
+    k tokens, NULL for a NULL text.  One regex pass over the tokens joined
+    by single spaces, each match anchored at a token start by a lookahead.
+    No lambda: a higher-order function is evaluated interpreted and splits
+    the whole-stage code around it, while this projection and an explode
+    over it compile into the surrounding stage (about 1.5x less CPU than a
+    token-array lambda on the curation corpus)."""
     joined = F.regexp_replace(F.lower(text), "[^a-z0-9]+", " ")
     span = TOKEN_RE + f"(?: {TOKEN_RE})" * (k - 1)
     return F.regexp_extract_all(joined, F.lit(f"(?<![a-z0-9])(?=({span}))"), 1)
 
 
-def _seeded_hash(seed: int, width: int):
-    # NOTE: single-parameter closures only — a second lambda parameter (even
-    # with a default) makes Spark bind it to the array index, silently
-    # replacing the captured value.
-    def f(s: Column) -> Column:
-        return F.substring(F.sha2(F.concat(F.lit(f"{seed}:"), s), 256), 1, width)
-
-    return f
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 16, width: int = 12) -> list[Column]:
-    """num_hashes minhash values: for seed i, min over shingles of
-    substr(sha256(i || ':' || shingle), 1, width).  Empty shingle set -> NULL."""
-    sig = []
-    for i in range(num_hashes):
-        hashed = F.transform(shingles, _seeded_hash(i, width))
-        sig.append(F.array_min(hashed).alias(f"mh{i}"))
-    return sig
-
-
-def band_keys(shingles: Column, bands: int = 4, rows: int = 4, width: int = 12) -> list[Column]:
-    """LSH band keys: concat of `rows` consecutive minhash values per band.
-    Documents sharing any band key are near-duplicate candidates."""
-    sig = minhash_signature(shingles, num_hashes=bands * rows, width=width)
-    keys = []
-    for b in range(bands):
-        keys.append(F.concat_ws("", *sig[b * rows : (b + 1) * rows]).alias(f"band{b}"))
-    return keys
+def span_key(s: Column) -> Column:
+    """48-bit int64 key of a string: the first 12 hex digits of its sha256.
+    An 8-byte join and shuffle key in place of the string itself; the DuckDB
+    twin is ``('0x' || substr(sha256(s), 1, 12))::BIGINT``."""
+    return F.conv(F.substring(F.sha2(s, 256), 1, 12), 16, 10).cast("long")
 
 
 def simhash16(text: Column) -> Column:

@@ -73,12 +73,11 @@ def bloom_contamination(
     """Per-doc decontamination screen: exact 5-gram contamination next to the
     Bloom pre-screen's verdict, so the false-positive overhead is measurable.
     Returns (id, n_shingles, n_hits, n_bloom_hits, contam_ppm, bloom_ppm)."""
-    from ..functions.text import shingles_from_tokens, tokens
+    from ..functions.text import word_shingles
 
     def distinct_shingles(df: DataFrame) -> DataFrame:
-        tok = df.select(F.col(id_col), tokens(F.col(text_col)).alias("t")).where(F.size("t") >= k)
-        return tok.select(
-            F.col(id_col), F.explode(F.array_distinct(shingles_from_tokens(F.col("t"), k))).alias("s")
+        return df.select(
+            F.col(id_col), F.explode(F.array_distinct(word_shingles(F.col(text_col), k))).alias("s")
         )
 
     corpus_sh = distinct_shingles(corpus)
@@ -104,8 +103,3 @@ def bloom_contamination(
             F.expr("(1000000 * n_bloom_hits) div n_shingles").alias("bloom_ppm"),
         )
     )
-
-
-def bloom_pos_sql(item_sql: str, i: int) -> str:
-    """DuckDB twin of one position expression."""
-    return f"('0x' || substr(sha256('b{i}:' || {item_sql}), 1, 5))::BIGINT"

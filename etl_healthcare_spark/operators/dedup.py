@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..functions.text import shingles_from_tokens, simhash16, tokens, word_shingles
+from ..functions.text import simhash16, word_shingles
 from ..functions.vectors import cosine, hyperplane_bucket_exact
 from ..functions.materialize import materialize
 
@@ -222,8 +222,7 @@ def _distinct_shingles(df: DataFrame, text_col: str, id_col: str, k: int) -> Dat
     return (
         df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__raw"))
         .repartition(npart, "doc")
-        .select("doc", tokens(F.col("__raw")).alias("t"))
-        .select("doc", F.explode(F.array_distinct(shingles_from_tokens(F.col("t"), k))).alias("shingle"))
+        .select("doc", F.explode(F.array_distinct(word_shingles(F.col("__raw"), k))).alias("shingle"))
     )
 
 
@@ -267,11 +266,10 @@ def ngram_jaccard_pairs(
             F.col(text_col).alias("__raw"),
         )
         .repartition(df.sparkSession.sparkContext.defaultParallelism, "doc")
-        .select("doc", "blk", tokens(F.col("__raw")).alias("t"))
         .select(
             "doc",
             "blk",
-            F.explode(F.array_distinct(shingles_from_tokens(F.col("t"), k))).alias("shingle"),
+            F.explode(F.array_distinct(word_shingles(F.col("__raw"), k))).alias("shingle"),
         )
     )
     sizes = sh.groupBy("doc").agg(F.count("*").alias("n_shingles"))

@@ -1,12 +1,12 @@
-"""P7-P10: envelope build, format routing, generic-JSON normalization, fan-out.
+"""P7, P8, P10: envelope build, format routing, fan-out.
 
 Reference: services/normalize/handler.ts —
 
 * routing by content type / extension (handler.ts:60-71): csv | hl7 | json
 * entityId for observations = ``patientId:code:effectiveDateTime``
   (handler.ts:49)
-* generic JSON: entityType "study" iff payload.studyInstanceUID present else
-  "observation" (handler.ts:200-221); entityId falls back to idempotencyKey
+* generic JSON (P9, handler.ts:200-221) is the registry's ``p9_generic_json``:
+  entityType "study" iff the payload has studyInstanceUID, else "observation"
 * metadata stamp: normalizedAt, traceId (handler.ts:37-58) — traceId here is
   a content hash, not Math.random, for oracle determinism (SURVEY §7.3)
 * fan-out: one file -> N DTO rows is the natural row multiplication of the
@@ -70,30 +70,6 @@ def build_normalized_envelope(
         "effectiveDateTime",
         "sourceSystem",
         "ingestHash",
-    )
-
-
-def normalize_generic_json(raw: DataFrame) -> DataFrame:
-    """P9: raw envelope rows with a JSON string `payload` -> normalized rows.
-
-    entityType inference and entityId fallback per handler.ts:200-221;
-    attributes = the whole payload (kept as JSON string — an open map in the
-    contract, etl.normalized.v1.json:33-37).
-    """
-    study_uid = F.get_json_object(F.col("payload"), "$.studyInstanceUID")
-    patient = F.get_json_object(F.col("payload"), "$.patientId")
-    modality = F.get_json_object(F.col("payload"), "$.modality")
-    return raw.select(
-        F.lit("etl.normalized.v1").alias("schema"),
-        F.col("metadata.tenantId").alias("tenantId"),
-        F.col("metadata.source").alias("source"),
-        F.col("metadata.idempotencyKey").alias("idempotencyKey"),
-        trace_id(F.col("metadata.tenantId"), F.col("metadata.idempotencyKey")).alias("traceId"),
-        F.when(study_uid.isNotNull(), F.lit("study")).otherwise(F.lit("observation")).alias("entityType"),
-        F.coalesce(study_uid, F.col("metadata.idempotencyKey")).alias("entityId"),
-        patient.alias("patientId"),
-        modality.alias("modality"),
-        F.col("payload").alias("attributes"),
     )
 
 

@@ -351,29 +351,23 @@ def related_docs(
     explicit shuffle_hash hints."""
     from pyspark.sql import Window
 
-    from ..functions.text import shingles_from_tokens, tokens
+    from ..functions.text import span_key, word_shingles
 
-    # repartition the raw text by doc BEFORE the tokenize+shingle+sha chain
+    # repartition the raw text by doc BEFORE the shingle+sha chain
     # (round-11, minhash_signatures' rule): the chain otherwise runs at scan
     # parallelism — ONE task on a single-file local input.  At corpus scale
     # this adds one text-sized exchange, ~2 % of the posting/pair shuffle
     # volume this operator's own math bounds at ~45x the corpus.
-    tok = (
-        docs.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__raw"))
-        .repartition(docs.sparkSession.sparkContext.defaultParallelism, "doc")
-        .select("doc", tokens(F.col("__raw")).alias("t"))
+    raw = docs.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__raw")).repartition(
+        docs.sparkSession.sparkContext.defaultParallelism, "doc"
     )
     # shingles join/aggregate as 48-bit sha256-prefix int64 keys, not raw
     # strings: at corpus scale the posting shuffle is the dominant byte
     # volume and an 8-byte key beats a ~40-byte text shingle ~5x (collisions
     # across a corpus vocabulary are ~birthday(2^48) — the same contract as
     # the minhash/bloom slice hashing elsewhere)
-    h = lambda s: F.conv(F.substring(F.sha2(s, 256), 1, 12), 16, 10).cast("long")  # noqa: E731
-    postings = tok.select(
-        "doc",
-        F.explode(
-            F.transform(shingles_from_tokens(F.col("t"), shingle_k), h)
-        ).alias("g"),
+    postings = raw.select(
+        "doc", F.explode(F.transform(word_shingles(F.col("__raw"), shingle_k), span_key)).alias("g")
     )
     # pair generation is IN-BUCKET expansion (the dedup_minhash_lsh shape),
     # not a posting⋈df join followed by a posting⋈posting self-join: one

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import span_key
+
 M = 256  # registers
 ALPHA = 0.7213 / (1 + 1.079 / M)  # standard bias constant for m >= 128
 A_LIT = ALPHA * M * M * float(1 << 48)  # one double literal, repr-exact in SQL
@@ -410,11 +412,7 @@ def kmv_overlap(
     (theta_u, est_union, est_inter, exact_union, exact_inter) with exact
     twins computed alongside for verification."""
     def h(df, key):
-        return df.select(
-            F.conv(F.substring(F.sha2(F.col(key).cast("string"), 256), 1, 12), 16, 10)
-            .cast("long")
-            .alias("h")
-        ).distinct()
+        return df.select(span_key(F.col(key).cast("string")).alias("h")).distinct()
 
     ha, hb = h(left, left_key), h(right, right_key)
     kha = ha.orderBy("h").limit(k)

@@ -12,9 +12,11 @@ from ..functions.text import (
     lang_guess,
     lang_scores,
     quality_metrics,
+    span_key,
     token_count_bpe,
     token_count_ws,
     tokens,
+    word_shingles,
 )
 from ..functions.materialize import materialize
 
@@ -57,18 +59,15 @@ def token_counts(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def fingerprints(df: DataFrame, text_col: str, id_col: str, k: int = 5) -> DataFrame:
-    # tokens materialized first — see shingles_from_tokens note in functions/text.py
-    from ..functions.text import shingles_from_tokens, tokens
-
-    tok = (
-        df.select(F.col(id_col), F.col(text_col).alias("__raw"))
-        .repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
-        .select(F.col(id_col), tokens(F.col("__raw")).alias("t"))
+    """Per doc, the min 16-hex sha256 prefix over its k-word shingles; NULL
+    for a doc below k tokens."""
+    raw = df.select(F.col(id_col), F.col(text_col).alias("__raw")).repartition(
+        df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
     )
     hashed = F.transform(
-        shingles_from_tokens(F.col("t"), k), lambda s: F.substring(F.sha2(s, 256), 1, 16)
+        word_shingles(F.col("__raw"), k), lambda s: F.substring(F.sha2(s, 256), 1, 16)
     )
-    return tok.select(F.col(id_col), F.array_min(hashed).alias("fingerprint"))
+    return raw.select(F.col(id_col), F.array_min(hashed).alias("fingerprint"))
 
 
 def rare_token_ratio(df: DataFrame, text_col: str, id_col: str, max_doc_freq: int = 2) -> DataFrame:
@@ -182,22 +181,15 @@ def repetition_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     per-(doc, bigram) histogram, so it explodes and aggregates twice, both
     partial-aggregated on keys that include the doc id (no skew: a document's
     bigrams all live in one group family).  Ratios are exact integer ppm."""
-    from ..functions.text import shingles_from_tokens, tokens
-
-    toks = df.select(F.col(id_col), tokens(F.col(text_col)).alias("t"))
-    tri = F.when(F.size(F.col("t")) >= 3, shingles_from_tokens(F.col("t"), 3)).otherwise(
-        F.array().cast("array<string>")
-    )
-    base = toks.select(
+    text = F.coalesce(F.col(text_col), F.lit(""))  # a NULL text has no n-grams
+    tri = word_shingles(text, 3)
+    base = df.select(
         F.col(id_col),
         F.size(tri).alias("n_trigrams"),
         (F.size(tri) - F.size(F.array_distinct(tri))).alias("n_dup_tri"),
     ).withColumn("dup3_ppm", F.expr("(1000000 * n_dup_tri) div greatest(n_trigrams, 1)"))
-    bg = F.when(F.size(F.col("t")) >= 2, shingles_from_tokens(F.col("t"), 2)).otherwise(
-        F.array().cast("array<string>")
-    )
     top2 = (
-        toks.select(F.col(id_col), F.explode(bg).alias("big"))
+        df.select(F.col(id_col), F.explode(word_shingles(text, 2)).alias("big"))
         .groupBy(id_col, "big")
         .agg(F.count("*").alias("c"))
         .groupBy(id_col)
@@ -224,24 +216,9 @@ def span_overlap(df: DataFrame, text_col: str, id_col: str, k: int = 5) -> DataF
     partial-aggregated and vocabulary-sized, and only distinct (doc, span)
     pairs flow into it, so a pathological doc repeating one span a million
     times contributes one row.  Exact integer ppm."""
-    from ..functions.text import shingles_from_tokens, tokens
-
-    toks = df.select(F.col(id_col), tokens(F.col(text_col)).alias("t"))
-    sh = F.when(F.size(F.col("t")) >= k, shingles_from_tokens(F.col("t"), k)).otherwise(
-        F.array().cast("array<string>")
-    )
-    spans = (
-        toks.select(
-            F.col(id_col),
-            F.explode(
-                F.transform(
-                    sh,
-                    lambda s: F.conv(F.substring(F.sha2(s, 256), 1, 12), 16, 10).cast("long"),
-                )
-            ).alias("h"),
-        )
-        .distinct()
-    )
+    spans = df.select(
+        F.col(id_col), F.explode(F.transform(word_shingles(F.col(text_col), k), span_key)).alias("h")
+    ).distinct()
     shared = spans.groupBy("h").agg(F.count("*").alias("df_count")).where(F.col("df_count") >= 2)
     per_doc = spans.groupBy(id_col).agg(F.count("*").alias("n_spans"))
     hits = spans.join(shared, "h", "left_semi").groupBy(id_col).agg(
@@ -853,6 +830,20 @@ def bpe_apply_oracle_sql(rounds: int = 3, max_word_len: int = 16, src: str = "do
     """
 
 
+def _doc_span_keys(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
+    """(doc_id, hs): each doc's k-gram span keys in text order, one row per
+    doc.  The raw text is repartitioned by doc BEFORE the shingle+sha256
+    chain (round-11, minhash_signatures' rule): the chain otherwise runs at
+    scan parallelism — ONE task on a single-file local input — inside the
+    callers' materialization job, and the checkpointed per-doc array blocks
+    inherit that single partition for every downstream stage."""
+    return (
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__raw"))
+        .repartition(df.sparkSession.sparkContext.defaultParallelism, "doc_id")
+        .select("doc_id", F.transform(word_shingles(F.col("__raw"), k), span_key).alias("hs"))
+    )
+
+
 def containment_pairs(
     df: DataFrame,
     text_col: str,
@@ -882,34 +873,15 @@ def containment_pairs(
     sha256-prefix int64 (8 bytes vs a 16-byte hex string — same contract as
     related_docs/minhash slicing).
     """
-    from ..functions.text import shingles_from_tokens, tokens
-
-    # repartition the raw text by doc BEFORE the tokenize+sha256 chain
-    # (round-11, minhash_signatures' rule): the chain otherwise runs at scan
-    # parallelism — ONE task on a single-file local input — inside the
-    # materialization job, and the checkpointed per-doc array blocks inherit
-    # that single partition for every downstream stage
-    toks = (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__raw"))
-        .repartition(df.sparkSession.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", tokens(F.col("__raw")).alias("t"))
-    )
-    sh = F.when(F.size(F.col("t")) >= k, shingles_from_tokens(F.col("t"), k)).otherwise(
-        F.array().cast("array<string>")
-    )
     # each doc's DISTINCT span set needs no shuffle at all — array_distinct
     # over the doc's own shingle list is map-side (the old explode+distinct
     # shuffled the full span stream); the small per-doc frame (~1 row/doc)
     # is materialized once and feeds all three consumers below
-    arrs = toks.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                sh,
-                lambda s: F.conv(F.substring(F.sha2(s, 256), 1, 12), 16, 10).cast("long"),
-            )
-        ).alias("hs"),
-    ).transform(materialize)
+    arrs = (
+        _doc_span_keys(df, text_col, id_col, k)
+        .select("doc_id", F.array_distinct("hs").alias("hs"))
+        .transform(materialize)
+    )
     spans = arrs.select("doc_id", F.explode("hs").alias("h"))
     cand = (
         spans.groupBy("h")
@@ -1322,28 +1294,8 @@ def longest_shared_run(
     corpus level; pathological within-pair repetition is a data-quality
     signal text_repetition already flags.
     """
-    from ..functions.text import shingles_from_tokens, tokens
-
-    # repartition the raw text by doc BEFORE the tokenize+sha256 chain
-    # (round-11, minhash_signatures' rule): the chain otherwise runs at scan
-    # parallelism — ONE task on a single-file local input — inside the
-    # materialization job, and the checkpointed per-doc array blocks inherit
-    # that single partition for every downstream stage
-    toks = (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__raw"))
-        .repartition(df.sparkSession.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", tokens(F.col("__raw")).alias("t"))
-    )
-    sh = F.when(F.size(F.col("t")) >= k, shingles_from_tokens(F.col("t"), k)).otherwise(
-        F.array().cast("array<string>")
-    )
     # positioned per-doc hash array (position = array index), ONE row per doc
-    arrs = toks.select(
-        "doc_id",
-        F.transform(
-            sh, lambda s: F.conv(F.substring(F.sha2(s, 256), 1, 12), 16, 10).cast("long")
-        ).alias("hs"),
-    ).transform(materialize)
+    arrs = _doc_span_keys(df, text_col, id_col, k).transform(materialize)
     spans = arrs.select("doc_id", F.explode(F.array_distinct("hs")).alias("h"))
     cand = (
         spans.groupBy("h")
@@ -1514,33 +1466,14 @@ def novelty_scores(
     tokens carry no spans and are excluded (documented; a zero-span doc has
     no defined novelty).  Exact integer ppm.
     """
-    from ..functions.text import shingles_from_tokens, tokens
-
-    # repartition the raw text by doc BEFORE the tokenize+sha256 chain
-    # (round-11, minhash_signatures' rule): the chain otherwise runs at scan
-    # parallelism — ONE task on a single-file local input — inside the
-    # materialization job, and the checkpointed per-doc array blocks inherit
-    # that single partition for every downstream stage
-    toks = (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__raw"))
-        .repartition(df.sparkSession.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", tokens(F.col("__raw")).alias("t"))
-    )
-    sh = F.when(F.size(F.col("t")) >= k, shingles_from_tokens(F.col("t"), k)).otherwise(
-        F.array().cast("array<string>")
-    )
-    # the tokenize+sha256 chain feeds BOTH the first-occurrence aggregate and
+    # the shingle+sha256 chain feeds BOTH the first-occurrence aggregate and
     # the flag join; materialize the small per-doc distinct-array frame once
     # (containment_pairs' rule: ~1 row/doc, expensive to compute, 2 consumers)
-    arrs = toks.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                sh,
-                lambda s: F.conv(F.substring(F.sha2(s, 256), 1, 12), 16, 10).cast("long"),
-            )
-        ).alias("hs"),
-    ).transform(materialize)
+    arrs = (
+        _doc_span_keys(df, text_col, id_col, k)
+        .select("doc_id", F.array_distinct("hs").alias("hs"))
+        .transform(materialize)
+    )
     spans = arrs.select("doc_id", F.explode("hs").alias("h"))
     # no join back onto the span stream: a doc's first-occurrence count IS
     # the number of spans whose min-doc is that doc, so the whole answer is

@@ -80,10 +80,6 @@ def envelope_rules() -> list[tuple[str, Column]]:
     ]
 
 
-def validate_envelope(df: DataFrame) -> SplitResult:
-    return split_valid(df, envelope_rules())
-
-
 def fhir_rules(fhir_col: str = "fhir") -> list[tuple[str, Column]]:
     """V3: FHIR conformance gate (Observation.r4.min.json required fields,
     status enum, coding minItems 1) as predicates on the built struct."""

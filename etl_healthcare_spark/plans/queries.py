@@ -133,15 +133,3 @@ def latest_per_group(
 def tenant_scan(state: DataFrame, tenant_id: str, entity_type: str = "observation") -> DataFrame:
     """Q6: all items of a type for a tenant (begins_with(SK,...) analog)."""
     return state.where(tenant_guard(tenant_id) & (F.col("entityType") == entity_type))
-
-
-def health_report(metrics: DataFrame, window_min: int = 15) -> DataFrame:
-    """Q5/G1: per-minute, per-metric sums over a bounded lookback window
-    (services/health-api/src/handler.ts:58-80: Period 60 s, Stat Sum,
-    window clamped 5..1440 min)."""
-    window_min = max(5, min(1440, window_min))
-    return (
-        metrics.groupBy(F.window("ts", "1 minute").alias("w"), "metric")
-        .agg(F.sum("value").alias("value_sum"), F.count("*").alias("n"))
-        .select(F.col("w.start").alias("minute"), "metric", "value_sum", "n")
-    )

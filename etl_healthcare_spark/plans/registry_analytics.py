@@ -914,42 +914,14 @@ def _src_sig_sql() -> str:
     "min-combine to global ones.",
 )
 def sketch_source_similarity(spark, sf_dir):
-    from ..functions.text import shingles_from_tokens, tokens
+    from ..operators.dedup import minhash_signatures
 
-    width, slices, n = 12, 5, 16
-    docs = _t(spark, sf_dir, "documents")
-    sh = docs.select(
-        "source", F.explode(shingles_from_tokens(tokens(F.col("text")), 3)).alias("s")
-    )
-    digests = {
-        g: F.sha2(F.concat(F.lit(f"{g}:"), F.col("s")), 256)
-        for g in range((n + slices - 1) // slices)
-    }
-    # aggregate the 48-bit slices as BIGINTs, not hex strings — the exact
-    # minhash recipe from operators/dedup.py:minhash_signatures: min(string)
-    # buffers are not UnsafeRow-mutable, so the hex form silently planned
-    # SORTAGGREGATE over the exploded shingle stream (the SCALE.md §48
-    # super-linear class); numeric min picks the same winner (lexicographic
-    # == numeric on fixed-length lowercase hex) and the post-agg re-format
-    # emits identical hex, so the pair Jaccard and oracle hashes are
-    # unchanged while the agg hash-combines map-side.
-    hashed = sh.select(
-        "source",
-        *[
-            F.conv(F.substring(digests[i // slices], 1 + width * (i % slices), width), 16, 10)
-            .cast("long")
-            .alias(f"h{i}")
-            for i in range(n)
-        ],
-    )
-    sig = hashed.groupBy("source").agg(
-        *[
-            F.lower(F.lpad(F.hex(F.min(f"h{i}")), width, "0")).alias(f"mh{i}")
-            for i in range(n)
-        ]
-    )
-    a = sig.select(F.col("source").alias("source_a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(n)])
-    b = sig.select(F.col("source").alias("source_b"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(n)])
+    n = 16
+    # a source's signature is the minhash of the union of its documents'
+    # shingles: minhash_signatures keyed on the source, not the doc
+    sig = minhash_signatures(_t(spark, sf_dir, "documents"), "text", "source", n=n, width=12)
+    a = sig.select(F.col("doc").alias("source_a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(n)])
+    b = sig.select(F.col("doc").alias("source_b"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(n)])
     agree = sum((F.col(f"a{i}") == F.col(f"b{i}")).cast("long") for i in range(n))
     return (
         a.join(b, F.col("source_a") < F.col("source_b"))
@@ -1017,14 +989,10 @@ def sketch_source_similarity(spark, sf_dir):
 def text_vocab_growth(spark, sf_dir):
     from pyspark.sql import Window as W
 
-    from ..functions.text import tokens
+    from ..functions.text import word_shingles
 
     docs = _t(spark, sf_dir, "documents")
-    from ..functions.text import shingles_from_tokens
-
-    sh = docs.select(
-        "doc_id", F.explode(shingles_from_tokens(tokens(F.col("text")), 3)).alias("s")
-    )
+    sh = docs.select("doc_id", F.explode(word_shingles(F.col("text"), 3)).alias("s"))
     firsts = sh.groupBy("s").agg(F.min("doc_id").alias("first_doc"))
     b = (
         firsts.select((F.length(F.bin(F.col("first_doc") + 1)) - 1).cast("long").alias("bucket"))

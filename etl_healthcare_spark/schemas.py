@@ -179,17 +179,3 @@ AUDIT_LINE = T.StructType(
         T.StructField("payload", T.StringType(), True),  # JSON string
     ]
 )
-
-# Driver synthetic tables (TESTDATA.md / FIXTURES.md §9)
-TESTDATA_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]

@@ -3,6 +3,7 @@ clusters (including multi-hop chains), hash sampling is deterministic and
 rule-exact, rare-token quality is integer-exact, int8 quantization respects
 range bounds."""
 
+import importlib
 import random
 import threading
 
@@ -73,16 +74,25 @@ def test_connected_components_multi_round_chain(spark):
     assert got == {**{i: 0 for i in range(12)}, 20: 20, 21: 20}
 
 
+def _token_array_shingles(toks, k):
+    """The token-array shingle form the engine used before word_shingles:
+    join each run of k tokens, indexed out of a materialised token array.
+    Kept as the reference; below k tokens it indexes past the array."""
+    n = F.size(toks)
+    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(0)))
+    return F.transform(idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(k)]))
+
+
 def test_word_shingles_match_token_shingles(spark):
     """The one-regex shingles equal the token-array shingles, in order and
     with repeats, and are empty below k tokens (where the token-array form
     indexes past the array)."""
-    from etl_healthcare_spark.functions.text import shingles_from_tokens, tokens, word_shingles
+    from etl_healthcare_spark.functions.text import tokens, word_shingles
 
     texts = ["The quick, brown fox -- jumps over the lazy dog; the quick brown fox!",
              "  a1 b2\tc3\nd4  a1 b2 c3 ", "ÉtÉ naïve café x9 y8 z7", "two words", "", None]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id int, text string")
-    for k in (3, 5):
+    for k in (2, 3, 4, 5):
         got = df.select("id", tokens(F.col("text")).alias("t"), word_shingles(F.col("text"), k).alias("s"))
         for r in got.collect():
             if r.t is None:
@@ -90,7 +100,7 @@ def test_word_shingles_match_token_shingles(spark):
             elif len(r.t) < k:
                 assert r.s == [], (k, texts[r.id])
             else:
-                want = spark.range(1).select(shingles_from_tokens(F.lit(r.t), k)).first()[0]
+                want = spark.range(1).select(_token_array_shingles(F.lit(r.t), k)).first()[0]
                 assert r.s == want, (k, texts[r.id])
 
 
@@ -448,6 +458,63 @@ def test_curation_e2e_gates_each_row(spark, tmp_path):
     # doc 2, doc 7 is doc 4 with its last word changed, doc 6 copies the
     # eval doc
     assert [n for _, _, n in got] == [8, 7, 6, 5, 4, 3]
+
+
+SHORT_TEXTS = ["", "alpha", "alpha bravo", "alpha bravo charlie", "alpha bravo charlie delta",
+               "... !!! -- ,,", None]
+SHINGLE_QUERIES = (
+    "text_fingerprint", "text_repetition", "dedup_span_overlap", "dedup_containment",
+    "dedup_longest_run", "corpus_novelty", "dedup_ngram_jaccard", "search_related_docs",
+    "decontam_bloom", "sketch_source_similarity", "text_vocab_growth",
+)
+
+
+@pytest.fixture(scope="module")
+def short_docs_dir(tmp_path_factory):
+    """The sf0.001 documents plus docs of 0 to 4 tokens, one of punctuation
+    only and one NULL text, spread over the sources (src0 is the eval set
+    of decontam_bloom)."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table("/root/testdata/sf0.001/documents.parquet", columns=["doc_id", "source", "text"])
+    rows = list(zip(*(t.column(c).to_pylist() for c in ("doc_id", "source", "text"))))
+    first, sources = max(r[0] for r in rows) + 1, sorted({r[1] for r in rows})
+    rows += [(first + i, sources[i % len(sources)], s) for i, s in enumerate(SHORT_TEXTS)]
+    return _write_documents(tmp_path_factory.mktemp("short") / "sf", rows)
+
+
+@pytest.mark.parametrize("name", SHINGLE_QUERIES)
+def test_shingle_queries_match_oracle_on_short_docs(spark, short_docs_dir, name):
+    """Documents below a query's k tokens have no shingles: Spark answers
+    as its DuckDB oracle does (which skips them) instead of raising
+    INVALID_ARRAY_INDEX.  Rows are compared the way tools/check.py does."""
+    import duckdb
+
+    from etl_healthcare_spark.plans.registry import REGISTRY
+
+    frame_hash = importlib.import_module("tools.check").frame_hash
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{short_docs_dir}/documents.parquet')")
+    q = REGISTRY[name]
+    got = frame_hash(q.fn(spark, short_docs_dir).toPandas())
+    want = frame_hash(con.execute(q.sql).df())
+    assert got[:3] == want[:3], sorted(set(got[3]) ^ set(want[3]))[:6]
+
+
+def test_shingle_operators_take_a_two_token_doc(spark):
+    from etl_healthcare_spark.operators.dedup import ngram_jaccard_pairs
+    from etl_healthcare_spark.operators.textops import fingerprints
+
+    docs = spark.createDataFrame(
+        [(1, "alpha bravo", "en"), (2, "alpha bravo charlie delta echo foxtrot", "en"),
+         (3, "alpha bravo charlie delta echo golf", "en")],
+        "doc_id long, text string, lang string",
+    )
+    fps = {r.doc_id: r.fingerprint for r in fingerprints(docs, "text", "doc_id", k=5).collect()}
+    assert fps[1] is None and len(fps[2]) == len(fps[3]) == 16
+    got = ngram_jaccard_pairs(docs, "text", "doc_id", "lang", threshold=0.0).collect()
+    # 3-shingles: docs 2 and 3 share 3 of 5 distinct; doc 1 has none
+    assert [(r.doc_a, r.doc_b, r.inter, r.jaccard) for r in got] == [(2, 3, 3, 0.6)]
 
 
 @pytest.fixture(params=("local", "disk", "reliable"))

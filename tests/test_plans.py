@@ -229,14 +229,17 @@ def test_driver_window_spans_every_family_and_is_oracle_backed():
 def test_doc_counts_match_live_registry():
     """COVERAGE.md and QUERIES.md must state the real registry size — doc
     drift was a round-2 finding; this pins the counts to the live registry."""
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
     total = len(REGISTRY)
     rows_only = sum(1 for q in REGISTRY.values() if q.sql is None)
-    cov = open("/root/repo/COVERAGE.md").read()
+    cov = (repo / "COVERAGE.md").read_text()
     assert f"{total} declared" in cov, f"COVERAGE.md must declare {total} queries"
     assert f"{total - rows_only} oracle-checked, {rows_only} rows-only" in cov
-    qmd = open("/root/repo/QUERIES.md").read()
+    qmd = (repo / "QUERIES.md").read_text()
     assert qmd.count("| `") == total, "QUERIES.md row count must match the registry"
-    readme = open("/root/repo/README.md").read()
+    readme = (repo / "README.md").read_text()
     assert f"the {total}-query registry" in readme, "README.md count must match"
 
 

@@ -14,6 +14,7 @@ from etl_healthcare_spark.operators.pagination import (
     next_token_from_rows,
 )
 from etl_healthcare_spark.plans.queries import (
+    get_patient,
     latest_observation,
     latest_per_group,
     observations_by_patient,
@@ -126,6 +127,25 @@ def test_reads_plan_one_pruned_top_k_job(spark, tmp_path):
     assert [r.value for r in page2] == [6.1]
     assert "(tenantId#" in parts and "= t1)" in parts
     assert "EqualTo(patientId,pat-1)" in pushed and "Or(GreaterThan(effectiveDateTime," in pushed
+
+
+def test_q1_get_patient_is_tenant_scoped(spark):
+    """The same patientId under another tenant is not returned, and the
+    projection is the reference's 5 fields (handler.ts:40-53)."""
+    patients = spark.createDataFrame(
+        [
+            ("pat-1", "t1", "Ada", "1970-01-01", "2025-09-30T10:00:00Z", "x"),
+            ("pat-1", "t2", "Bob", "1980-02-02", "2025-09-30T11:00:00Z", "y"),
+            ("pat-2", "t1", "Cy", "1990-03-03", "2025-09-30T12:00:00Z", "z"),
+        ],
+        ["patientId", "tenantId", "name", "birthDate", "updatedAt", "extra"],
+    )
+    got = get_patient(patients, "t1", "pat-1")
+    assert got.columns == ["patientId", "tenantId", "name", "birthDate", "updatedAt"]
+    assert [tuple(r) for r in got.collect()] == [
+        ("pat-1", "t1", "Ada", "1970-01-01", "2025-09-30T10:00:00Z")
+    ]
+    assert get_patient(patients, "t3", "pat-1").collect() == []
 
 
 def test_q6_tenant_scan_and_guard(spark, tmp_path):

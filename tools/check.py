@@ -11,8 +11,9 @@ from __future__ import annotations
 import hashlib
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
