@@ -336,7 +336,6 @@ def dpp_month_join(spark, fact_src: DataFrame, dim_src: DataFrame, out_dir: str)
     ``fact_src`` must provide (cents, smonth); ``dim_src`` provides
     (smonth, pick).  The build write is the once-per-layout cost, same
     discipline as search_index_probe / j11_bucketed_join."""
-    from pyspark.sql import functions as F
 
     fact_src.write.partitionBy("smonth").mode("overwrite").parquet(f"{out_dir}/fact")
     fact = spark.read.parquet(f"{out_dir}/fact")

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.text import simhash16, word_shingles
-from ..functions.vectors import cosine, hyperplane_bucket_exact
+from ..functions.vectors import hyperplane_bucket_exact
 from ..functions.materialize import materialize
 
 
@@ -127,8 +127,9 @@ def minhash_bands(
 # beyond the cap are dropped from pair expansion — near-dup members of such
 # clusters are still caught by exact_dedup (identical text) or by their other
 # bands; the cap only bounds the worst case.  Never silent: pass an
-# ``Observation`` to get dropped_buckets / dropped_docs counters on the same
-# action (no extra job), and the default is deliberately conservative.
+# ``Observation`` to get dropped_buckets / dropped_docs counters (one
+# materialisation of the buckets), and the default is deliberately
+# conservative.
 DEFAULT_MAX_BUCKET = 512
 
 
@@ -139,7 +140,10 @@ def _lsh_buckets(
 ) -> DataFrame:
     """(band, key, ds) buckets of size >= 2, capped at ``max_bucket`` docs.
     ``observation`` (a ``pyspark.sql.Observation``) is attached BEFORE the cap
-    filter so the dropped-bucket counters see the oversize buckets."""
+    filter so the dropped-bucket counters see the oversize buckets, and the
+    observed buckets are materialised: riding the caller's action instead,
+    the counters sat in a stage that AQE replaces with an empty relation
+    when the cap drops every bucket, and never reported."""
     buckets = (
         bands_df.groupBy("band", "key")
         .agg(F.sort_array(F.collect_list("doc")).alias("ds"))
@@ -152,7 +156,7 @@ def _lsh_buckets(
             F.coalesce(F.sum(over.cast("long")), F.lit(0)).alias("dropped_buckets"),
             F.coalesce(F.sum(F.when(over, F.size("ds")).otherwise(0)), F.lit(0)).alias("dropped_docs"),
             F.coalesce(F.max(F.size("ds")), F.lit(0)).alias("max_bucket_seen"),
-        )
+        ).transform(materialize)
     if max_bucket is not None:
         buckets = buckets.where(F.size("ds") <= max_bucket)
     return buckets

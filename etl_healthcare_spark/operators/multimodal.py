@@ -10,32 +10,93 @@ Design:
 * partitioning: by modality then hash-bucketed id, so decode stages fan out
   evenly and a per-modality filter prunes files;
 * compute: `mapInPandas` over Arrow batches — the only sanctioned Python
-  hot path.  Batch shape (pandas DataFrame per partition slice) is exactly
-  what a real decode (PIL/ffmpeg/torchcodec) would consume.
+  hot path, written once, in ``_run_rows``.  Batch shape (pandas DataFrame
+  per partition slice) is exactly what a real decode (PIL/ffmpeg/
+  torchcodec) would consume.
 
-Two kinds of kernel:
+One runner, one row function per kernel.  ``_run_rows(src, schema, rows)``
+runs the selected frame ``src`` = (id, *inputs) through one map-only
+``mapInPandas``; ``rows(id, *inputs)`` returns the output rows of one input
+row, each the tuple of the ``schema`` fields after ``id``.  The runner
+prepends the id, turns a ``None`` row into NULL fields, and derives every
+pandas dtype from the declared ``*_SCHEMA``, so a kernel names no dtype:
+
+* a one-to-one parser returns ``[parse(payload)]`` — one row per input, and
+  a payload it cannot decode (``parse`` gives None) is one row of NULLs;
+* a fan-out kernel (``sample_frames``, ``audio_window_energy``,
+  ``audio_autocorr``) returns its rows — none for an undecodable payload.
+
+The parsers are pure byte arithmetic (struct unpack), no media libraries:
 
 * ``decode_media_meta`` — a REAL decode: container headers (PNG IHDR, BMP
   DIB, GIF logical screen, JPEG SOF, RIFF/WAVE fmt chunk) parsed from the
-  payload bytes in pure Python, emitting genuine width/height/sample-rate.
-  No media libraries needed; malformed payloads degrade to kind='unknown'.
-* ``decode_features`` — pixel/sample-level feature extraction.  The only
-  kernel shippable in this container is the deterministic ``fake`` one, and
-  it must be requested EXPLICITLY (``kernel="fake"``) so pseudo-features can
-  never be mistaken for real ones; a production deployment registers a PIL/
-  soundfile kernel under its own name with the identical Arrow contract.
+  payload bytes, emitting genuine width/height/sample-rate; malformed
+  payloads degrade to kind='unknown'.  The container walks (GIF blocks, PNG
+  chunks, TIFF IFD, RIFF/AVI lists, DICOM elements, ISO-BMFF boxes, the ZIP
+  central directory) and the uncompressed pixel/sample decodes (BMP, PCM16
+  WAV) follow the same contract; every RIFF chunk is read by the one walk
+  ``_riff_chunks``.
+* ``decode_features`` — pixel/sample-level feature extraction, the one
+  kernel outside the runner: its ``fake`` kernel works on whole pandas
+  batches.  It must be requested EXPLICITLY (``kernel="fake"``) so
+  pseudo-features can never be mistaken for real ones; a production
+  deployment registers a PIL/soundfile kernel under its own name with the
+  identical Arrow contract.
 """
 
 from __future__ import annotations
 
+import hashlib
+import math
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from ..functions.materialize import materialize
+
+# the pandas dtype of each field type a kernel emits: nullable extension
+# dtypes for integers and booleans, so a NULL field stays NULL instead of
+# turning its column into floats
+_PANDAS_DTYPE = {
+    T.LongType: "Int64",
+    T.IntegerType: "Int32",
+    T.DoubleType: "float64",
+    T.BooleanType: "boolean",
+    T.StringType: "object",
+}
+
+
+def _payload(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
+    """The (id, payload) frame a payload kernel runs over."""
+    return df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
+
+
+def _run_rows(
+    src: DataFrame, schema: T.StructType, rows: Callable[..., Iterable[tuple | None]]
+) -> DataFrame:
+    """The Arrow row runner: each row of ``src`` = (id, *inputs) maps to the
+    rows ``rows(id, *inputs)`` returns, each the tuple of the ``schema``
+    fields after ``id`` (``None`` for all of them NULL), with the input's id
+    prepended.  Map-only at any scale: no shuffle, and the payload bytes
+    never leave the executor."""
+    dtypes = [(f.name, _PANDAS_DTYPE[type(f.dataType)]) for f in schema.fields]
+    nulls = (None,) * (len(dtypes) - 1)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            out = [
+                (row[0], *(nulls if r is None else r))
+                for row in b.itertuples(index=False, name=None)
+                for r in rows(*row)
+            ]
+            cols = zip(*out) if out else [()] * len(dtypes)
+            yield pd.DataFrame({n: pd.Series(c, dtype=d) for (n, d), c in zip(dtypes, cols)})
+
+    return src.mapInPandas(run, schema=schema)
+
 
 MEDIA_META = T.StructType(
     [
@@ -108,13 +169,11 @@ def decode_features(df: DataFrame, id_col: str, payload_col: str, *, kernel: str
             "decode_media_meta, and real pixel/sample stats for uncompressed "
             "BMP/WAV (which need no libs) are pixel_sample_stats"
         )
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             yield _fake_decode_batch(b)
 
-    return src.mapInPandas(run, schema=DECODED_SCHEMA)
+    return _payload(df, id_col, payload_col).mapInPandas(run, schema=DECODED_SCHEMA)
 
 
 # --- real header decode ------------------------------------------------------
@@ -136,6 +195,16 @@ _NONE6 = ("unknown", None, None, None, None, None)
 _JPEG_SOF = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
 
 
+def _riff_chunks(b: bytes, pos: int, end: int):
+    """(fourcc, body offset, body size) of each RIFF chunk in ``b[pos:end]``
+    — the one RIFF walk (WAVE chunks, AVI lists): 4-byte id, LE32 size,
+    body, padded to an even length."""
+    while pos + 8 <= end:
+        sz = struct.unpack("<I", b[pos + 4 : pos + 8])[0]
+        yield b[pos : pos + 4], pos + 8, sz
+        pos += 8 + sz + (sz & 1)
+
+
 def parse_media_header(b: bytes):
     """(kind, width, height, sample_rate, channels, bits) from container
     magic + header fields — PNG IHDR, BMP DIB, GIF logical screen descriptor,
@@ -154,15 +223,11 @@ def parse_media_header(b: bytes):
             w, h = struct.unpack("<HH", b[6:10])
             return ("gif", w, h, None, None, None)
         if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-            off = 12
-            while off + 8 <= len(b):
-                cid = b[off : off + 4]
-                sz = struct.unpack("<I", b[off + 4 : off + 8])[0]
-                if cid == b"fmt " and sz >= 16 and off + 24 <= len(b):
-                    ch, sr = struct.unpack("<HI", b[off + 10 : off + 16])
-                    bits = struct.unpack("<H", b[off + 22 : off + 24])[0]
+            for cid, body, sz in _riff_chunks(b, 12, len(b)):
+                if cid == b"fmt " and sz >= 16 and body + 16 <= len(b):
+                    ch, sr = struct.unpack("<HI", b[body + 2 : body + 8])
+                    bits = struct.unpack("<H", b[body + 14 : body + 16])[0]
                     return ("wav", None, None, sr, ch, bits)
-                off += 8 + sz + (sz & 1)  # chunks are word-aligned
             return _NONE6
         if b[:2] == b"\xff\xd8":
             off = 2
@@ -187,27 +252,12 @@ def decode_media_meta(df: DataFrame, id_col: str, payload_col: str) -> DataFrame
     """REAL media decode at the container-header level: width/height for
     PNG/BMP/GIF/JPEG, sample-rate/channels/bit-depth for WAV — parsed from
     the opaque ``binary`` payload inside the same Arrow-batched mapInPandas
-    slot a pixel kernel occupies.  Map-only: embarrassingly parallel at any
-    scale, no shuffle, payload bytes never leave the executor."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            parsed = [parse_media_header(p) for p in b["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": b["id"],
-                    "byte_len": b["payload"].map(lambda p: 0 if p is None else len(p)),
-                    "kind": pd.Series([p[0] for p in parsed], dtype="object"),
-                    "width": pd.Series([p[1] for p in parsed], dtype="Int32"),
-                    "height": pd.Series([p[2] for p in parsed], dtype="Int32"),
-                    "sample_rate": pd.Series([p[3] for p in parsed], dtype="Int32"),
-                    "channels": pd.Series([p[4] for p in parsed], dtype="Int32"),
-                    "bits": pd.Series([p[5] for p in parsed], dtype="Int32"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=MEDIA_HEADER_SCHEMA)
+    slot a pixel kernel occupies."""
+    return _run_rows(
+        _payload(df, id_col, payload_col),
+        MEDIA_HEADER_SCHEMA,
+        lambda _, p: [(0 if p is None else len(p), *parse_media_header(p))],
+    )
 
 
 # --- payload synthesis (test fixtures as column expressions) ----------------
@@ -365,7 +415,30 @@ PIXEL_STATS_SCHEMA = T.StructType(
     ]
 )
 
-_NO_STATS = (None, None, None, None, None)
+_NO_STATS = ("unknown", None, None, None, None)
+
+
+def _pcm16_samples(b: bytes):
+    """The PCM16 samples (signed, little-endian) of a RIFF/WAVE payload's
+    first ``data`` chunk after a PCM16 ``fmt`` chunk — a ``data`` chunk ahead
+    of that ``fmt`` is skipped — or None: not WAV, not PCM16, no such chunk,
+    or a truncated ``fmt``."""
+    if b is None or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+        return None
+    pcm16 = False
+    try:
+        for cid, body, sz in _riff_chunks(b, 12, len(b)):
+            if cid == b"fmt " and sz >= 16:
+                audio_fmt = struct.unpack_from("<H", b, body)[0]
+                bits = struct.unpack_from("<H", b, body + 14)[0]
+                pcm16 = audio_fmt == 1 and bits == 16
+            elif cid == b"data" and pcm16:
+                data = b[body : body + sz]
+                n = len(data) // 2
+                return struct.unpack(f"<{n}h", data[: 2 * n])
+    except struct.error:
+        pass
+    return None
 
 
 def decode_pixel_samples(b: bytes):
@@ -376,13 +449,16 @@ def decode_pixel_samples(b: bytes):
     these two formats need none, which is what retires the ``fake`` kernel
     for them.  Compressed/other formats degrade to kind='unknown'."""
     if b is None:
-        return ("unknown",) + _NO_STATS[:4]
+        return _NO_STATS
+    samples = _pcm16_samples(b)
+    if samples is not None:
+        return ("wav", len(samples), sum(samples), min(samples, default=None), max(samples, default=None))
     try:
         if b[:2] == b"BM" and len(b) >= 54:
             bpp = struct.unpack("<H", b[28:30])[0]
             comp = struct.unpack("<I", b[30:34])[0]
             if bpp != 24 or comp != 0:
-                return ("unknown",) + _NO_STATS[:4]
+                return _NO_STATS
             off = struct.unpack("<I", b[10:14])[0]
             w, h = struct.unpack("<ii", b[18:26])
             h = abs(h)
@@ -392,29 +468,11 @@ def decode_pixel_samples(b: bytes):
                 start = off + row * stride
                 vals.extend(b[start : start + 3 * w])
             if len(vals) != 3 * w * h:
-                return ("unknown",) + _NO_STATS[:4]
+                return _NO_STATS
             return ("bmp", len(vals), sum(vals), min(vals), max(vals))
-        if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-            off = 12
-            fmt_ok = False
-            while off + 8 <= len(b):
-                cid = b[off : off + 4]
-                sz = struct.unpack("<I", b[off + 4 : off + 8])[0]
-                if cid == b"fmt " and sz >= 16:
-                    audio_fmt, ch = struct.unpack("<HH", b[off + 8 : off + 12])
-                    bits = struct.unpack("<H", b[off + 22 : off + 24])[0]
-                    fmt_ok = audio_fmt == 1 and bits == 16
-                elif cid == b"data" and fmt_ok:
-                    data = b[off + 8 : off + 8 + sz]
-                    n = len(data) // 2
-                    if n == 0:
-                        return ("wav", 0, 0, None, None)
-                    samples = struct.unpack(f"<{n}h", data[: 2 * n])
-                    return ("wav", n, sum(samples), min(samples), max(samples))
-                off += 8 + sz + (sz & 1)
     except (struct.error, IndexError):
         pass
-    return ("unknown",) + _NO_STATS[:4]
+    return _NO_STATS
 
 
 def pixel_sample_stats(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
@@ -423,30 +481,12 @@ def pixel_sample_stats(df: DataFrame, id_col: str, payload_col: str) -> DataFram
     samples, decoded from the raw bytes inside the Arrow-batched mapInPandas
     kernel.  Map-only at any scale; the mean is one int-ratio division
     (cross-engine exact)."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            parsed = [decode_pixel_samples(p) for p in b["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": b["id"],
-                    "kind": pd.Series([p[0] for p in parsed], dtype="object"),
-                    "n_vals": pd.Series([p[1] for p in parsed], dtype="Int64"),
-                    "sum_val": pd.Series([p[2] for p in parsed], dtype="Int64"),
-                    "min_val": pd.Series([p[3] for p in parsed], dtype="Int64"),
-                    "max_val": pd.Series([p[4] for p in parsed], dtype="Int64"),
-                    "mean_val": pd.Series(
-                        [
-                            (p[2] / p[1]) if p[1] else None
-                            for p in parsed
-                        ],
-                        dtype="float64",
-                    ),
-                }
-            )
+    def stats(_, p):
+        kind, n, s, mn, mx = decode_pixel_samples(p)
+        return [(kind, n, s, mn, mx, s / n if n else None)]
 
-    return src.mapInPandas(run, schema=PIXEL_STATS_SCHEMA)
+    return _run_rows(_payload(df, id_col, payload_col), PIXEL_STATS_SCHEMA, stats)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -469,35 +509,18 @@ def resize_plan(df: DataFrame, id_col: str, width_col: str, height_col: str, max
     new_w = floor(w * max_side / max(w, h)) when the longest side exceeds
     max_side, else unchanged — identical IEEE double ops in the SQL oracle.
     """
-    import math
+
+    def fit(_, w, h):
+        w, h = int(w), int(h)
+        m = max(w, h)
+        if m <= max_side:
+            return [(w, h, w, h)]
+        return [(w, h, math.floor(w * max_side / m), math.floor(h * max_side / m))]
 
     src = df.select(
         F.col(id_col).alias("id"), F.col(width_col).alias("width"), F.col(height_col).alias("height")
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            m = b[["width", "height"]].max(axis=1)
-            scale_needed = m > max_side
-            new_w = [
-                int(math.floor(w * max_side / mx)) if s else int(w)
-                for w, mx, s in zip(b["width"], m, scale_needed)
-            ]
-            new_h = [
-                int(math.floor(h * max_side / mx)) if s else int(h)
-                for h, mx, s in zip(b["height"], m, scale_needed)
-            ]
-            yield pd.DataFrame(
-                {
-                    "id": b["id"],
-                    "width": b["width"],
-                    "height": b["height"],
-                    "new_width": pd.Series(new_w, dtype="int32"),
-                    "new_height": pd.Series(new_h, dtype="int32"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=RESIZED_SCHEMA)
+    return _run_rows(src, RESIZED_SCHEMA, fit)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -522,41 +545,22 @@ def sample_frames(
     One clip's frames stay inside one Arrow batch — the shape a torchcodec /
     pyav kernel consumes.
     """
-    import hashlib
+
+    def frames(vid, dur, fps):
+        fps = int(fps)
+        n_frames = int(dur) * fps
+        stride = max(1, n_frames // max_frames)
+        return [
+            (idx, idx / fps, hashlib.sha256(f"{vid}:{idx}".encode()).hexdigest())
+            for _, idx in zip(range(max_frames), range(0, n_frames, stride))
+        ]
 
     src = df.select(
         F.col(id_col).alias("id"),
         F.col(duration_col).alias("duration_s"),
         F.col(fps_col).alias("fps"),
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, idxs, tss, shas = [], [], [], []
-            for vid, dur, fps in zip(b["id"], b["duration_s"], b["fps"]):
-                n_frames = int(dur) * int(fps)
-                stride = max(1, n_frames // max_frames)
-                k = 0
-                idx = 0
-                while idx < n_frames and k < max_frames:
-                    ids.append(vid)
-                    idxs.append(idx)
-                    tss.append(idx / int(fps))
-                    shas.append(hashlib.sha256(f"{vid}:{idx}".encode()).hexdigest())
-                    k += 1
-                    idx += stride
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "ts_s": pd.Series(tss, dtype="float64"),
-                    "frame_sha": pd.Series(shas, dtype="object"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=FRAME_SCHEMA)
-
-
+    return _run_rows(src, FRAME_SCHEMA, frames)
 
 
 AUDIO_WINDOW_SCHEMA = T.StructType(
@@ -592,52 +596,17 @@ def audio_window_energy(
     Arrow-batched mapInPandas task, exactly like sample_frames — rows
     multiply before the next shuffle, never across one.  Non-PCM16 payloads
     yield no rows (the gate is parse-level, same contract as
-    decode_pixel_samples)."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
+    decode_pixel_samples, whose samples it windows)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in ("id", "win", "n_samples", "energy", "peak", "is_silence")}
-            for i, p in zip(b["id"], b["payload"]):
-                kind, n, _s, _mn, _mx = decode_pixel_samples(p)
-                if kind != "wav" or not n:
-                    continue
-                # re-decode the sample stream (decode_pixel_samples proved it
-                # parses); windows are [w*win, (w+1)*win) sample slices
-                off = 12
-                samples = None
-                while off + 8 <= len(p):
-                    cid = p[off : off + 4]
-                    sz = struct.unpack("<I", p[off + 4 : off + 8])[0]
-                    if cid == b"data":
-                        data = p[off + 8 : off + 8 + sz]
-                        m = len(data) // 2
-                        samples = struct.unpack(f"<{m}h", data[: 2 * m])
-                        break
-                    off += 8 + sz + (sz & 1)
-                if not samples:
-                    continue
-                for w0 in range(0, len(samples), win):
-                    chunk = samples[w0 : w0 + win]
-                    energy = sum(v * v for v in chunk)
-                    out["id"].append(i)
-                    out["win"].append(w0 // win)
-                    out["n_samples"].append(len(chunk))
-                    out["energy"].append(energy)
-                    out["peak"].append(max(abs(v) for v in chunk))
-                    out["is_silence"].append(energy < silence_mean_sq * len(chunk))
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(out["id"], dtype="int64"),
-                    "win": pd.Series(out["win"], dtype="int32"),
-                    "n_samples": pd.Series(out["n_samples"], dtype="int32"),
-                    "energy": pd.Series(out["energy"], dtype="int64"),
-                    "peak": pd.Series(out["peak"], dtype="int32"),
-                    "is_silence": pd.Series(out["is_silence"], dtype="bool"),
-                }
-            )
+    def windows(_, p):
+        samples = _pcm16_samples(p) or ()
+        for w0 in range(0, len(samples), win):  # [w*win, (w+1)*win) slices
+            chunk = samples[w0 : w0 + win]
+            energy = sum(v * v for v in chunk)
+            peak = max(abs(v) for v in chunk)
+            yield (w0 // win, len(chunk), energy, peak, energy < silence_mean_sq * len(chunk))
 
-    return src.mapInPandas(run, schema=AUDIO_WINDOW_SCHEMA)
+    return _run_rows(_payload(df, id_col, payload_col), AUDIO_WINDOW_SCHEMA, windows)
 
 
 AHASH_SCHEMA = T.StructType(
@@ -698,16 +667,8 @@ def ahash64(b: bytes):
 
 
 def image_ahash(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
-    """(id, ahash) via the Arrow-batched mapInPandas kernel — map-only."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            yield pd.DataFrame(
-                {"id": b["id"], "ahash": pd.Series([ahash64(p) for p in b["payload"]], dtype="object")}
-            )
-
-    return src.mapInPandas(run, schema=AHASH_SCHEMA)
+    """(id, ahash) via the Arrow row runner — map-only."""
+    return _run_rows(_payload(df, id_col, payload_col), AHASH_SCHEMA, lambda _, p: [(ahash64(p),)])
 
 
 def ahash_near_pairs(
@@ -850,24 +811,9 @@ def gif_frame_info(b: bytes):
 
 
 def gif_frames(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
-    """(id, width, height, n_frames, total_delay_cs) via the Arrow kernel —
-    map-only; undecodable payloads yield NULL fields."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            parsed = [gif_frame_info(p) for p in b["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": b["id"],
-                    "width": pd.Series([p[0] if p else None for p in parsed], dtype="Int32"),
-                    "height": pd.Series([p[1] if p else None for p in parsed], dtype="Int32"),
-                    "n_frames": pd.Series([p[2] if p else None for p in parsed], dtype="Int32"),
-                    "total_delay_cs": pd.Series([p[3] if p else None for p in parsed], dtype="Int64"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=GIF_FRAMES_SCHEMA)
+    """(id, width, height, n_frames, total_delay_cs) via the Arrow row
+    runner — map-only; undecodable payloads yield NULL fields."""
+    return _run_rows(_payload(df, id_col, payload_col), GIF_FRAMES_SCHEMA, lambda _, p: [gif_frame_info(p)])
 
 
 AUDIO_AUTOCORR_SCHEMA = T.StructType(
@@ -895,46 +841,17 @@ def audio_autocorr(
     arithmetically and must match bit-for-bit (same contract as
     audio_window_energy).  Lag fan-out (max_lag+1 rows per clip) happens
     in-task; non-PCM16 payloads yield no rows."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in ("id", "lag", "n_terms", "r")}
-            for i, p in zip(b["id"], b["payload"]):
-                kind, n, _s, _mn, _mx = decode_pixel_samples(p)
-                if kind != "wav" or not n:
-                    continue
-                off = 12
-                samples = None
-                while off + 8 <= len(p):
-                    cid = p[off : off + 4]
-                    sz = struct.unpack("<I", p[off + 4 : off + 8])[0]
-                    if cid == b"data":
-                        data = p[off + 8 : off + 8 + sz]
-                        m = len(data) // 2
-                        samples = struct.unpack(f"<{m}h", data[: 2 * m])
-                        break
-                    off += 8 + sz + (sz & 1)
-                if not samples:
-                    continue
-                for k in range(0, max_lag + 1):
-                    terms = [
-                        samples[t] * samples[t + k] for t in range(len(samples) - k)
-                    ]
-                    out["id"].append(i)
-                    out["lag"].append(k)
-                    out["n_terms"].append(len(terms))
-                    out["r"].append(sum(terms))
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(out["id"], dtype="int64"),
-                    "lag": pd.Series(out["lag"], dtype="int32"),
-                    "n_terms": pd.Series(out["n_terms"], dtype="int32"),
-                    "r": pd.Series(out["r"], dtype="int64"),
-                }
-            )
+    def lags(_, p):
+        s = _pcm16_samples(p)
+        if not s:
+            return []
+        return [
+            (k, max(0, len(s) - k), sum(s[t] * s[t + k] for t in range(len(s) - k)))
+            for k in range(max_lag + 1)
+        ]
 
-    return src.mapInPandas(run, schema=AUDIO_AUTOCORR_SCHEMA)
+    return _run_rows(_payload(df, id_col, payload_col), AUDIO_AUTOCORR_SCHEMA, lags)
 
 
 def synth_png_with_chunks(doc_id, width, height, n_text) -> Column:
@@ -1022,22 +939,7 @@ def png_chunks(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     the image-metadata sidecar extraction (EXIF-class provenance capture)
     multimodal ingest runs before any pixel decode.  Map-only; undecodable
     payloads yield NULL fields."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            parsed = [png_chunk_info(p) for p in b["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": b["id"],
-                    "n_chunks": pd.Series([p[0] if p else None for p in parsed], dtype="Int32"),
-                    "n_text": pd.Series([p[1] if p else None for p in parsed], dtype="Int32"),
-                    "idat_bytes": pd.Series([p[2] if p else None for p in parsed], dtype="Int64"),
-                    "text_kv": [p[3] if p else None for p in parsed],
-                }
-            )
-
-    return src.mapInPandas(run, schema=PNG_CHUNKS_SCHEMA)
+    return _run_rows(_payload(df, id_col, payload_col), PNG_CHUNKS_SCHEMA, lambda _, p: [png_chunk_info(p)])
 
 
 def _be16(c) -> Column:
@@ -1136,26 +1038,8 @@ TIFF_IFD_SCHEMA = T.StructType(
 
 def tiff_ifd(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     """(id, byte_order, n_entries, width, height, orientation) via the Arrow
-    kernel — map-only; undecodable payloads yield NULL fields."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            parsed = [tiff_ifd_info(p) for p in b["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": b["id"],
-                    "byte_order": [p[0] if p else None for p in parsed],
-                    "n_entries": pd.Series([p[1] if p else None for p in parsed], dtype="Int32"),
-                    "width": pd.Series([p[2] if p else None for p in parsed], dtype="Int32"),
-                    "height": pd.Series([p[3] if p else None for p in parsed], dtype="Int32"),
-                    "orientation": pd.Series(
-                        [p[4] if p else None for p in parsed], dtype="Int32"
-                    ),
-                }
-            )
-
-    return src.mapInPandas(run, schema=TIFF_IFD_SCHEMA)
+    row runner — map-only; undecodable payloads yield NULL fields."""
+    return _run_rows(_payload(df, id_col, payload_col), TIFF_IFD_SCHEMA, lambda _, p: [tiff_ifd_info(p)])
 
 
 # ---------------------------------------------------------------------------
@@ -1251,29 +1135,21 @@ def avi_info(b: bytes):
         n_movi, movi_bytes = 0, 0
         stack = [(12, len(b))]
         while stack:
-            pos, end = stack.pop()
-            while pos + 8 <= end:
-                fcc = b[pos : pos + 4]
-                sz = struct.unpack("<I", b[pos + 4 : pos + 8])[0]
-                body, nxt = pos + 8, pos + 8 + sz + (sz & 1)
+            for fcc, body, sz in _riff_chunks(b, *stack.pop()):
                 if fcc == b"LIST":
                     ltype = b[body : body + 4]
                     if ltype in (b"hdrl", b"strl"):
                         stack.append((body + 4, body + sz))
                     elif ltype == b"movi":
-                        p = body + 4
-                        while p + 8 <= body + sz:
-                            csz = struct.unpack("<I", b[p + 4 : p + 8])[0]
-                            if b[p + 2 : p + 4] in (b"dc", b"db"):
+                        for cid, _, csz in _riff_chunks(b, body + 4, body + sz):
+                            if cid[2:] in (b"dc", b"db"):
                                 n_movi += 1
                                 movi_bytes += csz
-                            p += 8 + csz + (csz & 1)
                 elif fcc == b"avih" and sz >= 40:
                     uspf = struct.unpack("<I", b[body : body + 4])[0]
                     total = struct.unpack("<I", b[body + 16 : body + 20])[0]
                     width = struct.unpack("<I", b[body + 32 : body + 36])[0]
                     height = struct.unpack("<I", b[body + 36 : body + 40])[0]
-                pos = nxt
         if width is None:
             return None
         return (width, height, total, uspf, n_movi, movi_bytes)
@@ -1283,26 +1159,9 @@ def avi_info(b: bytes):
 
 def avi_container_info(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     """(id, width, height, total_frames, us_per_frame, n_movi_chunks,
-    movi_bytes) via the Arrow kernel — map-only; undecodable payloads
+    movi_bytes) via the Arrow row runner — map-only; undecodable payloads
     yield NULL fields."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            parsed = [avi_info(p) for p in batch["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": batch["id"],
-                    "width": pd.Series([p[0] if p else None for p in parsed], dtype="Int32"),
-                    "height": pd.Series([p[1] if p else None for p in parsed], dtype="Int32"),
-                    "total_frames": pd.Series([p[2] if p else None for p in parsed], dtype="Int32"),
-                    "us_per_frame": pd.Series([p[3] if p else None for p in parsed], dtype="Int64"),
-                    "n_movi_chunks": pd.Series([p[4] if p else None for p in parsed], dtype="Int32"),
-                    "movi_bytes": pd.Series([p[5] if p else None for p in parsed], dtype="Int64"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=AVI_INFO_SCHEMA)
+    return _run_rows(_payload(df, id_col, payload_col), AVI_INFO_SCHEMA, lambda _, p: [avi_info(p)])
 
 
 # ---------------------------------------------------------------------------
@@ -1393,24 +1252,8 @@ DICOM_INFO_SCHEMA = T.StructType(
 
 def dicom_tags(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     """(id, modality, patient_id, n_rows, n_cols, n_elements) via the Arrow
-    kernel — map-only; undecodable payloads yield NULL fields."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            parsed = [dicom_info(p) for p in batch["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": batch["id"],
-                    "modality": [p[0] if p else None for p in parsed],
-                    "patient_id": [p[1] if p else None for p in parsed],
-                    "n_rows": pd.Series([p[2] if p else None for p in parsed], dtype="Int32"),
-                    "n_cols": pd.Series([p[3] if p else None for p in parsed], dtype="Int32"),
-                    "n_elements": pd.Series([p[4] if p else None for p in parsed], dtype="Int32"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=DICOM_INFO_SCHEMA)
+    row runner — map-only; undecodable payloads yield NULL fields."""
+    return _run_rows(_payload(df, id_col, payload_col), DICOM_INFO_SCHEMA, lambda _, p: [dicom_info(p)])
 
 
 # ---------------------------------------------------------------------------
@@ -1532,28 +1375,9 @@ def mp4_info(b: bytes):
 
 def mp4_container_info(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     """(id, brand, timescale, duration, track_id, width, height,
-    n_top_boxes, mdat_bytes) via the Arrow kernel — map-only; undecodable
-    payloads yield NULL fields."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            parsed = [mp4_info(p) for p in batch["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": batch["id"],
-                    "brand": [p[0] if p else None for p in parsed],
-                    "timescale": pd.Series([p[1] if p else None for p in parsed], dtype="Int64"),
-                    "duration": pd.Series([p[2] if p else None for p in parsed], dtype="Int64"),
-                    "track_id": pd.Series([p[3] if p else None for p in parsed], dtype="Int64"),
-                    "width": pd.Series([p[4] if p else None for p in parsed], dtype="Int32"),
-                    "height": pd.Series([p[5] if p else None for p in parsed], dtype="Int32"),
-                    "n_top_boxes": pd.Series([p[6] if p else None for p in parsed], dtype="Int32"),
-                    "mdat_bytes": pd.Series([p[7] if p else None for p in parsed], dtype="Int64"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=MP4_INFO_SCHEMA)
+    n_top_boxes, mdat_bytes) via the Arrow row runner — map-only;
+    undecodable payloads yield NULL fields."""
+    return _run_rows(_payload(df, id_col, payload_col), MP4_INFO_SCHEMA, lambda _, p: [mp4_info(p)])
 
 
 # ---------------------------------------------------------------------------
@@ -1681,22 +1505,6 @@ def zip_info(b: bytes):
 
 def zip_central_dir(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     """(id, n_entries, sum_usize, sum_csize, first_name, last_name,
-    cd_offset) via the Arrow kernel — map-only."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            parsed = [zip_info(p) for p in batch["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": batch["id"],
-                    "n_entries": pd.Series([p[0] if p else None for p in parsed], dtype="Int32"),
-                    "sum_usize": pd.Series([p[1] if p else None for p in parsed], dtype="Int64"),
-                    "sum_csize": pd.Series([p[2] if p else None for p in parsed], dtype="Int64"),
-                    "first_name": [p[3] if p else None for p in parsed],
-                    "last_name": [p[4] if p else None for p in parsed],
-                    "cd_offset": pd.Series([p[5] if p else None for p in parsed], dtype="Int64"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=ZIP_INFO_SCHEMA)
+    cd_offset) via the Arrow row runner — map-only; undecodable payloads
+    yield NULL fields."""
+    return _run_rows(_payload(df, id_col, payload_col), ZIP_INFO_SCHEMA, lambda _, p: [zip_info(p)])

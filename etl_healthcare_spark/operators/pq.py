@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .clustering import quantized_vectors
-from ..functions.materialize import materialize, materialize_lazy
+from ..functions.materialize import materialize_lazy
 
 
 def _sub_long(vecs: DataFrame, sub_dims: int) -> DataFrame:

@@ -170,7 +170,6 @@ def index_build(
     term-keyed window for df, one range-free write.  Buckets are uniform by
     construction (sha256), so partitions are even however skewed the
     vocabulary is."""
-    from ..functions.text import tokens
 
     # checkpointed: the df aggregation AND the denormalizing join both
     # consume the (term, doc, tf) frame — un-materialized, each re-ran the
@@ -273,7 +272,6 @@ def phrase_match(docs: DataFrame, phrase: list[str], text_col: str = "text", id_
     with the number of distinct starting positions.  Token adjacency is
     defined by the engine tokenizer (regex token stream), identical in the
     oracle."""
-    from ..functions.text import tokens
 
     pos = docs.select(
         F.col(id_col).alias("doc"),

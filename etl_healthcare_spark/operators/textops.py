@@ -558,7 +558,6 @@ def hashed_linear_score(
 
     Returns (id, n_tokens, score, positive).
     """
-    from ..functions.text import tokens
 
     toks = df.select(F.col(id_col).alias("__id"), tokens(F.col(text_col)).alias("t"))
     w = (
@@ -685,7 +684,6 @@ def bpe_train(df: DataFrame, text_col: str, rounds: int = 3, max_word_len: int =
 
     Returns (round, a, b, cnt): the merge learned in each round.
     """
-    from ..functions.text import tokens
 
     words = (
         df.select(F.explode(tokens(F.col(text_col))).alias("w"))
@@ -781,7 +779,6 @@ def bpe_apply(df: DataFrame, text_col: str, id_col: str, rounds: int = 3, max_wo
 
     Returns (id, n_tokens, n_symbols) with n_symbols <= total chars.
     """
-    from ..functions.text import tokens
 
     state = None
     # re-run the training to materialize the final word -> |syms| table;
@@ -1004,7 +1001,6 @@ def chi2_keyness(
     conditional sum (partial-aggregable, vocabulary-sized result), a 1-row
     broadcast of the totals, map-only arithmetic, TakeOrderedAndProject.
     """
-    from ..functions.text import tokens
 
     tok = df.select(
         F.explode(tokens(F.col(text_col))).alias("token"),
@@ -1401,7 +1397,6 @@ def chunk_windows(
     window is the exact-dedup key for chunk-level dedup (boilerplate
     headers/footers collapse across documents before any embedding is paid
     for)."""
-    from ..functions.text import tokens
 
     assert stride > 0 and window > 0
     tok = df.select(F.col(id_col), tokens(F.col(text_col)).alias("t")).where(

@@ -718,7 +718,7 @@ def _funnel_oracle() -> str:
 def curation_e2e(spark, sf_dir):
     from pyspark.sql import Observation
 
-    from ..operators.dedup import connected_components, minhash_lsh_pairs, ngram_contamination
+    from ..operators.dedup import ngram_contamination
     from ..operators.textops import quality_reason
 
     docs = _t(spark, sf_dir, "documents")

@@ -546,7 +546,7 @@ def u2_batch_dedup(spark, sf_dir):
     "ingestion story for the reference's FHIR payload format (README.md:3-4).",
 )
 def p6b_fhir_roundtrip(spark, sf_dir):
-    from ..operators.fhir import fhir_json_to_dto, map_to_fhir
+    from ..operators.fhir import fhir_json_to_dto
 
     o = observations(spark, sf_dir).where(F.col("tenantId") == "t5")
     as_json = map_to_fhir(o).select(F.to_json("fhir").alias("resource"))

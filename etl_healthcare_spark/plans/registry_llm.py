@@ -18,7 +18,6 @@ from ..functions.text import LANG_MARKERS, tokens
 from ..operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
-    ngram_jaccard_pairs,
     simhash_dup_groups,
 )
 from ..operators.similarity import ann_topk, topk_cosine
@@ -189,7 +188,7 @@ def _ngram_jaccard_verify_oracle() -> str:
     "single int-ratio division (cross-engine exact).",
 )
 def dedup_ngram_jaccard(spark, sf_dir):
-    from ..operators.dedup import minhash_lsh_pairs, ngram_jaccard_verify
+    from ..operators.dedup import ngram_jaccard_verify
 
     docs = _t(spark, sf_dir, "documents")
     # EAGER: the verify join consumes pairs from concurrent stages, which
@@ -511,8 +510,9 @@ def q_text_tokens(spark, sf_dir):
     "(winnowing-style; stable under small edits).",
 )
 def q_text_fingerprint(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents").where(F.size(tokens(F.col("text"))) >= 5)
-    return fingerprints(docs, "text", "doc_id", k=5)
+    # fingerprints is NULL exactly for a doc below k tokens (no shingle)
+    fp = fingerprints(_t(spark, sf_dir, "documents"), "text", "doc_id", k=5)
+    return fp.where(F.col("fingerprint").isNotNull())
 
 
 # ---------------------------------------------------------------------------

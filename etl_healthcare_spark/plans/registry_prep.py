@@ -571,7 +571,6 @@ def j11_bucketed_join(spark, sf_dir):
     import hashlib
     import os
     import shutil
-    import tempfile
 
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")

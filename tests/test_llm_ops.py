@@ -205,6 +205,99 @@ def test_multimodal_resize_and_frames(spark):
     assert frames[1].ts_s == 6 / 24 and len(frames[0].frame_sha) == 64
 
 
+# --- the Arrow kernel contract ----------------------------------------------
+
+# kernel -> (declared schema, the non-NULL fields of the row a NULL or junk
+# payload maps to; None for a fan-out kernel, which maps it to no row)
+_PAYLOAD_KERNELS = {
+    "decode_media_meta": ("MEDIA_HEADER_SCHEMA", {"kind": "unknown"}),
+    "pixel_sample_stats": ("PIXEL_STATS_SCHEMA", {"kind": "unknown"}),
+    "image_ahash": ("AHASH_SCHEMA", {}),
+    "gif_frames": ("GIF_FRAMES_SCHEMA", {}),
+    "png_chunks": ("PNG_CHUNKS_SCHEMA", {}),
+    "tiff_ifd": ("TIFF_IFD_SCHEMA", {}),
+    "avi_container_info": ("AVI_INFO_SCHEMA", {}),
+    "dicom_tags": ("DICOM_INFO_SCHEMA", {}),
+    "mp4_container_info": ("MP4_INFO_SCHEMA", {}),
+    "zip_central_dir": ("ZIP_INFO_SCHEMA", {}),
+    "audio_window_energy": ("AUDIO_WINDOW_SCHEMA", None),
+    "audio_autocorr": ("AUDIO_AUTOCORR_SCHEMA", None),
+}
+# the two geometry kernels read typed columns, not a payload
+_GEOMETRY_KERNELS = {
+    "resize_plan": ("RESIZED_SCHEMA", "id long, w int, h int", ("w", "h")),
+    "sample_frames": ("FRAME_SCHEMA", "id long, dur int, fps int", ("dur", "fps")),
+}
+
+
+@pytest.mark.parametrize(
+    "name,case",
+    [(k, c) for k in _PAYLOAD_KERNELS for c in ("null", "junk", "empty")]
+    + [(k, "empty") for k in _GEOMETRY_KERNELS],
+)
+def test_kernel_contract_null_junk_and_empty_input(spark, name, case):
+    """Every Arrow kernel: a NULL or an undecodable payload gives one row of
+    NULL fields (a fan-out kernel gives none), never an error; an empty
+    input gives an empty frame with the declared schema."""
+    from etl_healthcare_spark.operators import multimodal as mm
+
+    kernel = getattr(mm, name)
+    if name in _GEOMETRY_KERNELS:
+        schema_name, ddl, cols = _GEOMETRY_KERNELS[name]
+        out = kernel(spark.createDataFrame([], ddl), "id", *cols)
+    else:
+        schema_name, non_null = _PAYLOAD_KERNELS[name]
+        payload = {"null": None, "junk": bytearray(b"junk")}.get(case)
+        rows = [] if case == "empty" else [(1, payload)]
+        out = kernel(spark.createDataFrame(rows, "id long, payload binary"), "id", "payload")
+    schema = getattr(mm, schema_name)
+    assert out.schema == schema
+    got = [r.asDict() for r in out.collect()]
+    if case == "empty" or non_null is None:
+        assert got == []
+        return
+    expect = {f.name: None for f in schema.fields} | {"id": 1} | non_null
+    if name == "decode_media_meta":
+        expect["byte_len"] = 0 if payload is None else len(payload)
+    assert got == [expect]
+
+
+def test_wav_data_chunk_before_fmt_is_skipped_by_every_reader(spark):
+    """A `data` chunk ahead of the PCM16 `fmt` chunk is not sample data:
+    pixel_sample_stats and both audio kernels read the first `data` chunk
+    after that `fmt`, so the stats and the windows describe the same
+    samples; the header parser still finds the `fmt` chunk."""
+    import struct
+
+    from etl_healthcare_spark.operators.multimodal import (
+        audio_autocorr,
+        audio_window_energy,
+        parse_media_header,
+        pixel_sample_stats,
+    )
+
+    def chunk(cid, body):
+        return cid + struct.pack("<I", len(body)) + body
+
+    before, after = [1, 2, 3], [10, -20, 30, 40]
+    body = (
+        b"WAVE"
+        + chunk(b"data", struct.pack("<3h", *before))
+        + chunk(b"fmt ", struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16))
+        + chunk(b"data", struct.pack("<4h", *after))
+    )
+    wav = b"RIFF" + struct.pack("<I", len(body)) + body
+    assert parse_media_header(wav) == ("wav", None, None, 8000, 1, 16)
+
+    df = spark.createDataFrame([(1, bytearray(wav))], "id long, payload binary")
+    st = pixel_sample_stats(df, "id", "payload").collect()[0]
+    assert (st.kind, st.n_vals, st.sum_val, st.min_val, st.max_val) == ("wav", 4, 60, -20, 40)
+    (w,) = audio_window_energy(df, "id", "payload", win=8).collect()
+    assert (w.win, w.n_samples, w.energy, w.peak) == (0, 4, 3000, 40)
+    lags = {r.lag: (r.n_terms, r.r) for r in audio_autocorr(df, "id", "payload", max_lag=1).collect()}
+    assert lags == {0: (4, 3000), 1: (3, 10 * -20 + -20 * 30 + 30 * 40)}
+
+
 def test_minhash_lsh_mega_bucket_capped_and_counted(spark):
     """A boilerplate cluster (many identical docs) lands every member in the
     same (band, key) buckets; uncapped that expands n^2/2 pairs in ONE task.
@@ -234,6 +327,21 @@ def test_minhash_lsh_mega_bucket_capped_and_counted(spark):
     assert obs.get["dropped_buckets"] == 4
     assert obs.get["dropped_docs"] == 160
     assert obs.get["max_bucket_seen"] == 40
+
+
+def test_minhash_lsh_counters_report_when_every_bucket_is_dropped(spark):
+    """The cap drops every bucket, so no pair survives: the counters must
+    still report the dropped buckets (the case they exist for), with the
+    same figures as when one ordinary pair survives the cap."""
+    from pyspark.sql import Observation
+
+    boiler = [(100 + i, "standard licence header text repeated verbatim on every page", "en")
+              for i in range(40)]
+    docs = spark.createDataFrame([(1, OTHER, "en"), *boiler], ["doc_id", "text", "lang"])
+    obs = Observation("lsh_all_dropped")
+    pairs = minhash_lsh_pairs(docs, "text", "doc_id", max_bucket=10, observation=obs).collect()
+    assert pairs == []
+    assert obs.get == {"dropped_buckets": 4, "dropped_docs": 160, "max_bucket_seen": 40}
 
 
 def test_minhash_lsh_cap_default_leaves_small_corpora_unchanged(spark):

@@ -9,7 +9,6 @@ from etl_healthcare_spark.operators.normalize import build_normalized_envelope
 from etl_healthcare_spark.operators.persist import ParquetStateStore
 from etl_healthcare_spark.operators.pagination import (
     clamp_limit,
-    encode_token,
     keyset_page,
     next_token_from_rows,
 )
