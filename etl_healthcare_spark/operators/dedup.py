@@ -162,15 +162,21 @@ def _lsh_buckets(
     return buckets
 
 
-def _bucket_pairs(buckets: DataFrame, a: str = "doc_a", b: str = "doc_b") -> DataFrame:
-    """The distinct (a, b) pairs of docs sharing a bucket, index-ordered
-    within each sorted ``ds`` array: a posexplode, then an explode of the
-    tail after each position.  Neither generator takes a lambda, so both
-    compile into the whole-stage code around them."""
-    return (
-        buckets.select("ds", F.posexplode("ds").alias("__i", a))
-        .select(a, F.explode(F.slice("ds", F.col("__i") + 2, F.size("ds"))).alias(b))
-        .distinct()
+def bucket_pairs(buckets: DataFrame, a: str = "doc_a", b: str = "doc_b") -> DataFrame:
+    """The (a, b) = (ds[i], ds[j]) pairs, i < j, of each row's ``ds`` array,
+    with every other column of ``buckets`` carried onto each pair: a
+    posexplode, then an explode of the tail after each position.  Neither
+    generator takes a lambda, so both compile into the whole-stage code
+    around them, and no pair is built only to be filtered out.
+
+    The engine's one in-bucket pair expansion.  Contract: the members of
+    each ``ds`` array are unique, as they are at every call site, so a
+    sorted ``ds`` gives a < b and a bucket of n members gives n(n-1)/2
+    pairs.  No ``distinct``: a caller that needs set semantics across
+    buckets adds it."""
+    keep = [c for c in buckets.columns if c != "ds"]
+    return buckets.select(*keep, "ds", F.posexplode("ds").alias("__i", a)).select(
+        *keep, a, F.explode(F.slice("ds", F.col("__i") + 2, F.size("ds"))).alias(b)
     )
 
 
@@ -186,7 +192,7 @@ def minhash_lsh_pairs(
     """Candidate near-duplicate pairs (doc_a < doc_b) sharing >=1 LSH band.
 
     Pairs are generated inside each (band, key) bucket via groupBy +
-    collect_list + array combinations — NOT a self-join: a self-join would
+    collect_list + ``bucket_pairs`` — NOT a self-join: a self-join would
     re-evaluate the whole minhash pipeline for both branches (measured 2x
     cost) and shuffle the bands twice.  One shuffle to buckets, pairs expand
     in-task.  Typical bucket sizes are bounded by LSH construction; degenerate
@@ -194,7 +200,7 @@ def minhash_lsh_pairs(
     no task ever expands quadratically — see _lsh_buckets for the counters."""
     b = minhash_bands(df, text_col, id_col, bands, rows)
     buckets = _lsh_buckets(b, max_bucket, observation)
-    return _bucket_pairs(buckets)
+    return bucket_pairs(buckets.select("ds")).distinct()
 
 
 def simhash_fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -760,7 +766,7 @@ def minhash_scored_pairs(
     The signature table is materialized once (localCheckpoint) and reused
     three ways — band keys, then two sides of the scoring join — instead of
     re-running the shingle+hash pipeline per use.  Pair generation stays the
-    in-bucket array-combination shape of minhash_lsh_pairs; the scoring join
+    in-bucket ``bucket_pairs`` shape of minhash_lsh_pairs; the scoring join
     keys on doc id against the (corpus-sized but narrow) signature table."""
     n = bands * rows
     sig = minhash_signatures(df, text_col, id_col, n=n, width=width).transform(materialize)
@@ -771,7 +777,7 @@ def minhash_scored_pairs(
     stack_expr = ", ".join(f"'{b}', band{b}" for b in range(bands))
     bands_df = sig.select("doc", *band_cols).selectExpr("doc", f"stack({bands}, {stack_expr}) AS (band, key)")
     buckets = _lsh_buckets(bands_df, max_bucket, observation)
-    pairs = _bucket_pairs(buckets)
+    pairs = bucket_pairs(buckets.select("ds")).distinct()
     a = sig.select(F.col("doc").alias("doc_a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(n)])
     b = sig.select(F.col("doc").alias("doc_b"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(n)])
     n_match = sum((F.col(f"a{i}") == F.col(f"b{i}")).cast("long") for i in range(n))

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..functions.materialize import materialize
+from .dedup import bucket_pairs
 
 PPM = 1_000_000
 DAMP_PPM = 850_000  # d = 0.85
@@ -325,9 +326,9 @@ def common_neighbors(
     twin of related_docs (shared rare features there, shared neighbors
     here).
 
-    Scale shape: candidate pairs expand IN-BUCKET from each apex's
-    collected neighbor list (the dedup_minhash_lsh rule — never an open
-    wedge self-join); apexes with degree > ``max_deg`` are EXCLUDED
+    Scale shape: candidate pairs expand IN-BUCKET from each apex's sorted
+    neighbor list with ``bucket_pairs`` (the dedup_minhash_lsh rule — never
+    an open wedge self-join); apexes with degree > ``max_deg`` are EXCLUDED
     (documented contract: a hub's wedge set is d^2 and its common-neighbor
     signal is weak — the same hub-cap reasoning as the LSH mega-bucket
     drop), so pair volume is bounded by max_deg x |edges|.  One adjacency
@@ -349,25 +350,10 @@ def common_neighbors(
     )
     adj = (
         und.groupBy("n")
-        .agg(F.collect_list("nbr").alias("nbrs"))
-        .where(F.size("nbrs") <= max_deg)
+        .agg(F.sort_array(F.collect_list("nbr")).alias("ds"))
+        .where(F.size("ds") <= max_deg)
     )
-    pairs = (
-        adj.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "nbrs",
-                        lambda x: F.transform(
-                            "nbrs", lambda y: F.struct(x.alias("u"), y.alias("v"))
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .where(F.col("p.u") < F.col("p.v"))
-        .select(F.col("p.u").alias("u"), F.col("p.v").alias("v"))
-    )
+    pairs = bucket_pairs(adj.select("ds"), "u", "v")
     cn = pairs.groupBy("u", "v").agg(F.count(F.lit(1)).alias("n_common"))
     # the edge list descends from an aggregation (tiny static estimate) but
     # grows with the graph — never broadcast it (SCALE.md §11)

@@ -508,6 +508,7 @@ def resize_plan(df: DataFrame, id_col: str, width_col: str, height_col: str, max
     would live in; only the pixel kernel is stubbed (no image libs here).
     new_w = floor(w * max_side / max(w, h)) when the longest side exceeds
     max_side, else unchanged — identical IEEE double ops in the SQL oracle.
+    A row with a NULL width or height has no geometry and gives no row.
     """
 
     def fit(_, w, h):
@@ -519,7 +520,7 @@ def resize_plan(df: DataFrame, id_col: str, width_col: str, height_col: str, max
 
     src = df.select(
         F.col(id_col).alias("id"), F.col(width_col).alias("width"), F.col(height_col).alias("height")
-    )
+    ).dropna(subset=["width", "height"])
     return _run_rows(src, RESIZED_SCHEMA, fit)
 
 
@@ -543,7 +544,7 @@ def sample_frames(
     The index arithmetic and the fan-out (the ffmpeg ``select='not(mod(n,k))'``
     analog) are real; the frame decode is a deterministic sha256 stand-in.
     One clip's frames stay inside one Arrow batch — the shape a torchcodec /
-    pyav kernel consumes.
+    pyav kernel consumes.  A clip with a NULL duration or fps gives no row.
     """
 
     def frames(vid, dur, fps):
@@ -559,7 +560,7 @@ def sample_frames(
         F.col(id_col).alias("id"),
         F.col(duration_col).alias("duration_s"),
         F.col(fps_col).alias("fps"),
-    )
+    ).dropna(subset=["duration_s", "fps"])
     return _run_rows(src, FRAME_SCHEMA, frames)
 
 
@@ -685,8 +686,9 @@ def ahash_near_pairs(
     minhash for degenerate corpora (e.g. monochrome frames all hashing to
     zero); it is off by default so the exactness contract holds.
 
-    Shares _lsh_buckets/_bucket_pairs with operators/dedup.py — the identical
-    scale shape: one bucket shuffle, no self-join, bounded task fan-out.
+    Buckets with dedup's _lsh_buckets and expands them with its
+    ``bucket_pairs`` — the identical scale shape: one bucket shuffle, no
+    self-join, bounded task fan-out.
 
     The hash frame is checkpointed once: it feeds THREE consumers (the band
     stack and both candidate join-backs), and when it descends from a Python
@@ -695,7 +697,7 @@ def ahash_near_pairs(
     nodes for one kernel, i.e. every image decoded three times (guide §8:
     decode once, move hashes).  The checkpointed frame is (id, 64-char hash)
     — corpus-linear but payload-free."""
-    from .dedup import _bucket_pairs, _lsh_buckets
+    from .dedup import _lsh_buckets, bucket_pairs
 
     h = hashes.where(F.col("ahash").isNotNull()).transform(materialize)
     bands = h.selectExpr(
@@ -704,7 +706,7 @@ def ahash_near_pairs(
         "'2', substr(ahash, 33, 16), '3', substr(ahash, 49, 16)) AS (band, key)",
     )
     buckets = _lsh_buckets(bands, max_bucket=max_bucket)
-    pairs = _bucket_pairs(buckets, "id_a", "id_b")
+    pairs = bucket_pairs(buckets.select("ds"), "id_a", "id_b").distinct()
     ha = h.select(F.col("id").alias("id_a"), F.col("ahash").alias("ha"))
     hb = h.select(F.col("id").alias("id_b"), F.col("ahash").alias("hb"))
     return (

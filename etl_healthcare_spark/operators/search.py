@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens
 from ..functions.materialize import materialize
+from .dedup import bucket_pairs
 
 # BM25 constants k1=1.2, b=0.75 as exact rationals: with dl/avgdl = dl*N/L,
 #   tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))  ==  22*L*tf / (10*L*tf + 3*L + 9*dl*N)
@@ -332,12 +333,12 @@ def related_docs(
     variety is combinatorial, so discriminative (low-df) features exist even
     over a closed vocabulary where every single token is stopword-frequency
     (any web-crawl corpus after normalization).  Candidate generation is
-    posting-list self-pairing restricted to 2 <= df <= max_df: a shingle
-    shared by df docs yields at most df^2 ordered pairs, so total pair
-    volume is bounded by max_df x |postings| — LINEAR in corpus size for
-    fixed max_df (the same rare-feature-blocking guarantee as
-    j7_fuzzy_match_join and dedup_containment; boilerplate-frequency
-    shingles never pair anything).  Scoring reuses the index family's
+    posting-list self-pairing (``bucket_pairs``) restricted to
+    2 <= df <= max_df: a shingle shared by df docs yields at most df^2
+    ordered pairs, so total pair volume is bounded by max_df x |postings|
+    — LINEAR in corpus size for fixed max_df (the same rare-feature-blocking
+    guarantee as j7_fuzzy_match_join and dedup_containment; boilerplate-
+    frequency shingles never pair anything).  Scoring reuses the index family's
     integer idf surrogate w = 1e6 DIV (1 + df) — exact, engine-
     reproducible, rare-feature-dominant.  Top-k per source doc closes with
     a (score desc, other asc) total order inside a rank window, which Spark
@@ -367,45 +368,41 @@ def related_docs(
     postings = raw.select(
         "doc", F.explode(F.transform(word_shingles(F.col("__raw"), shingle_k), span_key)).alias("g")
     )
-    # pair generation is IN-BUCKET expansion (the dedup_minhash_lsh shape),
-    # not a posting⋈df join followed by a posting⋈posting self-join: one
-    # groupBy(g) collects each shingle's doc list, the df gate keeps only
-    # 2 <= |list| <= max_df buckets, and the <= max_df^2 ordered pairs
-    # expand inside the task — the large posting list is shuffled ONCE
-    # instead of three times (the join shape ran 58-64 s at sf1.0; this
-    # shape measures ~41 s standalone at sf1.0, the pair shuffle dominating)
+    # pair generation is IN-BUCKET expansion (``bucket_pairs``, the
+    # dedup_minhash_lsh shape), not a posting⋈df join followed by a
+    # posting⋈posting self-join: one groupBy(g) collects each shingle's doc
+    # list, the df gate keeps only 2 <= |list| <= max_df buckets, and the
+    # <= max_df^2 pairs expand inside the task — the large posting list is
+    # shuffled ONCE instead of three times (the join shape ran 58-64 s at
+    # sf1.0; this shape measures ~41 s standalone at sf1.0, the pair shuffle
+    # dominating)
     # collect_SET fuses the old explode->distinct->collect_list chain's two
     # shuffles into one: the per-(doc, g) dedup happens inside the same
     # aggregation that builds the posting list (partial sets merge map-side),
     # so the exploded shingle stream crosses the network once (guide §2.4).
-    # Downstream is order-insensitive: size gates, pair expansion, and the
-    # closing (a, b) sum never read the array order.
+    # Downstream is order-insensitive: each bucket pair carries its weight
+    # w and is emitted in both orientations from one inline, so the array
+    # order is never read and needs no sort.
     buckets = (
         postings.groupBy("g")
         .agg(F.collect_set("doc").alias("ds"))
         .where((F.size("ds") >= 2) & (F.size("ds") <= max_df))
-        .select(
-            F.expr("1000000 DIV (1 + size(ds))").alias("w"),
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "ds",
-                        lambda a: F.transform(
-                            "ds", lambda b: F.struct(a.alias("a"), b.alias("b"))
-                        ),
-                    )
-                )
-            ).alias("p"),
+        .select(F.expr("1000000 DIV (1 + size(ds))").alias("w"), "ds")
+    )
+    pairs = bucket_pairs(buckets, "x", "y").select(
+        F.inline(
+            F.array(
+                F.struct(F.col("x").alias("a"), F.col("y").alias("b"), "w"),
+                F.struct(F.col("y").alias("a"), F.col("x").alias("b"), "w"),
+            )
         )
-        .where(F.col("p.a") != F.col("p.b"))
     )
     # ONE pair shuffle end-to-end: repartitioning the pair stream by `a`
     # alone satisfies BOTH the (a, b) aggregation's clustered distribution
     # (subset rule) and the top-k window's partitioning, so the ~45x-the-
     # corpus pair volume crosses the network once, not twice
     scored = (
-        buckets.select(F.col("p.a").alias("a"), F.col("p.b").alias("b"), "w")
-        .repartition(F.col("a"))
+        pairs.repartition(F.col("a"))
         .groupBy("a", "b")
         .agg(F.sum("w").alias("score"), F.count(F.lit(1)).alias("n_shared"))
     )

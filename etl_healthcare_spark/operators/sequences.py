@@ -26,7 +26,7 @@ Scale shapes:
   sequential joins).  localCheckpoint per round keeps lineage flat; the
   convergence probe is a single O(1) count.
 * ``frequent_pairs``: pairs expand IN-TASK from per-basket sorted item
-  arrays (same in-bucket combinator as dedup's LSH, operators/dedup.py:133)
+  arrays (``dedup.bucket_pairs``, the in-bucket expansion of dedup's LSH)
   — never a self-join of the exploded item table; volume is sum(|basket|^2),
   bounded by the basket-size cap, not |items|^2.
 * ``markov_transitions`` / ``markov_stationary_ppb``: one window shuffle
@@ -44,6 +44,7 @@ from pyspark.sql import Window as W
 
 from ..functions.packing import unpack_hi, unpack_lo
 from ..functions.materialize import materialize, materialize_lazy
+from .dedup import bucket_pairs
 
 PPM = 1_000_000
 PPB = 1_000_000_000
@@ -237,10 +238,10 @@ def frequent_pairs(
     >= min_support baskets, i < j.
 
     Pairs are generated in-task from each basket's sorted distinct item
-    array (the dedup LSH combinator pattern), and the basket count, item
-    supports, and pair supports all come out of ONE aggregate: each basket
-    emits a sentinel (null, null), its singles (x, null), and its pairs
-    (x, y) into one exploded stream, so the count groupBy collapses
+    array by ``bucket_pairs`` (the dedup LSH pair expansion), and the basket
+    count, item supports, and pair supports all come out of ONE aggregate:
+    each basket emits a sentinel (null, null), its singles (x, null), and
+    its pairs (x, y) into one unioned stream, so the count groupBy collapses
     map-side to the co-occurrence vocabulary (~|V|^2/2 groups) and the only
     frame reused downstream — checkpointed once — is that aggregate,
     bounded at ANY corpus size.  The previous shape localCheckpointed the
@@ -273,22 +274,16 @@ def frequent_pairs(
         .agg(F.array_sort(F.collect_set("item")).alias("its"))
         .where(F.size("its") <= max_basket)
     )
-    sentinel = F.array(F.struct(null_item.alias("i"), null_item.alias("j")))
-    singles = F.transform(
-        F.col("its"), lambda x: F.struct(x.alias("i"), null_item.alias("j"))
+    # the sentinel (null, null) and the singles (x, null) are one explode of
+    # [null, *its]; the pairs (x, y), x < y, are bucket_pairs of the sorted
+    # array
+    marks = baskets.select(
+        F.explode(F.concat(F.array(null_item), F.col("its"))).alias("i"), null_item.alias("j")
     )
-    pairs_arr = F.flatten(
-        F.transform(
-            F.col("its"),
-            lambda x, i: F.transform(
-                F.slice(F.col("its"), i + F.lit(2), F.size(F.col("its"))),
-                lambda y: F.struct(x.alias("i"), y.alias("j")),
-            ),
-        )
-    )
+    pairs = bucket_pairs(baskets.select(F.col("its").alias("ds")), "i", "j")
     counted = (
-        baskets.select(F.explode(F.concat(sentinel, singles, pairs_arr)).alias("e"))
-        .groupBy(F.col("e.i").alias("i"), F.col("e.j").alias("j"))
+        marks.unionByName(pairs)
+        .groupBy("i", "j")
         .agg(F.count(F.lit(1)).alias("c"))
         .transform(materialize_lazy)
     )

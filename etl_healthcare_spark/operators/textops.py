@@ -19,6 +19,7 @@ from ..functions.text import (
     word_shingles,
 )
 from ..functions.materialize import materialize
+from .dedup import bucket_pairs
 
 
 def text_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -841,6 +842,20 @@ def _doc_span_keys(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFra
     )
 
 
+def _rare_span_pairs(spans: DataFrame, max_span_df: int) -> DataFrame:
+    """(a, b), a < b: the distinct doc pairs sharing a RARE span.  ``spans``
+    is (doc_id, h) with one row per distinct (doc, span); each span with
+    2 <= document frequency <= ``max_span_df`` collects its sorted doc list
+    and ``bucket_pairs`` expands it in-task, so pair volume is bounded by
+    max_span_df x |spans| — never an open posting self-join."""
+    buckets = (
+        spans.groupBy("h")
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
+        .where((F.size("ds") >= 2) & (F.size("ds") <= max_span_df))
+    )
+    return bucket_pairs(buckets.select("ds"), "a", "b").distinct()
+
+
 def containment_pairs(
     df: DataFrame,
     text_col: str,
@@ -856,8 +871,8 @@ def containment_pairs(
 
     Blocking (the scale story): candidate pairs come ONLY from RARE shared
     k-gram spans (2 <= document frequency <= ``max_span_df``), expanded
-    IN-BUCKET from each rare span's collected doc list (the
-    dedup_minhash_lsh shape — never an open self-join), so pair volume is
+    IN-BUCKET from each rare span's collected doc list (_rare_span_pairs,
+    the dedup_minhash_lsh shape — never an open self-join), so pair volume is
     bounded by sum over rare spans of df^2 <= max_span_df * |spans|, linear
     in corpus size.  The intersection then runs candidate-bounded and
     MAP-SIDE: each doc's distinct span set is collected ONCE into a per-doc
@@ -879,27 +894,7 @@ def containment_pairs(
         .select("doc_id", F.array_distinct("hs").alias("hs"))
         .transform(materialize)
     )
-    spans = arrs.select("doc_id", F.explode("hs").alias("h"))
-    cand = (
-        spans.groupBy("h")
-        .agg(F.collect_list("doc_id").alias("ds"))
-        .where((F.size("ds") >= 2) & (F.size("ds") <= max_span_df))
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "ds",
-                        lambda a: F.transform(
-                            "ds", lambda b: F.struct(a.alias("a"), b.alias("b"))
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .where(F.col("p.a") < F.col("p.b"))
-        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .distinct()
-    )
+    cand = _rare_span_pairs(arrs.select("doc_id", F.explode("hs").alias("h")), max_span_df)
     # both array joins are hinted MERGE: every input descends from an
     # aggregation, so its STATIC size estimate is tiny and Spark would pick
     # a broadcast that OOMs the driver at corpus scale (the sf1.0 lesson).
@@ -1273,10 +1268,11 @@ def longest_shared_run(
     Shape (the round-7 rewrite, after the round-6 sf3 probe measured the
     relational form at 6.2x wall time on 3x data): candidate pairs come from
     rare shared spans (2 <= df <= ``max_span_df``) via IN-BUCKET expansion
-    (the containment_pairs shape — never an open posting self-join), each
-    doc's POSITIONED hash array rides along the candidate row through two
-    merge-hinted array joins, and the run detection folds IN-TASK over the
-    two arrays (Arrow mapInPandas, dict-matched, one sorted diagonal pass).
+    (_rare_span_pairs, as in containment_pairs — never an open posting
+    self-join), each doc's POSITIONED hash array rides along the candidate
+    row through two merge-hinted array joins, and the run detection folds
+    IN-TASK over the two arrays (Arrow mapInPandas, dict-matched, one sorted
+    diagonal pass).
     The old shape joined candidate pairs back onto the exploded position
     stream and windowed over the match rows — two shuffles whose volume
     (sum over pairs of per-doc positions, then per-pair matches) grows
@@ -1292,26 +1288,8 @@ def longest_shared_run(
     """
     # positioned per-doc hash array (position = array index), ONE row per doc
     arrs = _doc_span_keys(df, text_col, id_col, k).transform(materialize)
-    spans = arrs.select("doc_id", F.explode(F.array_distinct("hs")).alias("h"))
-    cand = (
-        spans.groupBy("h")
-        .agg(F.collect_list("doc_id").alias("ds"))
-        .where((F.size("ds") >= 2) & (F.size("ds") <= max_span_df))
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "ds",
-                        lambda a: F.transform(
-                            "ds", lambda b: F.struct(a.alias("a"), b.alias("b"))
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .where(F.col("p.a") < F.col("p.b"))
-        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .distinct()
+    cand = _rare_span_pairs(
+        arrs.select("doc_id", F.explode(F.array_distinct("hs")).alias("h")), max_span_df
     )
     # merge hints: see containment_pairs — the candidate list and the per-doc
     # array frames must never be broadcast (static estimates tiny, actual

@@ -29,6 +29,7 @@ from pyspark.sql import Window as W
 
 from ..datasets import OBSERVATIONS_ORACLE_CTE, load_table, observations
 from ..functions.packing import unpack_hi, unpack_lo
+from .queries import observations_by_patient
 
 
 @dataclass
@@ -126,6 +127,20 @@ def q1_get_patient(spark, sf_dir):
     )
 
 
+def _q2_timeline(obs: DataFrame) -> DataFrame:
+    """The library Q2 read (``plans/queries.observations_by_patient``) that
+    both Q2 queries serve, projected to the oracle's columns."""
+    return observations_by_patient(
+        obs,
+        "t3",
+        "p13",
+        ts_from="2024-01-05 00:00:00",
+        ts_to="2024-01-25 00:00:00",
+        limit=25,
+        tiebreak_col="obsId",
+    ).select("obsId", "code", "value", F.unix_micros("effectiveDateTime").alias("eff_us"))
+
+
 @register(
     "q2_observations_by_patient",
     sql=WITH_OBS
@@ -141,18 +156,7 @@ def q1_get_patient(spark, sf_dir):
     "(api-query/src/handler.ts:64-108).",
 )
 def q2_observations_by_patient(spark, sf_dir):
-    o = observations(spark, sf_dir)
-    return (
-        o.where(
-            (F.col("tenantId") == "t3")
-            & (F.col("patientId") == "p13")
-            & (F.col("effectiveDateTime") >= F.lit("2024-01-05 00:00:00"))
-            & (F.col("effectiveDateTime") <= F.lit("2024-01-25 00:00:00"))
-        )
-        .orderBy("effectiveDateTime", "obsId")
-        .limit(25)
-        .select("obsId", "code", "value", F.unix_micros("effectiveDateTime").alias("eff_us"))
-    )
+    return _q2_timeline(observations(spark, sf_dir))
 
 
 @register(
@@ -204,18 +208,7 @@ def q2_partitioned_store(spark, sf_dir):
         observations(spark, sf_dir).write.mode("overwrite").partitionBy("tenantId").parquet(
             f"{d}/obs_store"
         )
-    store = spark.read.parquet(f"{d}/obs_store")
-    return (
-        store.where(
-            (F.col("tenantId") == "t3")
-            & (F.col("patientId") == "p13")
-            & (F.col("effectiveDateTime") >= F.lit("2024-01-05 00:00:00"))
-            & (F.col("effectiveDateTime") <= F.lit("2024-01-25 00:00:00"))
-        )
-        .orderBy("effectiveDateTime", "obsId")
-        .limit(25)
-        .select("obsId", "code", "value", F.unix_micros("effectiveDateTime").alias("eff_us"))
-    )
+    return _q2_timeline(spark.read.parquet(f"{d}/obs_store"))
 
 
 @register(

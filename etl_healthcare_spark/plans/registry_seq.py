@@ -125,7 +125,7 @@ def _pairs_oracle() -> str:
     sql=_pairs_oracle(),
     doc="Market-basket frequent pairs over coarsened parts-per-order with "
     "exact integer lift: pairs expand IN-TASK from per-basket sorted item "
-    "arrays (the dedup-LSH combinator, operators/dedup.py:133) — never a "
+    "arrays (operators/dedup.py::bucket_pairs, the LSH expansion) — never a "
     "self-join of the exploded item table — so volume is sum(|basket|^2) "
     "under the basket cap, not |items|^2.  Item supports and the basket "
     "count ride broadcasts onto the pair counts.  Output is bounded by the "

@@ -3,8 +3,6 @@ libs/adapters/csv/labx.test.ts and libs/adapters/hl7/v2.test.ts (SURVEY §5)."""
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
 from etl_healthcare_spark.sources.csv_labx import parse_labx_csv
 from etl_healthcare_spark.sources.hl7 import parse_hl7_messages, parse_hl7v2
 

@@ -4,7 +4,6 @@ skew profiling, audio windows."""
 
 import struct
 
-import pytest
 from pyspark.sql import functions as F
 
 from etl_healthcare_spark.operators.dedup import minhash_cross_pairs

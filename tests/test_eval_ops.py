@@ -302,7 +302,6 @@ def test_roc_curve_matches_brute_force(spark, tmp_path):
         tp, fp = tp + np_, fp + (n - np_)
         expect[b * 50000] = (n, tp, fp, tp * 10**6 // pos, fp * 10**6 // neg,
                              (fp - fp0) * (tp + tp0))
-    from etl_healthcare_spark.plans.registry import REGISTRY
 
     out = {r.thresh_ppm: r for r in REGISTRY["eval_roc_curve"].fn(spark, str(tmp_path)).collect()}
     assert set(out) == set(expect)
@@ -325,7 +324,6 @@ def test_threshold_f1_matches_brute_force(spark, tmp_path):
     scored = [_score(k) for k in keys]
     n = len(scored)
     pos = sum(lab for _, lab in scored)
-    from etl_healthcare_spark.plans.registry import REGISTRY
 
     out = {
         r.thresh_ppm: r
@@ -350,7 +348,6 @@ def test_calibration_ece_matches_brute_force(spark, tmp_path):
         b = min(p // 100000, 9)
         n, np_, sp = bins.get(b, (0, 0, 0))
         bins[b] = (n + 1, np_ + lab, sp + p)
-    from etl_healthcare_spark.plans.registry import REGISTRY
 
     out = {
         r.bin: r for r in REGISTRY["eval_calibration_ece"].fn(spark, str(tmp_path)).collect()
@@ -388,7 +385,6 @@ def test_gini_feature_rank_matches_brute_force(spark, tmp_path):
         "status": [r[1] for r in rows],
         "month": [str(r[2].month) for r in rows],
     }
-    from etl_healthcare_spark.plans.registry import REGISTRY
 
     out = {r.feature: r for r in REGISTRY["ml_gini_feature_rank"].fn(spark, str(tmp_path)).collect()}
     assert set(out) == {"priority", "status", "month"}
@@ -421,8 +417,6 @@ def test_eval_queries_scan_once(spark):
     # regressed to union re-reads
     import contextlib
     import io
-
-    from etl_healthcare_spark.plans.registry import REGISTRY
 
     for name in ("eval_roc_curve", "eval_threshold_f1", "eval_calibration_ece",
                   "ml_gini_feature_rank"):

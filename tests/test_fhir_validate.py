@@ -3,8 +3,6 @@ the mapped FHIR resource passes the R4-min conformance gate."""
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
 from etl_healthcare_spark.operators.fhir import map_to_fhir
 from etl_healthcare_spark.operators.validate import (
     validate_dto,

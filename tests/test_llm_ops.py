@@ -107,8 +107,6 @@ def test_multimodal_plumbing(spark):
     assert decoded[1].feat_mean is not None and decoded[2].feat_mean is None
 
     # pseudo-features must be requested explicitly — no silent fake kernel
-    import pytest
-
     with pytest.raises(TypeError):
         decode_features(df, "id", "payload")
     with pytest.raises(ValueError):
@@ -233,18 +231,22 @@ _GEOMETRY_KERNELS = {
 @pytest.mark.parametrize(
     "name,case",
     [(k, c) for k in _PAYLOAD_KERNELS for c in ("null", "junk", "empty")]
-    + [(k, "empty") for k in _GEOMETRY_KERNELS],
+    + [(k, c) for k in _GEOMETRY_KERNELS for c in ("null", "empty")],
 )
 def test_kernel_contract_null_junk_and_empty_input(spark, name, case):
     """Every Arrow kernel: a NULL or an undecodable payload gives one row of
-    NULL fields (a fan-out kernel gives none), never an error; an empty
-    input gives an empty frame with the declared schema."""
+    NULL fields (a fan-out kernel gives none), never an error; a NULL in
+    either input of a geometry kernel gives no row (its schema declares
+    every field non-nullable); an empty input gives an empty frame with the
+    declared schema."""
     from etl_healthcare_spark.operators import multimodal as mm
 
     kernel = getattr(mm, name)
     if name in _GEOMETRY_KERNELS:
         schema_name, ddl, cols = _GEOMETRY_KERNELS[name]
-        out = kernel(spark.createDataFrame([], ddl), "id", *cols)
+        rows = [] if case == "empty" else [(1, None, 30), (2, 30, None), (3, None, None)]
+        out = kernel(spark.createDataFrame(rows, ddl), "id", *cols)
+        non_null = None
     else:
         schema_name, non_null = _PAYLOAD_KERNELS[name]
         payload = {"null": None, "junk": bytearray(b"junk")}.get(case)
@@ -412,7 +414,7 @@ def _clustered_vectors(spark, per_cluster=40, dim=12):
 def test_ivf_full_probe_equals_exact_topk(spark):
     """nprobe == nlist covers every cell: IVF must reproduce brute-force
     top-k on ANY data — the machinery exactness gate sim_ivf_topk registers."""
-    from etl_healthcare_spark.operators.similarity import ivf_topk, topk_cosine
+    from etl_healthcare_spark.operators.similarity import ivf_topk
 
     df = _clustered_vectors(spark)
     q = [1.0] + [0.02] * 11
@@ -425,7 +427,7 @@ def test_ivf_partial_probe_full_recall_on_clustered_data(spark):
     """On clustered data (the real-corpus case) one probed cell of three
     already holds every true neighbor: recall@10 == 1.0 at nprobe=1, with
     2/3 of the corpus never scored."""
-    from etl_healthcare_spark.operators.similarity import ivf_topk, topk_cosine
+    from etl_healthcare_spark.operators.similarity import ivf_topk
 
     df = _clustered_vectors(spark)
     q = [1.0] + [0.02] * 11

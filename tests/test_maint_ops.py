@@ -154,7 +154,6 @@ def test_pareto_skyline_frontier(spark, tmp_path):
     spark.createDataFrame(rows, "p_partkey long, p_size int, p_retailprice double").write.mode(
         "overwrite"
     ).parquet(str(tmp_path / "part.parquet"))
-    from etl_healthcare_spark.plans.registry import REGISTRY
 
     out = {r.size: r for r in REGISTRY["g34_pareto_skyline"].fn(spark, str(tmp_path)).collect()}
     assert set(out) == {50, 30, 10}
@@ -164,8 +163,6 @@ def test_pareto_skyline_frontier(spark, tmp_path):
 
 
 def test_table_fingerprint_order_insensitive_and_sensitive_to_change(spark, tmp_path):
-    import datetime
-
     base = [
         (1, 1, 10, 100, 5.0, 100.00, "N", "O", datetime.date(2024, 1, 1)),
         (2, 1, 11, 101, 3.0, 50.00, "R", "F", datetime.date(2024, 2, 2)),
@@ -176,7 +173,6 @@ def test_table_fingerprint_order_insensitive_and_sensitive_to_change(spark, tmp_
         " l_quantity double, l_extendedprice double, l_returnflag string,"
         " l_linestatus string, l_shipdate date"
     )
-    from etl_healthcare_spark.plans.registry import REGISTRY
 
     spark.createDataFrame(base, schema).write.mode("overwrite").parquet(
         str(tmp_path / "lineitem.parquet")

@@ -127,8 +127,6 @@ def test_opsdiag_plan_shapes(spark):
 
 
 def test_pit_scd2_picks_interval_valid_at_fact_time(spark, tmp_path):
-    import datetime
-
     t = lambda m: datetime.datetime(2024, 7, 1, 12, m, 0)  # noqa: E731
     rows = [
         # dim changes for user 3 (event_id % 5 == 0): attr 10.00 at :00,
@@ -158,8 +156,6 @@ def test_pit_scd2_picks_interval_valid_at_fact_time(spark, tmp_path):
 
 
 def test_delete_propagation_counts(spark, tmp_path):
-    import datetime
-
     ts = datetime.datetime(2024, 7, 1, 8, 0, 0)
     # users 3 and 100 are on the deletion list (user_id % 97 == 3)
     ev = [(i, ts, u, "e", 1.0) for i, u in enumerate([3, 3, 100, 5, 9, 42])]
@@ -182,8 +178,6 @@ def test_stream_debounce_matches_batch_and_carries_state_across_batches(spark, t
     """Two availableNow runs over a GROWING source directory prove the
     state carries: the second run sees only the new file, and an event
     within 60s of the FIRST run's last event is debounced."""
-    import datetime
-
     from etl_healthcare_spark.streaming.pipeline import debounce_stream
 
     t0 = datetime.datetime(2024, 6, 1, 12, 0, 0)

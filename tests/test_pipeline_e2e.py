@@ -5,7 +5,6 @@ import datetime as dt
 import threading
 
 import pytest
-from pyspark.sql import functions as F
 
 from etl_healthcare_spark.pipeline import run_batch_pipeline
 from etl_healthcare_spark.plans.queries import latest_observation

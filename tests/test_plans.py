@@ -969,7 +969,6 @@ def test_fuzzy_match_rare_gram_gate_broadcasts(spark):
     asserted on the UN-checkpointed candidate pipeline via
     _scored_candidates, and the final consumer plan is asserted join-hinted
     and sort-free separately."""
-    import io
     from contextlib import redirect_stdout
 
     from etl_healthcare_spark.datasets import load_table

@@ -292,6 +292,36 @@ def test_cc_star_matches_minlabel_on_random_graphs(spark, edges):
     assert star == minl
 
 
+# ---------------------------------------------------------------------------
+# bucket_pairs: the one in-bucket pair expansion vs itertools.combinations
+# ---------------------------------------------------------------------------
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    st.lists(
+        st.lists(st.integers(-50, 50), max_size=10, unique=True).map(sorted),
+        max_size=12,
+    )
+)
+def test_bucket_pairs_equals_combinations(spark, buckets):
+    """Every row's ds[i] < ds[j] pairs, i < j, each carrying the row's other
+    column, and nothing else: a 0- or 1-member bucket gives no pair, a
+    2-member bucket one, an n-member bucket n(n-1)/2."""
+    from collections import Counter
+    from itertools import combinations
+
+    from etl_healthcare_spark.operators.dedup import bucket_pairs
+
+    rows = list(enumerate([[], [7], [3, 9]] + buckets))
+    df = spark.createDataFrame(rows, "w long, ds array<long>")
+    out = bucket_pairs(df, "a", "b")
+    assert out.columns == ["w", "a", "b"]
+    got = Counter(tuple(r) for r in out.collect())
+    want = Counter((w, a, b) for w, ds in rows for a, b in combinations(ds, 2))
+    assert got == want
+
+
 # --- round-3 analytics properties -------------------------------------------
 
 

@@ -237,8 +237,6 @@ def test_semantic_collect_k_guard_raises_with_migration_note():
     """Past the driver-collect ceiling the arrow path must fail with the
     documented IVF-coarse-quantizer migration pointer, not a driver OOM
     (round-7 verdict item 5)."""
-    import pytest
-
     from etl_healthcare_spark.operators.clustering import (
         SEMANTIC_MAX_COLLECT_K,
         _guard_collect_k,

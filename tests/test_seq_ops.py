@@ -5,8 +5,6 @@ checked against brute-force pure-Python models."""
 
 from datetime import datetime, timedelta
 
-from pyspark.sql import functions as F
-
 PPM = 1_000_000
 PPB = 1_000_000_000
 

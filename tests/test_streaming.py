@@ -185,8 +185,6 @@ def test_dedup_stream_drops_redelivered_keys(spark, tmp_path):
 
 def test_interval_join_streams_bounds(spark, tmp_path):
     """Only right events in (left_ts, left_ts + horizon] pair up."""
-    import datetime as dt
-
     from etl_healthcare_spark.streaming.pipeline import interval_join_streams
 
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
@@ -286,8 +284,6 @@ def test_moments_stream_equals_batch_sketch(spark, tmp_path):
     """The incrementally-maintained (n, s, q) moment sketch after the full
     stream equals the batch aggregate — the exactly-once handoff that lets
     z-score flagging read a live sketch."""
-    import datetime as dt
-
     from etl_healthcare_spark.operators.anomaly import group_moments
     from etl_healthcare_spark.streaming.pipeline import moments_stream
 
@@ -391,8 +387,6 @@ def test_watermark_drops_late_rows_in_append_mode(spark, tmp_path):
     first advances the watermark past window 00:00, the second delivers a
     late row back into it; the emitted 00:00 counters must reflect only the
     on-time rows."""
-    from etl_healthcare_spark.streaming.pipeline import windowed_counters_stream
-
     src = tmp_path / "late_events"
     src.mkdir()
     schema = "event_id long, ts timestamp, event_type string, value double"
