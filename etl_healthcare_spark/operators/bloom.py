@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import doc_shingles, shingle_set
+
 K_HASHES = 4
 M_BITS = 20  # 2^20-bit space: 5 hex chars of the digest, exactly
 
@@ -72,16 +74,10 @@ def bloom_contamination(
 ) -> DataFrame:
     """Per-doc decontamination screen: exact 5-gram contamination next to the
     Bloom pre-screen's verdict, so the false-positive overhead is measurable.
-    Returns (id, n_shingles, n_hits, n_bloom_hits, contam_ppm, bloom_ppm)."""
-    from ..functions.text import word_shingles
-
-    def distinct_shingles(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(id_col), F.explode(F.array_distinct(word_shingles(F.col(text_col), k))).alias("s")
-        )
-
-    corpus_sh = distinct_shingles(corpus)
-    eval_sh = distinct_shingles(eval_df).select("s").distinct()
+    Returns (id, n_shingles, n_hits, n_bloom_hits, contam_ppm, bloom_ppm).
+    Both sides are shingled as in ngram_contamination."""
+    corpus_sh = doc_shingles(corpus, text_col, id_col, k)
+    eval_sh = shingle_set(eval_df, text_col, k)
     bloom = bloom_build(eval_sh, "s")
     screened = bloom_screen(corpus_sh, "s", bloom)
     exact_hits = corpus_sh.join(F.broadcast(eval_sh), "s").groupBy(id_col).agg(

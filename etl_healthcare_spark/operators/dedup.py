@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..functions.text import simhash16, word_shingles
 from ..functions.vectors import hyperplane_bucket_exact
 from ..functions.materialize import materialize
+from .exchange import fan_out
 
 
 def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
@@ -47,22 +48,9 @@ def minhash_signatures(
     ``ceil(n*width/64)`` sha256 digests per shingle — independent under the
     random-oracle model, so 16 minhashes cost 4 sha256 calls (see
     minhash_bands notes)."""
-    # repartition by doc: small single-file inputs otherwise run the whole
-    # hash stage on one core, and hashpartitioning(doc) already satisfies the
-    # downstream groupBy("doc") so the shuffle is not repeated.  Explicit
-    # partition count: AQE would coalesce a bare repartition("doc") down to
-    # ~2 tasks (it sizes by bytes) and serialize this CPU-bound stage.
-    # Shingle AFTER the exchange (round-11): a projection below the
-    # repartition evaluates MAP-SIDE at scan parallelism — the 16 MB-split
-    # local scan is 1 task, so the regex ran serially.  The shingles are one
-    # regex (word_shingles, no lambda), so the explode, the hashing and the
-    # per-doc min compile into one whole-stage code stage.
-    npart = df.sparkSession.sparkContext.defaultParallelism
-    sh = (
-        df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__raw"))
-        .repartition(npart, "doc")
-        .select("doc", F.explode(F.array_distinct(word_shingles(F.col("__raw"), 3))).alias("s"))
-    )
+    # the shingles are one regex (word_shingles, no lambda), so the explode,
+    # the hashing and the per-doc min compile into one whole-stage code stage
+    sh = doc_shingles(df.select(F.col(id_col).alias("doc"), text_col), text_col, "doc", 3)
     slices = 64 // width  # independent slices per sha256 hex digest
     # Slice the hex digest as BINARY before conv: its bytes are ASCII, so a
     # byte slice is the same text, but a binary substring is one array copy
@@ -112,13 +100,18 @@ def minhash_bands(
     groupBy(doc) takes the mins.  min over the distinct set == min over the
     multiset, so array_distinct before explode only shrinks the row count."""
     sig = minhash_signatures(df, text_col, id_col, n=bands * rows, width=width)
+    return _band_keys(sig, bands, rows)
+
+
+def _band_keys(sig: DataFrame, bands: int, rows: int) -> DataFrame:
+    """(doc, band, key) of a ``minhash_signatures`` frame: band b's key is
+    the concatenation of signature slots b*rows .. (b+1)*rows - 1."""
     band_cols = [
         F.concat(*[F.col(f"mh{i}") for i in range(b * rows, (b + 1) * rows)]).alias(f"band{b}")
         for b in range(bands)
     ]
-    wide = sig.select("doc", *band_cols)
     stack_expr = ", ".join(f"'{b}', band{b}" for b in range(bands))
-    return wide.selectExpr("doc", f"stack({bands}, {stack_expr}) AS (band, key)")
+    return sig.select("doc", *band_cols).selectExpr("doc", f"stack({bands}, {stack_expr}) AS (band, key)")
 
 
 # LSH bucket cap: a (band, key) bucket of n docs expands to n*(n-1)/2 pairs
@@ -204,12 +197,7 @@ def minhash_lsh_pairs(
 
 
 def simhash_fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    # repartition: fan the 16-bit-x-sha256-per-token compute out of a
-    # single-file partition.  NB: select AFTER repartition — the projection
-    # sits above the exchange, so the regex+sha stage already runs
-    # post-shuffle at full parallelism (unlike minhash_signatures' old
-    # select-then-repartition chain, plan-verified round-11)
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)).select(
+    return fan_out(df.select(id_col, text_col), id_col).select(
         F.col(id_col), simhash16(F.col(text_col)).alias("simhash")
     )
 
@@ -224,16 +212,24 @@ def simhash_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _distinct_shingles(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
-    """(doc, shingle) — the distinct k-word shingle set of every document,
-    fanned out of single-file partitions, regex post-shuffle (see
-    minhash_signatures note)."""
-    npart = df.sparkSession.sparkContext.defaultParallelism
-    return (
-        df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__raw"))
-        .repartition(npart, "doc")
-        .select("doc", F.explode(F.array_distinct(word_shingles(F.col("__raw"), k))).alias("shingle"))
+def doc_shingles(df: DataFrame, text_col: str, id_col: str, k: int, *carry: str) -> DataFrame:
+    """(id, *carry, s): one row per distinct k-word shingle (``word_shingles``)
+    of each document, the ``carry`` columns kept on every row.  The projected
+    frame is fanned out by id (``fan_out``) and shingled after the exchange,
+    so a per-document aggregate downstream needs no second exchange.  A
+    document below k tokens, or with a NULL text, has no rows."""
+    raw = df.select(id_col, *carry, F.col(text_col).alias("__raw"))
+    return fan_out(raw, id_col).select(
+        id_col, *carry, F.explode(F.array_distinct(word_shingles(F.col("__raw"), k))).alias("s")
     )
+
+
+def shingle_set(df: DataFrame, text_col: str, k: int) -> DataFrame:
+    """(s): the distinct k-word shingles over every text of ``df`` — the eval
+    side of the contamination operators.  Not fanned out: its rows feed a
+    DISTINCT keyed on the shingle, which a doc-keyed exchange cannot serve."""
+    raw = df.select(F.col(text_col).alias("__raw"))
+    return raw.select(F.explode(F.array_distinct(word_shingles(F.col("__raw"), k))).alias("s")).distinct()
 
 
 def _jaccard_tail(inter: DataFrame, sizes: DataFrame, threshold: float) -> DataFrame:
@@ -269,35 +265,24 @@ def ngram_jaccard_pairs(
     jaccard is a documented lower bound for pairs touching dropped shingles).
     For the exact production shape, verify LSH candidates instead:
     ``ngram_jaccard_verify(df, minhash_lsh_pairs(df, ...))``."""
-    sh = (
-        df.select(
-            F.col(id_col).alias("doc"),
-            F.col(block_col).alias("blk"),
-            F.col(text_col).alias("__raw"),
-        )
-        .repartition(df.sparkSession.sparkContext.defaultParallelism, "doc")
-        .select(
-            "doc",
-            "blk",
-            F.explode(F.array_distinct(word_shingles(F.col("__raw"), k))).alias("shingle"),
-        )
-    )
+    blocked = df.select(F.col(id_col).alias("doc"), F.col(block_col).alias("blk"), text_col)
+    sh = doc_shingles(blocked, text_col, "doc", k, "blk")
     sizes = sh.groupBy("doc").agg(F.count("*").alias("n_shingles"))
     joinable = sh
     if max_df is not None:
         rare = (
-            sh.groupBy("blk", "shingle")
+            sh.groupBy("blk", "s")
             .agg(F.count("*").alias("df"))
             .where(F.col("df") <= max_df)
-            .select("blk", "shingle")
+            .select("blk", "s")
         )
-        joinable = sh.join(rare, ["blk", "shingle"], "left_semi")
+        joinable = sh.join(rare, ["blk", "s"], "left_semi")
     a, b = joinable.alias("a"), joinable.alias("b")
     inter = (
         a.join(
             b,
             (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.s") == F.col("b.s"))
             & (F.col("a.doc") < F.col("b.doc")),
         )
         .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
@@ -320,14 +305,14 @@ def ngram_jaccard_verify(
     keys on document ids (plus shingle on the already-pair-bounded side), and
     no shingle posting list is ever self-joined.  Cost is
     O(|pairs| x shingles/doc), independent of corpus-wide shingle skew."""
-    sh = _distinct_shingles(df, text_col, id_col, k)
+    sh = doc_shingles(df.select(F.col(id_col).alias("doc"), text_col), text_col, "doc", k)
     sizes = sh.groupBy("doc").agg(F.count("*").alias("n_shingles"))
     p = pairs.select("doc_a", "doc_b")
-    a = sh.select(F.col("doc").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc").alias("doc_b"), "shingle")
+    a = sh.select(F.col("doc").alias("doc_a"), "s")
+    b = sh.select(F.col("doc").alias("doc_b"), "s")
     inter = (
         p.join(a, "doc_a")
-        .join(b, ["doc_b", "shingle"])
+        .join(b, ["doc_b", "s"])
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("inter"))
     )
@@ -369,10 +354,8 @@ def embedding_near_dup_pairs(
     # fan the probe side out: when the other side broadcasts, the pair join's
     # parallelism is the STREAM side's partitioning — a single-file corpus
     # would evaluate all O(n^2/2^b) pair predicates in a handful of tasks
-    # (measured: 4 tasks grinding at sf1.0).  Hash on id: cheap, even, and
-    # irrelevant to the join key (the bucket rides along).
-    npart = df.sparkSession.sparkContext.defaultParallelism
-    a, b = v.repartition(npart, "id").alias("a"), v.alias("b")
+    # (measured: 4 tasks grinding at sf1.0).  The bucket rides along.
+    a, b = fan_out(v, "id").alias("a"), v.alias("b")
     cond = F.col("a.id") < F.col("b.id")
     if block_col:
         cond = cond & (F.col("a.blk") == F.col("b.blk"))
@@ -710,25 +693,8 @@ def ngram_contamination(
     (benchmarks are MBs, corpora are TBs) — broadcast them, so the corpus
     pass is one scan + broadcast-hash semi-count, no corpus shuffle besides
     the per-doc count."""
-
-    def distinct_shingles(df: DataFrame, fan_out: bool) -> DataFrame:
-        # corpus side (round-11): repartition the raw text by doc FIRST —
-        # hashpartitioning(id) satisfies the downstream per-doc groupBy
-        # (subset rule), so the exploded shingle stream never crosses an
-        # exchange (it shuffled n_shingles rows before; now one text-sized
-        # exchange) and the regex/shingle stage runs at full parallelism.
-        # The eval side stays un-fanned: its rows feed a DISTINCT keyed on
-        # the shingle, which a doc-keyed exchange cannot serve.
-        src = df.select(F.col(id_col), F.col(text_col).alias("__raw"))
-        if fan_out:
-            src = src.repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
-        # a doc below k tokens has no shingles and so no rows
-        return src.select(
-            F.col(id_col), F.explode(F.array_distinct(word_shingles(F.col("__raw"), k))).alias("s")
-        )
-
-    corpus_sh = distinct_shingles(corpus, fan_out=True)
-    eval_sh = distinct_shingles(eval_df, fan_out=False).select("s").distinct()
+    corpus_sh = doc_shingles(corpus, text_col, id_col, k)
+    eval_sh = shingle_set(eval_df, text_col, k)
     # ONE corpus pass (round-10): the old total/hits branches each re-ran
     # the corpus tokenize + shingle explode (the regex-heavy stage) and then
     # joined the two per-doc counts back together.  A broadcast LEFT join
@@ -770,13 +736,7 @@ def minhash_scored_pairs(
     keys on doc id against the (corpus-sized but narrow) signature table."""
     n = bands * rows
     sig = minhash_signatures(df, text_col, id_col, n=n, width=width).transform(materialize)
-    band_cols = [
-        F.concat(*[F.col(f"mh{i}") for i in range(b * rows, (b + 1) * rows)]).alias(f"band{b}")
-        for b in range(bands)
-    ]
-    stack_expr = ", ".join(f"'{b}', band{b}" for b in range(bands))
-    bands_df = sig.select("doc", *band_cols).selectExpr("doc", f"stack({bands}, {stack_expr}) AS (band, key)")
-    buckets = _lsh_buckets(bands_df, max_bucket, observation)
+    buckets = _lsh_buckets(_band_keys(sig, bands, rows), max_bucket, observation)
     pairs = bucket_pairs(buckets.select("ds")).distinct()
     a = sig.select(F.col("doc").alias("doc_a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(n)])
     b = sig.select(F.col("doc").alias("doc_b"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(n)])

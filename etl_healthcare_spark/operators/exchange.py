@@ -1,4 +1,5 @@
-"""Size-aware shuffle sizing for near-unique-key exact aggregations.
+"""Exchange sizing: the size-aware shuffle of near-unique-key exact
+aggregations, and the per-document fan-out (``fan_out``).
 
 A reduce task that hash-aggregates a NEAR-UNIQUE key (zero/low reduction —
 e.g. candidate-key profiling, where the grouping set IS the table's key)
@@ -78,3 +79,25 @@ def sized_shuffle_partitions(
     if stats_bytes >= df.sparkSession._jconf.defaultSizeInBytes():
         return session_default
     return max(session_default, min(cap, -(-stats_bytes // target_stats_bytes)))
+
+
+def fan_out(df: DataFrame, key: str) -> DataFrame:
+    """``df`` hash-partitioned on ``key`` into ``defaultParallelism``
+    partitions: the exchange in front of every CPU-bound per-document stage
+    (a tokenize, shingle or hash regex chain).  A single-file input arrives
+    as one or two scan partitions, and the stage above it otherwise runs on
+    that many cores (measured 11.3x wall at 3x data on the sf3->sf9 probe,
+    SCALE.md §49).
+
+    * The partition count is explicit: AQE would coalesce a bare
+      ``repartition(key)`` by its pre-explode bytes down to a task or two
+      and serialise the CPU-bound stage again.
+    * It hashes on the key, so a per-document aggregate downstream (any
+      grouping whose keys include ``key``) is already satisfied and plans
+      no second exchange.
+    * Callers project ``df`` to the columns the stage reads (the id and the
+      text) before the call and run the regex after it: a projection below
+      the exchange evaluates map-side, at scan parallelism.
+
+    The engine's only reader of ``defaultParallelism``."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)

@@ -61,6 +61,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..functions.materialize import materialize
+from .exchange import fan_out
 
 
 def _grams(col, q: int = 3):
@@ -88,24 +89,12 @@ def _scored_candidates(
     plan tests can assert the rarity-gate shape (broadcast gate, hinted
     shuffle-hash candidate join) that fuzzy_match_join's checkpoint hides
     from the final consumer plan."""
-    # repartition BEFORE the explode: a single-file side arrives as 1-2 scan
-    # partitions (maxPartitionBytes), so the gram explode + df count + joins
-    # all ran on 1-2 of 32 cores — measured 11.3× wall at 3× names on the
-    # sf3→sf9 probe purely from lost parallelism (SCALE.md §49; same defect
-    # class as minhash_signatures' pre-explode repartition, operators/
-    # dedup.py).  Explicit count: AQE would coalesce by pre-explode BYTES
-    # and serialize the CPU-bound gram stage.
-    npart = dirty.sparkSession.sparkContext.defaultParallelism
-    dg = (
-        dirty.select(F.col(dirty_id).alias("did"), F.col(dirty_name).alias("dname"))
-        .repartition(npart, F.col("did"))
-        .withColumn("gram", F.explode(_grams(F.col("dname"), q)))
-    )
-    cg = (
-        clean.select(F.col(clean_id).alias("cid"), F.col(clean_name).alias("cname"))
-        .repartition(npart, F.col("cid"))
-        .withColumn("gram", F.explode(_grams(F.col("cname"), q)))
-    )
+    # fan both sides out BEFORE the gram explode: on 1-2 scan partitions the
+    # explode, the df count and the joins ran on 1-2 of 32 cores (SCALE.md §49)
+    dg = fan_out(dirty.select(F.col(dirty_id).alias("did"), F.col(dirty_name).alias("dname")), "did")
+    dg = dg.withColumn("gram", F.explode(_grams(F.col("dname"), q)))
+    cg = fan_out(clean.select(F.col(clean_id).alias("cid"), F.col(clean_name).alias("cname")), "cid")
+    cg = cg.withColumn("gram", F.explode(_grams(F.col("cname"), q)))
     dfreq = cg.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
     if rare_df_pct is None:
         rare = dfreq.where(F.col("df") <= max_gram_df).select("gram")

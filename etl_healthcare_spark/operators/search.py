@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..functions.text import tokens
 from ..functions.materialize import materialize
 from .dedup import bucket_pairs
+from .exchange import fan_out
 
 # BM25 constants k1=1.2, b=0.75 as exact rationals: with dl/avgdl = dl*N/L,
 #   tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))  ==  22*L*tf / (10*L*tf + 3*L + 9*dl*N)
@@ -60,13 +61,11 @@ def bm25_scores(
 
         return f
 
-    # repartition: fan the regex tokenization out of a single-file scan
-    # partition (same note as dedup.simhash_fingerprints), then checkpoint
-    # the skinny (id, dl, tf...) frame so the stats aggregate and the
-    # scoring pass both read it instead of re-tokenizing the corpus
-    toks = docs.repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    ).select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("t"))
+    # checkpoint the skinny (id, dl, tf...) frame so the stats aggregate and
+    # the scoring pass both read it instead of re-tokenizing the corpus
+    toks = fan_out(docs.select(id_col, text_col), id_col).select(
+        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("t")
+    )
     base = toks.select(
         "id",
         F.size("t").alias("dl"),
@@ -87,9 +86,12 @@ def bm25_scores(
         idf = ((2 * F.col("n") - 2 * F.col(f"df{i}") + 1).cast("double")) / (
             (2 * F.col(f"df{i}") + 1).cast("double")
         )
-        tf = F.col(f"tf{i}")
-        tfn = (22 * F.col("l") * tf).cast("double") / (
-            (10 * F.col("l") * tf + 3 * F.col("l") + 9 * F.col("dl") * F.col("n")).cast("double")
+        tf, l = F.col(f"tf{i}"), F.col("l")
+        # in a corpus without a single token (l = 0) every doc has dl = 0
+        # and would divide 0 by 0: the (l = 0) term makes it 0 / 1 = 0.  For
+        # l > 0 the divisor is >= 3l and the term adds 0.
+        tfn = (22 * l * tf).cast("double") / (
+            (10 * l * tf + 3 * l + 9 * F.col("dl") * F.col("n") + (l == 0).cast("long")).cast("double")
         )
         return idf * tfn
 
@@ -126,7 +128,7 @@ def bm25_oracle_sql(terms: list[str], k: int = 10, src: str = "documents") -> st
     )
     term_exprs = [
         f"(CAST(2*n - 2*df{i} + 1 AS DOUBLE) / CAST(2*df{i} + 1 AS DOUBLE))"
-        f" * (CAST(22*l*tf{i} AS DOUBLE) / CAST(10*l*tf{i} + 3*l + 9*dl*n AS DOUBLE))"
+        f" * (CAST(22*l*tf{i} AS DOUBLE) / CAST(10*l*tf{i} + 3*l + 9*dl*n + CAST(l = 0 AS BIGINT) AS DOUBLE))"
         for i in range(len(terms))
     ]
     score = " + ".join(term_exprs)  # SQL + is left-associative: same order
@@ -176,18 +178,13 @@ def index_build(
     # consume the (term, doc, tf) frame — un-materialized, each re-ran the
     # corpus tokenize + explode + aggregate (2 full passes; round-10).  The
     # frame is exactly the postings being written, so the materialization
-    # is output-sized, not an extra copy class.
-    # Round-11: repartition the raw (doc, text) BEFORE tokenizing —
-    # hashpartitioning(doc) satisfies the (term, doc) grouping (subset
-    # rule), so the plan still has exactly ONE exchange, but it now carries
-    # raw text instead of the exploded token stream and the regex+explode+
-    # aggregate run post-shuffle at full parallelism (probed 0.50-0.67 ->
-    # 0.22-0.31 s min-of-6 for the tf frame at sf0.1; plan-verified 1
-    # exchange both ways).
-    npart = docs.sparkSession.sparkContext.defaultParallelism
+    # is output-sized, not an extra copy class.  The fan-out by doc
+    # satisfies the (term, doc) grouping, so the plan has ONE exchange and it
+    # carries the raw text, not the exploded token stream (probed 0.50-0.67
+    # -> 0.22-0.31 s min-of-6 for the tf frame at sf0.1).
+    raw = docs.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__raw"))
     tf = (
-        docs.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__raw"))
-        .repartition(npart, "doc")
+        fan_out(raw, "doc")
         .select("doc", F.explode(tokens(F.col("__raw"))).alias("term"))
         .groupBy("term", "doc")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -352,14 +349,9 @@ def related_docs(
 
     from ..functions.text import span_key, word_shingles
 
-    # repartition the raw text by doc BEFORE the shingle+sha chain
-    # (round-11, minhash_signatures' rule): the chain otherwise runs at scan
-    # parallelism — ONE task on a single-file local input.  At corpus scale
-    # this adds one text-sized exchange, ~2 % of the posting/pair shuffle
-    # volume this operator's own math bounds at ~45x the corpus.
-    raw = docs.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__raw")).repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, "doc"
-    )
+    # the fan-out by doc is one text-sized exchange, ~2 % of the posting/pair
+    # shuffle volume this operator's own math bounds at ~45x the corpus
+    raw = fan_out(docs.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__raw")), "doc")
     # shingles join/aggregate as 48-bit sha256-prefix int64 keys, not raw
     # strings: at corpus scale the posting shuffle is the dominant byte
     # volume and an 8-byte key beats a ~40-byte text shingle ~5x (collisions

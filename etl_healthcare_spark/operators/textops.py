@@ -20,6 +20,7 @@ from ..functions.text import (
 )
 from ..functions.materialize import materialize
 from .dedup import bucket_pairs
+from .exchange import fan_out
 
 
 def text_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -62,9 +63,7 @@ def token_counts(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 def fingerprints(df: DataFrame, text_col: str, id_col: str, k: int = 5) -> DataFrame:
     """Per doc, the min 16-hex sha256 prefix over its k-word shingles; NULL
     for a doc below k tokens."""
-    raw = df.select(F.col(id_col), F.col(text_col).alias("__raw")).repartition(
-        df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    )
+    raw = fan_out(df.select(F.col(id_col), F.col(text_col).alias("__raw")), id_col)
     hashed = F.transform(
         word_shingles(F.col("__raw"), k), lambda s: F.substring(F.sha2(s, 256), 1, 16)
     )
@@ -830,15 +829,12 @@ def bpe_apply_oracle_sql(rounds: int = 3, max_word_len: int = 16, src: str = "do
 
 def _doc_span_keys(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
     """(doc_id, hs): each doc's k-gram span keys in text order, one row per
-    doc.  The raw text is repartitioned by doc BEFORE the shingle+sha256
-    chain (round-11, minhash_signatures' rule): the chain otherwise runs at
-    scan parallelism — ONE task on a single-file local input — inside the
-    callers' materialization job, and the checkpointed per-doc array blocks
-    inherit that single partition for every downstream stage."""
-    return (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__raw"))
-        .repartition(df.sparkSession.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", F.transform(word_shingles(F.col("__raw"), k), span_key).alias("hs"))
+    doc, fanned out by doc (``fan_out``) before the shingle+sha256 chain:
+    the callers checkpoint these per-doc arrays, and every downstream stage
+    inherits their partitioning."""
+    raw = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__raw"))
+    return fan_out(raw, "doc_id").select(
+        "doc_id", F.transform(word_shingles(F.col("__raw"), k), span_key).alias("hs")
     )
 
 

@@ -46,6 +46,14 @@ def test_no_direct_localcheckpoint_outside_the_gate():
     assert not offenders, f"route these through functions/materialize: {sorted(offenders)}"
 
 
+def test_no_default_parallelism_outside_fan_out():
+    """Only operators/exchange.py may read ``defaultParallelism``: every
+    per-document stage fans out through ``exchange.fan_out``, so the
+    partition-count rule lives in one place."""
+    offenders = {(f, i) for f, i in _sites(r"defaultParallelism") if f != "operators/exchange.py"}
+    assert not offenders, f"fan out through operators/exchange.fan_out: {sorted(offenders)}"
+
+
 # SCALE.md §50: a lazy persist whose first consumer launches CONCURRENT leaf
 # stages is raced — each stage recomputes the unmaterialized partitions.
 # Lazy is allowed ONLY where the first consumer is a lone sequential driver

@@ -322,6 +322,44 @@ def test_bucket_pairs_equals_combinations(spark, buckets):
     assert got == want
 
 
+# ---------------------------------------------------------------------------
+# doc_shingles: the one per-document shingle set vs a Python tokenizer
+# ---------------------------------------------------------------------------
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    texts=st.lists(
+        st.one_of(
+            st.none(),
+            st.lists(st.sampled_from(["a", "B", "c1", "x-y", "!!", " ", "."]), max_size=12).map("".join),
+            st.lists(st.sampled_from(["a", "b"]), max_size=8).map(" ".join),
+        ),
+        max_size=8,
+    ),
+    k=st.integers(1, 4),
+)
+def test_doc_shingles_equals_python_shingle_set(spark, texts, k):
+    """One row per distinct k-token shingle of each doc, the carried column
+    on every row; a NULL, empty or shorter-than-k text gives no rows, and a
+    repeated shingle one."""
+    import re
+
+    from etl_healthcare_spark.operators.dedup import doc_shingles
+
+    rows = [(i, f"g{i % 3}", t) for i, t in enumerate([None, "", "one two", "a b a b a b"] + texts)]
+    df = spark.createDataFrame(rows, "id long, grp string, text string")
+    out = doc_shingles(df, "text", "id", k, "grp")
+    assert out.columns == ["id", "grp", "s"]
+    got = sorted(tuple(r) for r in out.collect())
+
+    def shingles(text):
+        toks = re.findall("[a-z0-9]+", (text or "").lower())
+        return {" ".join(toks[j:j + k]) for j in range(len(toks) - k + 1)}
+
+    assert got == sorted((i, g, s) for i, g, t in rows for s in shingles(t))
+
+
 # --- round-3 analytics properties -------------------------------------------
 
 

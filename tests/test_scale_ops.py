@@ -10,7 +10,7 @@ from etl_healthcare_spark.operators.anomaly import zscore_flags
 from etl_healthcare_spark.operators.bucketing import morton_key
 from etl_healthcare_spark.operators.clustering import kmeans_int8
 from etl_healthcare_spark.operators.profile import profile_columns
-from etl_healthcare_spark.operators.search import bm25_topk
+from etl_healthcare_spark.operators.search import bm25_scores, bm25_topk
 from etl_healthcare_spark.operators.sketch import hll_distinct, hll_estimate, hll_registers
 
 
@@ -50,6 +50,14 @@ def test_bm25_rare_term_outweighs_common(spark):
     )
     scores = {r.id: r.score for r in bm25_topk(docs, ["rare", "common"], k=10).collect()}
     assert scores[1] > scores[2]
+
+
+def test_bm25_corpus_without_tokens_scores_zero(spark):
+    # total length l = 0: the "" doc's tf normaliser would divide 0 by 0
+    docs = spark.createDataFrame([(1, None), (2, "")], "doc_id long, text string")
+    scores = {r.id: (r.score, r.score0) for r in bm25_scores(docs, ["spark"], per_term=True).collect()}
+    assert scores[2] == (0.0, 0.0)
+    assert bm25_topk(docs, ["spark"], k=10).collect() == []
 
 
 # ---------------------------------------------------------------------------
