@@ -14,15 +14,11 @@ so the backend must be selectable without touching fifty call sites:
 * ``local``    (default) — ``localCheckpoint``: fastest, not fault-tolerant.
   Right for local[N] runs and the driver bench, where there is exactly one
   "executor" and it dying kills the app anyway.
-* ``disk``     — ``persist(StorageLevel.DISK_ONLY)`` (+ a materializing
-  ``count()`` for the eager form): blocks are recomputable from lineage if
-  an executor dies (the cache is an optimization, not a correctness
-  dependency).  Lineage is NOT cut, so plans keep growing across iterative
-  rounds — fine for the engine's bounded loops (CC converges in 2-4
-  rounds), wrong for unbounded iteration.
 * ``reliable`` — ``checkpoint``: blocks in the fault-tolerant checkpoint
   directory (``SPARK_GRAFT_CHECKPOINT_DIR``, default under /tmp locally; a
-  DFS path on a cluster), lineage cut.  The 1000-executor default.
+  DFS path on a cluster).  The 1000-executor default.
+
+Both backends cut lineage, so ``materialize`` is the one eager gate.
 
 Selection: the ``spark.graft.checkpoint.backend`` runtime conf if set, else
 ``$SPARK_GRAFT_CHECKPOINT``, else ``local``.  Call sites use
@@ -48,39 +44,30 @@ def _backend(df: DataFrame) -> str:
     )
 
 
-def _reliable_checkpoint(df: DataFrame, eager: bool) -> DataFrame:
-    sc = df.sparkSession.sparkContext
-    if sc._jsc.sc().getCheckpointDir().isEmpty():
-        sc.setCheckpointDir(
-            os.environ.get(
-                "SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/etl_healthcare_spark_ckpt"
-            )
-        )
-    return df.checkpoint(eager=eager)
-
-
 def _materialize(df: DataFrame, eager: bool) -> DataFrame:
     backend = _backend(df)
     if backend == "local":
         return df.localCheckpoint(eager=eager)
-    if backend == "disk":
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.DISK_ONLY)
-        if eager:
-            out.count()  # materialize every partition now (cache stores full rows)
-        return out
     if backend == "reliable":
-        return _reliable_checkpoint(df, eager)
-    raise ValueError(
-        f"unknown checkpoint backend {backend!r}: 'local', 'disk' or 'reliable'"
-    )
+        sc = df.sparkSession.sparkContext
+        if sc._jsc.sc().getCheckpointDir().isEmpty():
+            sc.setCheckpointDir(
+                os.environ.get(
+                    "SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/etl_healthcare_spark_ckpt"
+                )
+            )
+        return df.checkpoint(eager=eager)
+    raise ValueError(f"unknown checkpoint backend {backend!r}: 'local' or 'reliable'")
 
 
 def materialize(df: DataFrame) -> DataFrame:
     """EAGER materialization barrier: compute ``df`` now, pin the result,
     return a frame whose consumers read the pinned blocks.  Use whenever
-    multiple consumers (or concurrent stages of one action) share the frame."""
+    multiple consumers (or concurrent stages of one action) share the frame.
+    Every backend cuts lineage, so the result is never evaluated twice: the
+    store merge's write and commit log, the pipeline's gate counts and merged
+    rows, a quarantine read before its path is rewritten and a ``uuid()``
+    column each come from one evaluation."""
     return _materialize(df, eager=True)
 
 
@@ -89,22 +76,3 @@ def materialize_lazy(df: DataFrame) -> DataFrame:
     the first consumer is a lone sequential driver action that touches every
     partition (SCALE.md §50) — a raced lazy persist recomputes per stage."""
     return _materialize(df, eager=False)
-
-
-def cut_lineage(df: DataFrame) -> DataFrame:
-    """Materialization that MUST also sever the plan from its sources.
-
-    Required where a frame must not be evaluated a second time: by
-    ParquetStateStore.merge, whose write and returned commit log must come
-    from one evaluation (``dedup_batch`` may break a timestamp tie either
-    way); by run_batch_pipeline, whose gate counts (an Observation on the
-    tagged batch) and merged rows must come from one parse of its inputs; by
-    the streaming quarantine, whose frame is consumed after the path
-    it was read from is rewritten; and by frames containing non-deterministic
-    columns (uuid()), where any lineage-backed recompute silently changes
-    values.  The ``disk`` backend's plain persist keeps lineage (block loss
-    triggers re-evaluation), so this entry point maps disk -> reliable
-    ``checkpoint`` instead; local/reliable behave as in ``materialize``."""
-    if _backend(df) == "disk":
-        return _reliable_checkpoint(df, eager=True)
-    return _materialize(df, eager=True)

@@ -12,7 +12,7 @@ shingle STRING; the Bloom pre-screen broadcasts only the set-bit positions
 the exact join runs only on the tiny pre-screened survivor set.
 
 Determinism: positions are sha256 bits (5 hex chars = exactly 20 bits), set
-membership is a semi-join, the hit rule is an integer count — the whole
+membership is an equi-join, the hit rule is "all k positions set" — the whole
 screen, INCLUDING its false positives, is bit-identical on any engine, so
 the oracle hash-checks the approximate operator (same discipline as
 operators/sketch.py).  Spark's own BloomFilterMightContain cannot promise
@@ -55,18 +55,16 @@ def bloom_build(items: DataFrame, item_col: str) -> DataFrame:
 def bloom_screen(candidates: DataFrame, item_col: str, bloom: DataFrame) -> DataFrame:
     """Candidates annotated with might_contain: true iff ALL k positions are
     set.  No false negatives; false positives at the standard (1-e^{-kn/m})^k
-    rate.  One posexplode + broadcast semi-join + integer count."""
-    pos = candidates.select("*", F.posexplode(bloom_positions(F.col(item_col))).alias("_i", "_pos"))
-    hit_counts = (
-        pos.join(F.broadcast(bloom.select(F.col("pos").alias("_pos"))), "_pos", "left_semi")
-        .groupBy(*candidates.columns)
-        .agg(F.count(F.lit(1)).alias("_nset"))
-    )
-    return (
-        candidates.join(hit_counts, candidates.columns, "left")
-        .withColumn("might_contain", F.coalesce(F.col("_nset"), F.lit(0)) == K_HASHES)
-        .drop("_nset")
-    )
+    rate.  One broadcast left join per position against the distinct set
+    bits, so each candidate row stays one row and is screened on its own,
+    however often it repeats — no aggregate, no join back."""
+    out = candidates.select("*", bloom_positions(F.col(item_col)).alias("_pos"))
+    might_contain = F.lit(True)
+    for i in range(K_HASHES):
+        bit = F.broadcast(bloom.select(F.col("pos").alias(f"_set{i}")))
+        out = out.join(bit, F.col("_pos")[i] == F.col(f"_set{i}"), "left")
+        might_contain = might_contain & F.col(f"_set{i}").isNotNull()
+    return out.select(*candidates.columns, might_contain.alias("might_contain"))
 
 
 def bloom_contamination(
@@ -75,21 +73,25 @@ def bloom_contamination(
     """Per-doc decontamination screen: exact 5-gram contamination next to the
     Bloom pre-screen's verdict, so the false-positive overhead is measurable.
     Returns (id, n_shingles, n_hits, n_bloom_hits, contam_ppm, bloom_ppm).
-    Both sides are shingled as in ngram_contamination."""
-    corpus_sh = doc_shingles(corpus, text_col, id_col, k)
+    Both sides are shingled as in ngram_contamination, and so are the counts:
+    the corpus shingle stream is read once, its exact hits marked by a
+    broadcast left join and its Bloom verdicts by ``bloom_screen``, and one
+    per-doc aggregate emits all three counts."""
     eval_sh = shingle_set(eval_df, text_col, k)
-    bloom = bloom_build(eval_sh, "s")
-    screened = bloom_screen(corpus_sh, "s", bloom)
-    exact_hits = corpus_sh.join(F.broadcast(eval_sh), "s").groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    per_doc = screened.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_shingles"),
-        F.sum(F.col("might_contain").cast("long")).alias("n_bloom_hits"),
+    marked = bloom_screen(
+        doc_shingles(corpus, text_col, id_col, k).join(
+            F.broadcast(eval_sh.withColumn("__hit", F.lit(1))), "s", "left"
+        ),
+        "s",
+        bloom_build(eval_sh, "s"),
     )
     return (
-        per_doc.join(exact_hits, id_col, "left")
-        .withColumn("n_hits", F.coalesce(F.col("n_hits"), F.lit(0)))
+        marked.groupBy(id_col)
+        .agg(
+            F.count("*").alias("n_shingles"),
+            F.count("__hit").alias("n_hits"),
+            F.count(F.when(F.col("might_contain"), 1)).alias("n_bloom_hits"),
+        )
         .select(
             id_col,
             "n_shingles",

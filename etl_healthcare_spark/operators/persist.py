@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..functions.materialize import cut_lineage
+from ..functions.materialize import materialize
 
 MERGE_KEYS = ["tenantId", "entityType", "entityId"]
 ACTION_COL = "_action"  # insert | update | noop
@@ -268,7 +268,7 @@ class ParquetStateStore:
             )
         # eager, so the write and the returned log come from ONE evaluation and
         # agree even where dedup_batch breaks a timestamp tie arbitrarily
-        merged = merge_frames(state, batch, updated_at, keys=self.keys).transform(cut_lineage)
+        merged = merge_frames(state, batch, updated_at, keys=self.keys).transform(materialize)
         self._commit(merged.drop(ACTION_COL))
         return merged.select(*self.keys, "version", F.col(ACTION_COL).alias("action"))
 
@@ -299,7 +299,7 @@ class ParquetStateStore:
             )
             .select("tenantId", "patientId", F.coalesce("n_deleted", F.lit(0)).alias("n_deleted"))
             .observe(touched, F.collect_set(F.when(F.col("n_deleted") > 0, F.col("tenantId"))).alias("tenants"))
-            .transform(cut_lineage)
+            .transform(materialize)
         )
         self._commit(state.join(subj, ["tenantId", "patientId"], "left_anti"), touched)
         self.vacuum(keep_last=1)

@@ -166,8 +166,9 @@ def tree_depth_doubling(parents: DataFrame, node_col: str = "node", parent_col: 
     Roots are rows with parent == node (depth 0, contribute 0 on jump, so
     converged state is a fixpoint).  The convergence probe is one count of
     not-yet-rooted rows per round — O(1) rows to the driver, same discipline
-    as connected_components (operators/dedup.py:430).  localCheckpoint per
-    round keeps each join reading materialized state, not the doubled plan.
+    as connected_components (operators/dedup.py:518).  One eager
+    ``materialize`` per round keeps each join reading pinned state, not the
+    doubled plan.
     """
     from pyspark.sql import Observation
 

@@ -27,7 +27,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.materialize import cut_lineage
+from .functions.materialize import materialize
 from .operators.fhir import map_to_fhir
 from .operators.normalize import build_normalized_envelope, union_branches
 from .operators.persist import ParquetStateStore
@@ -81,7 +81,7 @@ def run_batch_pipeline(
             F.count(F.when(~dto_rejected, 1)).alias("fhir_invalid"),
             F.count(F.when(F.col(REJECT_COL).isNull(), 1)).alias("valid"),
         )
-        .transform(cut_lineage)
+        .transform(materialize)
     )
     counts = gates.get
 

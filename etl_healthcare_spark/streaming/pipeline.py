@@ -28,7 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from ..functions.materialize import cut_lineage
+from ..functions.materialize import materialize
 
 MAX_RECEIVES = 5  # messaging-stack.ts:47
 RETRY_COL = "_retry_count"
@@ -64,7 +64,7 @@ def redrive_quarantine(
     Returns the number of rows redriven.
 
     Exactness: the eligible subset is chosen by a DETERMINISTIC order
-    (oldest quarantine id first), materialized ONCE (functions/materialize.cut_lineage), and
+    (oldest quarantine id first), materialized ONCE (functions/materialize), and
     removed from quarantine by an id-keyed filter against that materialized
     set — never by re-evaluating the selection (an unordered limit() can
     pick a different subset per scan) and never by an all-columns anti-join
@@ -82,12 +82,12 @@ def redrive_quarantine(
     if QID_COL not in q.columns:
         # legacy quarantine written without ids: stamp + materialize once so
         # this run's selection and delete agree on them
-        q = q.withColumn(QID_COL, F.expr("uuid()")).transform(cut_lineage)
+        q = q.withColumn(QID_COL, F.expr("uuid()")).transform(materialize)
     eligible = (
         q.where(F.col(RETRY_COL) < MAX_RECEIVES)
         .orderBy(QID_COL)
         .limit(max_messages)
-        .transform(cut_lineage)
+        .transform(materialize)
     )
     ids = [r[0] for r in eligible.select(QID_COL).collect()]  # <=100 rows by clamp
     if not ids:
@@ -96,7 +96,7 @@ def redrive_quarantine(
     # remove exactly the redriven ids: at scale this is a Delta DELETE WHERE
     # id IN (...) — parquet fallback rewrites the (small) quarantine table
     remaining = q.where(~F.col(QID_COL).isin(ids))
-    remaining.transform(cut_lineage).write.mode("overwrite").parquet(quarantine_dir)
+    remaining.transform(materialize).write.mode("overwrite").parquet(quarantine_dir)
     return len(ids)
 
 

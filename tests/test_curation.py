@@ -517,7 +517,7 @@ def test_shingle_operators_take_a_two_token_doc(spark):
     assert [(r.doc_a, r.doc_b, r.inter, r.jaccard) for r in got] == [(2, 3, 3, 0.6)]
 
 
-@pytest.fixture(params=("local", "disk", "reliable"))
+@pytest.fixture(params=("local", "reliable"))
 def backend(request, spark):
     key = "spark.graft.checkpoint.backend"
     spark.conf.set(key, request.param)

@@ -89,7 +89,7 @@ def _within(seconds, fn):
     return out["value"]
 
 
-@pytest.fixture(params=("local", "disk", "reliable"))
+@pytest.fixture(params=("local", "reliable"))
 def backend(request, spark):
     key = "spark.graft.checkpoint.backend"
     spark.conf.set(key, request.param)

@@ -493,10 +493,17 @@ def test_bloom_screen_has_no_false_negatives(spark):
     # false-positive rate stays near the theoretical (1-e^{-kn/m})^k ~ 1e-13
     fp = sum(out[f"other{i}"] for i in range(200))
     assert fp == 0
+    # a member probed twice passes twice: one output row per probe row
+    twice = spark.createDataFrame([("item7",), ("item7",), ("other0",), (None,)], "s string")
+    got = sorted(bloom_screen(twice, "s", bloom).collect(), key=lambda r: (r.s is not None, r.s or ""))
+    assert [(r.s, r.might_contain) for r in got] == [
+        (None, False), ("item7", True), ("item7", True), ("other0", False)
+    ]
 
 
 def test_bloom_contamination_upper_bounds_exact(spark):
     from etl_healthcare_spark.operators.bloom import bloom_contamination
+    from etl_healthcare_spark.operators.dedup import ngram_contamination
 
     eval_df = spark.createDataFrame(
         [(100, "alpha beta gamma delta epsilon zeta eta theta")], ["doc_id", "text"]
@@ -505,12 +512,19 @@ def test_bloom_contamination_upper_bounds_exact(spark):
         [
             (1, "alpha beta gamma delta epsilon zeta eta theta"),  # fully contaminated
             (2, "one two three four five six seven eight nine ten"),  # clean
+            (3, "alpha beta gamma delta epsilon zeta eta"),  # repeated doc_id
+            (3, "alpha beta gamma delta epsilon zeta eta"),
         ],
         ["doc_id", "text"],
     )
     rows = {r.doc_id: r for r in bloom_contamination(corpus, eval_df, "text", "doc_id").collect()}
     assert rows[1].contam_ppm == 1_000_000 and rows[1].bloom_ppm == 1_000_000
     assert rows[2].contam_ppm == 0 and rows[2].bloom_ppm == 0
+    assert (rows[3].n_hits, rows[3].n_bloom_hits, rows[3].bloom_ppm) == (6, 6, 1_000_000)
+    exact = ngram_contamination(corpus, eval_df, "text", "doc_id").collect()
+    assert {r.doc_id: (r.n_shingles, r.n_hits) for r in exact} == {
+        d: (r.n_shingles, r.n_hits) for d, r in rows.items()
+    }
     for r in rows.values():  # bloom never under-reports
         assert r.bloom_ppm >= r.contam_ppm
 
