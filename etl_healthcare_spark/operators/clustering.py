@@ -12,14 +12,21 @@ ties break on centroid id: the whole algorithm is deterministic on any
 engine, which is what makes `cluster_kmeans` hash-checkable against DuckDB.
 
 Scale shape (the standard distributed k-means):
-  * quantization: one ndims-group aggregate (broadcast back), map-only encode;
-  * assignment: centroids (k rows) BROADCAST, distances computed per-row with
-    zip_with folds — map-only, no shuffle, whatever the corpus size;
+  * quantization: operators/quantize.quantized_vectors — one ndims-group
+    aggregate (collected), then a map-only encode;
+  * assignment: ``nearest_centroid`` — the k-row centroid table is collected
+    (bounded, guarded by _guard_collect_k) and rides the task closure; each
+    Arrow batch argmins an exact int64 GEMM — map-only, no shuffle, no n x k
+    row stream, whatever the corpus size;
   * centroid update: posexplode + groupBy (cluster, pos) — ONE shuffle of
     n x ndims skinny rows with full partial aggregation (map-side combine
     reduces to k x ndims per partition);
-  * rounds are a driver-side for-loop — each round is one broadcast + one
-    shuffle, the same shape Spark MLlib uses.
+  * rounds: ``lloyd`` — a driver-side for-loop of update + assignment, the
+    same shape Spark MLlib uses.  kmeans_int8, the SemDeDup blocking, the
+    IVF index build and the blocked k-NN join all run it.
+
+A NULL code (a NULL embedding) is never a seed or a centroid member; it
+gets a NULL cluster and dist2.
 """
 
 from __future__ import annotations
@@ -27,58 +34,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import dot  # noqa: F401  (kept: float-space helpers live together)
 from ..functions.materialize import materialize
-
-
-def quantized_vectors(df: DataFrame, vec_col: str, id_col: str, center: int = 0) -> DataFrame:
-    """(id, qv array<long>) — the int8 code of each embedding, as an array.
-
-    Same per-dimension min/max affine map as operators/quantize.int8_quantize
-    (bit-identical IEEE parse tree), kept in array form for distance math.
-
-    ``center`` shifts every code by -center (e.g. 128 → codes in
-    [-128, 127]).  A common integer shift changes NO pairwise L2 distance
-    (so k-means clustering is identical), but it re-centers dot products:
-    cosine over centered codes tracks true float cosine, where cosine over
-    the raw non-negative [0, 255] codes is compressed into [0.85, 1.0]
-    (measured on testdata) and cannot separate near-dups from the bulk.
-    """
-    # Round-10 shape: ONE stats pass + ONE map-only quantize pass.  The old
-    # form broadcast the per-dim stats back onto the 64x-exploded stream and
-    # re-assembled codes with a collect_list regroup — i.e. the whole
-    # exploded corpus crossed an exchange once per run (and the regroup's
-    # var-width buffer is the expensive aggregate class).  The stats frame
-    # is DIM-bounded (one row per dimension), so it is collected to the
-    # driver (same bounded-collect discipline as the IVF centroid loads) and
-    # re-enters as literal arrays; quantization is then a per-row
-    # ``transform`` with zero shuffles.  Per-element arithmetic is the
-    # identical IEEE parse tree ((x - mn) * 255.0 / (mx - mn)), so codes are
-    # bit-identical to the old form.
-    ex = df.select(F.posexplode(F.col(vec_col)).alias("pos", "xf")).select(
-        "pos", F.col("xf").cast("double").alias("x")
-    )
-    stats = {
-        r["pos"]: (r["mn"], r["mx"])
-        for r in ex.groupBy("pos").agg(F.min("x").alias("mn"), F.max("x").alias("mx")).collect()
-    }
-    mns = F.array(*[F.lit(stats[p][0]) for p in sorted(stats)])
-    mxs = F.array(*[F.lit(stats[p][1]) for p in sorted(stats)])
-
-    def _code(x, i):
-        mn = F.element_at(mns, i + 1)
-        mx = F.element_at(mxs, i + 1)
-        q = F.when(mx == mn, F.lit(0).cast("long")).otherwise(
-            F.least(
-                F.floor((x.cast("double") - mn) * F.lit(255.0) / (mx - mn)),
-                F.lit(255).cast("long"),
-            )
-        )
-        return q - F.lit(int(center)) if center else q
-
-    return df.select(
-        F.col(id_col).alias("id"), F.transform(F.col(vec_col), _code).alias("qv")
-    )
+from ..functions.vectors import int_dot
+from .quantize import quantized_vectors
 
 
 def _dist2(a, b):
@@ -86,76 +44,33 @@ def _dist2(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0).cast("long"), lambda acc, d: acc + d)
 
 
-def _assign(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
-    """argmin_c dist2(qv, cv), ties to the smallest centroid id.
+def nearest_centroid(vecs: DataFrame, centroid_rows, block: int = 8192) -> DataFrame:
+    """(id, qv, cluster, dist2): each code's nearest centroid by exact
+    squared L2, ties to the smallest centroid id.  ``vecs`` is (id, qv);
+    ``centroid_rows`` are collected (cid, cv) rows.
 
-    Plan shape (round-9 fix): the (d2, cid) pick is a single ``min`` over a
-    PACKED BIGINT ``d2 * 2^32 + cid`` — order-isomorphic with the (d2, cid)
-    struct because both components are non-negative and cid < 2^32 (guarded
-    below on the k-row centroid side; d2 over 64-dim centered int8 codes is
-    ≤ 64·256² = 2^22, so the product stays < 2^54).  The struct form's
-    buffer is not UnsafeRow-mutable and silently planned SORTAGGREGATE — a
-    per-partition sort of the n×k scored stream, the plan class the sf3→sf9
-    probe measured at 4.70× wall per 3× data (SCALE.md §48).  ``qv`` rides
-    as a grouping key (grouping keys may be any type; only aggregation
-    BUFFERS must be fixed-width — the previous ``first(qv)`` array buffer
-    also broke hash aggregation), so the whole reduce is one HashAggregate
-    with map-side combine."""
-    guarded = centroids.withColumn(
-        "cid",
-        F.when(
-            (F.col("cid") < 0) | (F.col("cid") > F.lit((1 << 32) - 1)),
-            F.raise_error(F.lit("_assign: cid outside [0, 2^32) breaks the d2*2^32+cid packing")),
-        ).otherwise(F.col("cid")),
-    )
-    d2 = _dist2(F.col("qv"), F.col("cv"))
-    scored = vecs.crossJoin(F.broadcast(guarded)).select(
-        "id",
-        "qv",
-        (
-            F.when(
-                d2 > F.lit((1 << 31) - 1),
-                F.raise_error(F.lit("_assign: d2 ≥ 2^31 overflows the d2*2^32+cid packing")),
-            ).otherwise(d2)
-            * F.lit(1 << 32).cast("long")
-            + F.col("cid")
-        ).alias("packed"),
-    )
-    best = scored.groupBy("id", "qv").agg(F.min("packed").alias("packed"))
-    return best.select(
-        "id",
-        "qv",
-        (F.col("packed") % F.lit(1 << 32).cast("long")).alias("cluster"),
-        F.expr(f"packed div {1 << 32}").alias("dist2"),  # integer div: exact past 2^53
-    )
+    The k-row centroid table (k x 64 longs — k grows only as n/2500 under
+    the SemDeDup contract, ~123 KB at sf3) rides the task closure; each
+    Arrow batch computes d2 = |v|^2 - 2 v.C + |C|^2 exactly in int64 (codes
+    <= 255 keep every term far inside int64) and argmins it.  Centroids are
+    sorted by cid and np.argmin returns the FIRST minimum, so a tie goes to
+    the smallest cid.  This replaced a crossJoin(broadcast(centroids)) whose
+    n x k row stream, with k = ceil(n/2500), was quadratic in the corpus
+    (SCALE.md §46).
 
-
-def _assign_arrow(vecs: DataFrame, centroid_rows, id_t: str, block: int = 8192) -> DataFrame:
-    """Vectorized twin of _assign for corpus-scale k: argmin over the
-    centroid matrix via int64 numpy GEMM inside an Arrow mapInPandas task.
-
-    _assign's crossJoin(broadcast(centroids)) materializes n x k ROWS each
-    carrying two 64-long arrays through an interpreted zip_with fold; with
-    the SemDeDup contract k = ceil(n/2500) that row volume is QUADRATIC in
-    the corpus — the round-7 sf1->sf3 probe measured dedup_semantic at 6.1x
-    wall on 3x data with assignment dominating (SCALE.md §46).  Here the
-    bounded centroid table (k x 64 longs — k grows only as n/2500, ~123 KB
-    at sf3) is collected once and rides the task closure; each Arrow batch
-    computes d2 = |v|^2 - 2 v.C + |C|^2 exactly in int64 and argmins.
-    BIT-IDENTICAL to _assign: same integers (centered codes <= 128 keep
-    every term far inside int64), same tie rule (centroids sorted by cid
-    ascending, np.argmin returns the FIRST minimum = smallest cid —
-    matching min(struct(d2, cid))); agreement pytest-asserted."""
+    A NULL code gets a NULL cluster and dist2; a code of any other length
+    than the centroids', or with a NULL element, raises ValueError naming
+    its row id."""
+    _guard_collect_k(len(centroid_rows))
+    id_t = dict(vecs.dtypes)["id"]
     schema = f"id {id_t}, qv array<bigint>, cluster bigint, dist2 bigint"
     rows = sorted(centroid_rows, key=lambda r: r["cid"])
     if not rows:
-        # empty corpus -> empty centroid table; without this guard the task
-        # kernel would np.AxisError on the 1-D C=np.array([]) as soon as a
-        # batch iterates (reachable only when the caller's n>0 switch is
-        # bypassed, but the helper must stand alone)
+        # the kernel would np.AxisError on the 1-D C=np.array([])
         return vecs.sparkSession.createDataFrame([], schema)
     cids = [int(r["cid"]) for r in rows]
     cvs = [[int(x) for x in r["cv"]] for r in rows]
+    n_dims = len(cvs[0])
 
     def assign(batches):
         import numpy as np
@@ -166,19 +81,35 @@ def _assign_arrow(vecs: DataFrame, centroid_rows, id_t: str, block: int = 8192) 
         cid_arr = np.array(cids, dtype=np.int64)
         for pdf in batches:
             n = len(pdf)
-            out_c = np.empty(n, dtype=np.int64)
-            out_d = np.empty(n, dtype=np.int64)
-            if n:
-                m = np.array(pdf["qv"].tolist(), dtype=np.int64)
-                for lo in range(0, n, block):
-                    hi = min(lo + block, n)
-                    mb = m[lo:hi]
+            live = pdf["qv"].notna().to_numpy()
+            out_c = np.zeros(n, dtype=np.int64)
+            out_d = np.zeros(n, dtype=np.int64)
+            if live.any():
+                codes = pdf["qv"][live]
+                ok = codes.map(len).to_numpy() == n_dims
+                if ok.all():
+                    # a NULL element arrives as NaN in a float64 array
+                    mf = np.array(codes.tolist(), dtype=np.float64)
+                    ok = np.isfinite(mf).all(axis=1)
+                if not ok.all():
+                    bad = pdf["id"][live][~ok].tolist()[0]
+                    raise ValueError(
+                        f"nearest_centroid: row {bad!r} is not a {n_dims}-dim code without NULLs"
+                    )
+                m, rows_at = mf.astype(np.int64), np.flatnonzero(live)
+                for lo in range(0, len(m), block):
+                    mb, at = m[lo : lo + block], rows_at[lo : lo + block]
                     d2 = (mb * mb).sum(axis=1)[:, None] - 2 * (mb @ C.T) + c2[None, :]
                     j = d2.argmin(axis=1)
-                    out_c[lo:hi] = cid_arr[j]
-                    out_d[lo:hi] = d2[np.arange(hi - lo), j]
+                    out_c[at] = cid_arr[j]
+                    out_d[at] = d2[np.arange(len(mb)), j]
             yield pd.DataFrame(
-                {"id": pdf["id"], "qv": pdf["qv"], "cluster": out_c, "dist2": out_d}
+                {
+                    "id": pdf["id"],
+                    "qv": pdf["qv"],
+                    "cluster": pd.arrays.IntegerArray(out_c, ~live),
+                    "dist2": pd.arrays.IntegerArray(out_d, ~live),
+                }
             )
 
     return vecs.mapInPandas(assign, schema=schema)
@@ -199,29 +130,36 @@ def _update(assigned: DataFrame) -> DataFrame:
     ).select(F.col("cluster").alias("cid"), "cv")
 
 
+def lloyd(vecs: DataFrame, k: int, rounds: int):
+    """Deterministic integer Lloyd k-means over (id, qv) codes.
+
+    Seeds = the codes of the k lowest ids with a non-NULL code; each of the
+    ``rounds`` rounds is one floor-mean update (_update, collected) and one
+    nearest_centroid assignment.  Returns ``(centroid_rows, assigned)``:
+    the collected (cid, cv) rows the last assignment used, and that
+    assignment (id, qv, cluster, dist2).  Every quantity is an exact
+    integer, so results are engine-independent."""
+    rows = (
+        vecs.where(F.col("qv").isNotNull())
+        .orderBy("id")
+        .limit(k)
+        .select(F.col("id").alias("cid"), F.col("qv").alias("cv"))
+        .collect()
+    )
+    assigned = nearest_centroid(vecs, rows)
+    for _ in range(rounds):
+        rows = _update(assigned).collect()
+        assigned = nearest_centroid(vecs, rows)
+    return rows, assigned
+
+
 def kmeans_int8(
     df: DataFrame, vec_col: str, id_col: str, k: int = 8, rounds: int = 1
 ) -> DataFrame:
-    """Deterministic k-means over int8 codes.
-
-    Seeds = the k smallest ids' codes; `rounds` Lloyd updates; returns the
-    final (id, cluster, dist2) assignment.  Every quantity is an exact
-    integer, so results are engine-independent.
-    """
-    vecs = quantized_vectors(df, vec_col, id_col)
-    centroids = (
-        vecs.orderBy("id").limit(k).select(F.col("id").alias("cid"), F.col("qv").alias("cv"))
-    )
-    assigned = _assign(vecs, centroids)
-    for _ in range(rounds):
-        centroids = _update(assigned)
-        assigned = _assign(vecs, centroids)
+    """Deterministic k-means over int8 codes: ``lloyd`` from the k smallest
+    ids' codes; returns the final (id, cluster, dist2) assignment."""
+    _, assigned = lloyd(quantized_vectors(df, vec_col, id_col), k, rounds)
     return assigned.select("id", "cluster", "dist2")
-
-
-def _idot(a, b):
-    """Exact integer dot product of two long arrays (order-free sum)."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, d: acc + d)
 
 
 # SemDeDup pair cost is n^2/k spread over k cluster tasks; holding the MEAN
@@ -239,8 +177,8 @@ def auto_cluster_count(n_rows: int, target: int = SEMANTIC_TARGET_CLUSTER_SIZE) 
     return max(8, -(-int(n_rows) // target))
 
 
-# The arrow assignment kernel collects the k-row centroid table to the driver
-# each round (k x 64 longs ~ 0.5 KB/row).  That is the deliberate bounded
+# nearest_centroid collects the k-row centroid table to the driver each
+# round (k x 64 longs ~ 0.5 KB/row).  That is the deliberate bounded
 # collect of the SemDeDup design — but "bounded" stops being true somewhere:
 # at k = ceil(n/2500), 250M vectors -> k = 100k (~50 MB, fine); 1B -> k = 400k
 # (~200 MB closure shipped to EVERY task each round, not fine).  Past this
@@ -248,15 +186,15 @@ def auto_cluster_count(n_rows: int, target: int = SEMANTIC_TARGET_CLUSTER_SIZE) 
 # quantizer: train ~sqrt(k) super-centroids, partition centroids by
 # super-cell, and assign via two-level lookup (probe the super-cell, then
 # argmin inside it) — the same index shape operators/similarity.py already
-# builds for sim_ivf_topk.  Guarded here so the failure mode is this error,
-# not a driver OOM mid-job (round-7 verdict item 5).
+# builds for sim_ivf_topk.  Guarded so the failure mode is this error, not
+# a driver OOM mid-job.
 SEMANTIC_MAX_COLLECT_K = 131_072
 
 
 def _guard_collect_k(k: int) -> None:
     if k > SEMANTIC_MAX_COLLECT_K:
         raise ValueError(
-            f"semantic-dedup centroid count k={k} exceeds the driver-collect "
+            f"centroid count k={k} exceeds the driver-collect "
             f"ceiling ({SEMANTIC_MAX_COLLECT_K}): ~{k * 520 // 2**20} MB of "
             "centroids would ship in every task closure each round. At this "
             "corpus size (k = ceil(n/2500) -> n > ~327M vectors) migrate the "
@@ -267,44 +205,19 @@ def _guard_collect_k(k: int) -> None:
         )
 
 
-def _cluster_assignments(
-    df: DataFrame, vec_col: str, id_col: str, k: int, rounds: int, kernel: str = "expr"
-) -> DataFrame:
-    """The SemDeDup blocking assignment (id, qv, cluster), computed ONCE and
-    localCheckpoint-ed: the pair stage consumes it as BOTH self-join sides
-    and the keep stage anti-joins against it — without the checkpoint Spark
-    re-runs the whole iterative k-means lineage (quantize shuffle + per-round
-    broadcast assign + centroid shuffle) once per consumer, ~4x the work at
-    any scale.  Size is n x (64-long array) — distributed, never collected.
-
-    ``kernel="arrow"`` (the oversized-corpus path, same switch as the pair
-    kernel) assigns via _assign_arrow: per round the k-row centroid table is
-    collected (bounded — k = ceil(n/2500)) and distances vectorize in-task,
-    replacing _assign's quadratic n x k crossJoin row stream.  Bit-identical
-    results either way."""
-    vecs = quantized_vectors(df, vec_col, id_col, center=128)
-    if kernel == "arrow":
-        _guard_collect_k(k)
-        # pin the quantized codes ONCE: the arrow path drives 2+rounds driver
-        # collects (seed, per-round centroids) plus the final checkpoint off
-        # this frame, and each would otherwise re-run the quantize shuffles
-        # from scratch (round-7 advice: 3+ recomputes at rounds=1)
-        vecs = vecs.transform(materialize)
-        id_t = dict(vecs.dtypes)["id"]
-        seed = (
-            vecs.orderBy("id").limit(k).select(F.col("id").alias("cid"), F.col("qv").alias("cv"))
-        )
-        assigned = _assign_arrow(vecs, seed.collect(), id_t)
-        for _ in range(rounds):
-            assigned = _assign_arrow(vecs, _update(assigned).collect(), id_t)
-        return assigned.select("id", "qv", "cluster").transform(materialize)
-    centroids = (
-        vecs.orderBy("id").limit(k).select(F.col("id").alias("cid"), F.col("qv").alias("cv"))
-    )
-    assigned = _assign(vecs, centroids)
-    for _ in range(rounds):
-        centroids = _update(assigned)
-        assigned = _assign(vecs, centroids)
+def _cluster_assignments(df: DataFrame, vec_col: str, id_col: str, k: int, rounds: int) -> DataFrame:
+    """The SemDeDup blocking assignment (id, qv, cluster): ``lloyd`` over
+    the centered codes, computed ONCE and checkpointed.  The pair stage
+    consumes it as BOTH self-join sides and the keep stage anti-joins
+    against it — without the checkpoint Spark re-runs the whole iterative
+    k-means lineage once per consumer, ~4x the work at any scale.  Size is
+    n x (64-long array) — distributed, never collected; only the k-row
+    centroid tables are (bounded — k = ceil(n/2500))."""
+    # pin the codes ONCE: lloyd drives 1 + rounds driver collects (seed,
+    # per-round centroids) plus the final checkpoint off this frame, and
+    # each would otherwise re-run the quantize pass from scratch
+    vecs = quantized_vectors(df, vec_col, id_col, center=128).transform(materialize)
+    _, assigned = lloyd(vecs, k, rounds)
     return assigned.select("id", "qv", "cluster").transform(materialize)
 
 
@@ -338,29 +251,30 @@ def semantic_dedup_pairs(
     n^2/k spread over k independent tasks — at 100 TB, k grows with the
     corpus (SemDeDup uses ~100k clusters for billions of docs) and the
     cluster id becomes a written partition column, exactly like the LSH
-    bucket in operators/dedup.embedding_lsh_dedup_pairs.  ``kernel="expr"``
-    (default, registered) is the pure-Catalyst self-join — zero Python;
-    ``kernel="arrow"`` is the per-cluster int64 GEMM
-    (groupBy(cluster).applyInPandas) for oversized clusters — and because
-    the math is INTEGER, the two kernels agree bit-for-bit (asserted in
-    tests), unlike the float GEMM where only gap-separated thresholds are
-    safe.
+    bucket in operators/dedup.embedding_lsh_dedup_pairs.  The assignment is
+    always _cluster_assignments (one path); ``kernel`` selects only the pair
+    scorer.  ``kernel="expr"`` (default, registered) is the pure-Catalyst
+    self-join — zero Python; ``kernel="arrow"`` is the per-cluster int64
+    GEMM (groupBy(cluster).applyInPandas) for oversized clusters — and
+    because the math is INTEGER, the two kernels agree bit-for-bit
+    (asserted in tests), unlike the float GEMM where only gap-separated
+    thresholds are safe.  A NULL embedding (NULL cluster) never pairs.
 
     Returns (id_a, id_b, cluster) with id_a < id_b.
     """
     assigned = (
         _assigned
         if _assigned is not None
-        else _cluster_assignments(df, vec_col, id_col, k, rounds, kernel=kernel)
-    )
+        else _cluster_assignments(df, vec_col, id_col, k, rounds)
+    ).where(F.col("cluster").isNotNull())
     # one cluster-keyed shuffle for the self-pairing; the fold/GEMM below is
     # the only per-pair work
     if kernel == "expr":
         a = assigned.select(F.col("id").alias("id_a"), F.col("qv").alias("qa"), "cluster")
         b = assigned.select(F.col("id").alias("id_b"), F.col("qv").alias("qb"), "cluster")
-        dot = _idot(F.col("qa"), F.col("qb"))
-        naa = _idot(F.col("qa"), F.col("qa"))
-        nbb = _idot(F.col("qb"), F.col("qb"))
+        dot = int_dot(F.col("qa"), F.col("qb"))
+        naa = int_dot(F.col("qa"), F.col("qa"))
+        nbb = int_dot(F.col("qb"), F.col("qb"))
         return (
             a.join(b, "cluster")
             .where(F.col("id_a") < F.col("id_b"))
@@ -413,9 +327,7 @@ def semantic_keep(df: DataFrame, vec_col: str, id_col: str, **kw) -> DataFrame:
 
     The clustering assignment is computed once (checkpointed) and shared by
     the pair stage and the final anti-join — see _cluster_assignments."""
-    assigned = _cluster_assignments(
-        df, vec_col, id_col, kw.get("k", 8), kw.get("rounds", 1), kernel=kw.get("kernel", "expr")
-    )
+    assigned = _cluster_assignments(df, vec_col, id_col, kw.get("k", 8), kw.get("rounds", 1))
     pairs = semantic_dedup_pairs(df, vec_col, id_col, _assigned=assigned, **kw)
     drop = pairs.select(F.col("id_b").alias("id")).distinct()
     return assigned.select("id", "cluster").join(drop, "id", "left_anti")
@@ -571,16 +483,18 @@ def kcenter_assign(df: DataFrame, vec_col: str, id_col: str, k: int = 8) -> Data
     Scale: the code frame is checkpointed once; each of the k rounds is one
     map-only least() update against a BROADCAST-LITERAL center plus one
     1-row argmax aggregate (k tiny driver fetches, like the IVF centroid
-    loads); the final assignment is one broadcast cross join + exact
-    struct-min.  Output (id, center_id, d2) for every point."""
+    loads); the final assignment is nearest_centroid over the k collected
+    centers.  Output (id, center_id, d2) for every point; a NULL embedding
+    is never a center and gets a NULL center_id and d2."""
     vecs = quantized_vectors(df, vec_col, id_col).transform(materialize)
+    coded = vecs.where(F.col("qv").isNotNull())
 
     def lit_qv(xs):
         return F.array(*[F.lit(int(x)) for x in xs])
 
-    seed = vecs.orderBy("id").limit(1).select("id", "qv").collect()[0]
+    seed = coded.orderBy("id").limit(1).select("id", "qv").collect()[0]
     centers = [(int(seed["id"]), [int(x) for x in seed["qv"]])]
-    cur = vecs.select("id", "qv", _dist2(F.col("qv"), lit_qv(centers[0][1])).alias("mind2"))
+    cur = coded.select("id", "qv", _dist2(F.col("qv"), lit_qv(centers[0][1])).alias("mind2"))
     for _ in range(k - 1):
         pick = cur.agg(
             F.max(
@@ -596,29 +510,9 @@ def kcenter_assign(df: DataFrame, vec_col: str, id_col: str, k: int = 8) -> Data
             "qv",
             F.least(F.col("mind2"), _dist2(F.col("qv"), lit_qv(cqv))).alias("mind2"),
         )
-    if not all(0 <= cid < (1 << 32) for cid, _ in centers):  # packing domain
-        raise ValueError("kcenter_assign: center id outside [0, 2^32) breaks d2*2^32+cid packing")
-    cdf = df.sparkSession.createDataFrame(
-        [(cid, cqv) for cid, cqv in centers], "cid long, cv array<long>"
-    )
-    # (d2, cid) pick as a packed-BIGINT min (same order-isomorphism argument
-    # as _assign: d2 ≤ 64·256² = 2^22, cid here is a vec id < 2^32 at any
-    # realistic corpus since k centers were just collected) — the struct-min
-    # form planned SortAggregate over the n×k scored stream (SCALE.md §48).
-    scored = vecs.crossJoin(F.broadcast(cdf)).select(
-        "id",
-        (
-            _dist2(F.col("qv"), F.col("cv")) * F.lit(1 << 32).cast("long") + F.col("cid")
-        ).alias("packed"),
-    )
-    return (
-        scored.groupBy("id")
-        .agg(F.min("packed").alias("packed"))
-        .select(
-            F.col("id").alias(id_col),
-            (F.col("packed") % F.lit(1 << 32).cast("long")).alias("center_id"),
-            F.expr(f"packed div {1 << 32}").alias("d2"),
-        )
+    assigned = nearest_centroid(vecs, [{"cid": cid, "cv": cqv} for cid, cqv in centers])
+    return assigned.select(
+        F.col("id").alias(id_col), F.col("cluster").alias("center_id"), F.col("dist2").alias("d2")
     )
 
 

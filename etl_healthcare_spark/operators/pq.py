@@ -3,7 +3,7 @@ distance — the codebook layer inside IVF-PQ indexes (Jégou et al., "Product
 Quantization for Nearest Neighbor Search", TPAMI 2011; north-star
 LLM-pipeline layer, no reference analog).
 
-Pipeline: int8-quantize each embedding per dimension (operators/clustering.
+Pipeline: int8-quantize each embedding per dimension (operators/quantize.
 quantized_vectors), split the D dims into M subspaces, run k-means per
 subspace in EXACT integer space (seeds = the K lowest ids' subvectors, one
 Lloyd round — same determinism argument as operators/clustering.kmeans_int8),
@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .clustering import quantized_vectors
+from .quantize import quantized_vectors
 from ..functions.materialize import materialize_lazy
 
 

@@ -20,6 +20,8 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine, hyperplane_bucket
 from ..functions.materialize import materialize, materialize_lazy
+from .clustering import _dist2, lloyd
+from .quantize import quantized_vectors
 
 
 def _query_rows(vecs: DataFrame, id_col: str, query_pred) -> DataFrame:
@@ -169,43 +171,33 @@ def ivf_build_index(df: DataFrame, vec_col: str, id_col: str, index_dir: str, k:
     """IVF index BUILD — the write-once phase of the build/probe split.
 
     Assigns every vector to an integer-exact k-means cell
-    (operators/clustering.kmeans_int8 semantics: int8 codes, seeds = k lowest
-    ids, one Lloyd round, (dist2, cid) tiebreaks — deterministic on any
-    engine) and writes the corpus ``partitionBy("cell")`` plus the centroid
-    table.  At 100 TB this runs once; every probe then prunes to nprobe
-    partition directories instead of scanning the corpus (see ivf_probe).
+    (operators/clustering.lloyd, one round — kmeans_int8 semantics: int8
+    codes, seeds = k lowest ids, (dist2, cid) tiebreaks — deterministic on
+    any engine) and writes the corpus ``partitionBy("cell")`` plus the
+    centroid table the last assignment used.  At 100 TB this runs once;
+    every probe then prunes to nprobe partition directories instead of
+    scanning the corpus (see ivf_probe).  A NULL embedding lands in the
+    NULL cell, which no probe reads.
     Layout: ``{index_dir}/vectors`` (id, qv, cell=...), ``{index_dir}/centroids``.
     """
-    from .clustering import _assign_arrow, _update, quantized_vectors
-
-    # LAZY checkpoint: seeds, both Lloyd assigns, and the index write all
-    # consume the quantized frame — un-materialized, each re-ran the
-    # quantization pipeline (3 full passes; round-10).  Lazy because the c0
-    # seed collect below is a lone sequential driver action that touches
-    # every partition — no concurrent stage can race the persist, and no
-    # extra blocking job is launched.
+    # LAZY checkpoint: lloyd's seed collect, both assignments and the index
+    # write all consume the quantized frame.  Lazy because its first
+    # consumer, lloyd's seed collect, is a lone sequential driver action
+    # that touches every partition — no concurrent stage can race the
+    # persist, and no extra blocking job is launched.
     vecs = quantized_vectors(df, vec_col, id_col).transform(materialize_lazy)
-    id_t = dict(vecs.dtypes)["id"]
-    # Both Lloyd assigns via the GEMM kernel (round-11): the k-row centroid
-    # tables are driver-bounded (k x 64 longs — the same bounded-collect
-    # class as ivf_probe's centroid load), and _assign_arrow replaces
-    # _assign's crossJoin n x k row stream + interpreted per-pair folds +
-    # groupBy(id, qv) argmin EXCHANGE with one map-only int64 matmul per
-    # batch.  Bit-identical assignments (pytest-asserted kernel agreement);
-    # probed 2.0 -> 1.2 s min-of-5 for the full build+probe at sf0.1.
-    c0_rows = (
-        vecs.orderBy("id").limit(k).select(F.col("id").alias("cid"), F.col("qv").alias("cv")).collect()
-    )
-    # lazy: first consumer is the c1_rows collect — a lone driver action
-    c1 = _update(_assign_arrow(vecs, c0_rows, id_t)).transform(materialize_lazy)
-    a2 = _assign_arrow(vecs, c1.collect(), id_t)
+    centroid_rows, assigned = lloyd(vecs, k, rounds=1)
     (
-        a2.select("id", "qv", F.col("cluster").alias("cell"))
+        assigned.select("id", "qv", F.col("cluster").alias("cell"))
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(index_dir + "/vectors")
     )
-    c1.write.mode("overwrite").parquet(index_dir + "/centroids")
+    (
+        df.sparkSession.createDataFrame(centroid_rows, "cid bigint, cv array<bigint>")
+        .write.mode("overwrite")
+        .parquet(index_dir + "/centroids")
+    )
 
 
 def ivf_probe(
@@ -221,15 +213,16 @@ def ivf_probe(
     oracle-checkable."""
     vectors = spark.read.parquet(index_dir + "/vectors")
     cents = spark.read.parquet(index_dir + "/centroids").collect()  # k rows — O(small)
-    qcode = list(vectors.where(F.col("id") == query_id).select("qv").head()[0])
+    qrow = vectors.where((F.col("id") == query_id) & F.col("qv").isNotNull()).select("qv").head()
+    if qrow is None:  # a query without a code has no neighbours
+        return vectors.select("id", F.lit(None).cast("long").alias("dist2")).limit(0)
+    qcode = list(qrow[0])
 
     def d2(a, b):
         return sum((x - y) * (x - y) for x, y in zip(a, b))
 
     order = sorted((d2(qcode, list(r.cv)), r.cid) for r in cents)
     probed = [cid for _, cid in order[: max(1, nprobe)]]
-    from .clustering import _dist2
-
     qlit = F.array(*[F.lit(int(x)) for x in qcode])
     return (
         vectors.where(F.col("cell").isin(probed))
@@ -269,25 +262,17 @@ def knn_blocked(
     cells (tested against brute force in tests/test_llm_ops.py)."""
     from pyspark.sql import Window
 
-    from .clustering import _assign_arrow, _dist2, _update, quantized_vectors
-
     vecs = quantized_vectors(df, vec_col, id_col).transform(materialize)  # reused 3 ways
-    # both Lloyd assigns via the GEMM kernel — same rationale and kernel-
-    # agreement guarantee as ivf_build_index (round-11): the ncells-row
-    # centroid tables are bounded driver collects, and _assign_arrow drops
-    # _assign's crossJoin row stream + groupBy(id, qv) argmin exchange
-    id_t = dict(vecs.dtypes)["id"]
-    c0_rows = (
-        vecs.orderBy("id").limit(ncells).select(F.col("id").alias("cid"), F.col("qv").alias("cv")).collect()
-    )
-    c1 = _update(_assign_arrow(vecs, c0_rows, id_t)).transform(materialize)
-    members = _assign_arrow(vecs, c1.collect(), id_t).select(
+    centroid_rows, assigned = lloyd(vecs, ncells, rounds=1)
+    members = assigned.select(
         F.col("id").alias("neighbor_id"), F.col("qv").alias("nqv"), F.col("cluster").alias("cell")
     )
-    # each query probes its nprobe nearest cells (by exact int distance)
-    qvecs = _query_rows(vecs, id_col, query_pred)
+    # each query with a code probes its nprobe nearest cells (by exact int
+    # distance to the broadcast centroid rows lloyd's last assignment used)
+    centroids = df.sparkSession.createDataFrame(centroid_rows, "cid bigint, cv array<bigint>")
+    qvecs = _query_rows(vecs, id_col, query_pred).where(F.col("qv").isNotNull())
     qcells = (
-        qvecs.crossJoin(F.broadcast(c1))
+        qvecs.crossJoin(F.broadcast(centroids))
         .select(
             F.col("id").alias("query_id"),
             F.col("qv").alias("qqv"),

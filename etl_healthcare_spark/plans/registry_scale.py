@@ -106,9 +106,11 @@ def sketch_hll_distinct(spark, sf_dir):
     doc="k-means corpus clustering in quantized int8 space (k=8, one Lloyd "
     "round): every distance an exact integer, centroids exact floor-means, "
     "ties to the smallest centroid id — deterministic on any engine, unlike "
-    "float k-means (operators/clustering.py).  Assignment broadcasts the "
-    "k-row centroid table (map-only); the update is one skinny "
-    "(cluster, pos) shuffle with map-side combine.",
+    "float k-means (operators/clustering.py: kmeans_int8 runs lloyd).  "
+    "Assignment is nearest_centroid: the collected k-row centroid table "
+    "rides the task closure and each Arrow batch argmins an exact int64 "
+    "GEMM (map-only); the update is one skinny (cluster, pos) shuffle with "
+    "map-side combine, collected.",
 )
 def cluster_kmeans(spark, sf_dir):
     return kmeans_int8(_t(spark, sf_dir, "embeddings"), "embedding", "vec_id", k=8, rounds=1)
@@ -145,11 +147,9 @@ def dedup_semantic(spark, sf_dir):
     # test_semantic_pair_kernels_agree_bit_for_bit), so the switch can never
     # change results — measured >13x at sf1.0: 106 s arrow vs a 22-minute
     # expr run that never finished (SCALE.md §40).
-    # kernel="arrow" also vectorizes the ASSIGNMENT (round-7: with
-    # k = ceil(n/2500), _assign's n x k crossJoin row stream is quadratic in
-    # the corpus — the sf1->sf3 probe measured 6.1x wall at 3x data with
-    # assignment dominating; the Arrow argmin-over-centroid-matrix kernel
-    # is bit-identical and re-measured 1.07x, SCALE.md §46).
+    # The kernel selects only the pair scorer: the assignment is always
+    # lloyd's nearest_centroid GEMM (a crossJoin n x k row stream with
+    # k = ceil(n/2500) was quadratic in the corpus, SCALE.md §46).
     kernel = "expr" if n <= 20_000 else "arrow"
     return semantic_keep(
         emb, "embedding", "vec_id", k=k, rounds=1, tau_num=45, tau_den=100, kernel=kernel
@@ -273,18 +273,18 @@ import tempfile  # noqa: E402
     "complete mode) with O(groups) state — after the full stream it "
     "provably equals the batch aggregate, so live z-score flagging reads "
     "a sketch that is always exact for the seen prefix "
-    "(streaming/pipeline.py:moments_stream).",
+    "(operators/anomaly.group_moments over the stream).",
 )
 def stream_anomaly_moments(spark, sf_dir):
     import uuid
 
-    from ..streaming.pipeline import moments_stream
+    from ..operators.anomaly import group_moments
 
     ev = _t(spark, sf_dir, "events").select("event_type", "value")
     d = tempfile.mkdtemp(prefix="stream_moments_")
     ev.write.mode("overwrite").parquet(f"{d}/src")
     stream = spark.readStream.schema(ev.schema).parquet(f"{d}/src")
-    agg = moments_stream(stream)
+    agg = group_moments(stream, "event_type", "value")
     name = f"smo_{uuid.uuid4().hex[:8]}"
     q = (
         agg.writeStream.format("memory")

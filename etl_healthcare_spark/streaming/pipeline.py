@@ -292,24 +292,6 @@ def interval_join_streams(
     return l.join(r, cond)
 
 
-def moments_stream(events: DataFrame, group_col: str = "event_type", value_col: str = "value"):
-    """§2.12 + anomaly layer: incrementally maintained exact moment sketch
-    (n, sum, sum-of-squares in int64 cents) per group over a stream.
-
-    The moments are algebraic aggregates, so Structured Streaming maintains
-    them with O(groups) state regardless of stream length — the streaming
-    face of operators/anomaly.group_moments: after any prefix of the stream,
-    the state equals the batch aggregate of that prefix (exactly-once), and
-    downstream z-score flagging can run against a live-updating sketch.
-    """
-    v = (F.col(value_col).cast("decimal(18,2)") * 100).cast("long")
-    return events.groupBy(F.col(group_col).alias("grp")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(v).alias("s"),
-        F.sum(v * v).alias("q"),
-    )
-
-
 DEBOUNCE_OUTPUT = "user_id bigint, event_type string, ts_us bigint"
 DEBOUNCE_STATE = "last_us bigint"
 

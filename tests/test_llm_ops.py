@@ -440,7 +440,7 @@ def test_ivf_probe_matches_brute_force_within_probed_cells(spark, tmp_path):
     """Build/probe split: the probe over the written partitioned index must
     equal brute-force int8-L2 top-k restricted to the probed cells — and the
     scan must touch only nprobe cell directories."""
-    from etl_healthcare_spark.operators.clustering import quantized_vectors
+    from etl_healthcare_spark.operators.quantize import quantized_vectors
     from etl_healthcare_spark.operators.similarity import ivf_build_index, ivf_probe
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -463,7 +463,7 @@ def test_ivf_probe_matches_brute_force_within_probed_cells(spark, tmp_path):
 
 
 def _knn_blocked_recall(spark, emb, ncells, nprobe, n_queries=16, k=3):
-    from etl_healthcare_spark.operators.clustering import quantized_vectors
+    from etl_healthcare_spark.operators.quantize import quantized_vectors
     from etl_healthcare_spark.operators.similarity import knn_blocked
 
     got = knn_blocked(

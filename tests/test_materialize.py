@@ -64,8 +64,8 @@ LAZY_ALLOWLIST = {
     # pq codebook subvectors: first consumer is the per-subspace k-means
     # seed collect loop — sequential driver actions
     ("operators/pq.py", "pq_codebook_and_codes"),
-    # ivf_build_index quantized frame: first consumer is the c1 EAGER
-    # checkpoint build, a single action that materializes vecs fully
+    # ivf_build_index quantized frame: first consumer is lloyd's seed
+    # collect, a lone driver action that reads every partition of vecs
     ("operators/similarity.py", "ivf_build_index"),
     # frequent_pairs unified count table: first consumer is the broadcast
     # n_baskets subquery build — a lone driver-side action (SCALE.md §50

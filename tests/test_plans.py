@@ -68,8 +68,11 @@ def test_decontam_broadcasts_eval_shingles(spark):
 
 
 def test_quantize_broadcasts_dimension_stats(spark):
+    """The ndims-row stats table is collected and rides the plan as literal
+    arrays: the encode is map-only, with no exchange and no join back onto
+    the exploded corpus."""
     plan = _plan(spark, "sim_int8_quant")
-    assert "BroadcastHashJoin" in plan, "ndims-row stats table must broadcast back to the corpus"
+    assert "Exchange" not in plan and "Join" not in plan, "int8 encode must be map-only"
 
 
 def test_stratified_sample_is_scan_plus_filter_no_shuffle(spark):
@@ -366,11 +369,15 @@ def test_no_query_plans_cartesian_or_rowwise_python(spark):
         # in-task diagonal run fold over per-doc position arrays — the
         # round-7 scale fix (operators/textops._fold_longest_runs)
         "dedup_longest_run",
-        # round-11: both Lloyd assigns run the int64 GEMM argmin kernel
-        # (operators/clustering._assign_arrow — bit-identical to _assign,
-        # kernel agreement pytest-asserted), replacing the crossJoin row
-        # stream + groupBy(id, qv) argmin exchange
+        # the int64 GEMM nearest-centroid kernel
+        # (operators/clustering.nearest_centroid) assigns every Lloyd round
+        # of the IVF cells, replacing a crossJoin row stream + argmin exchange
         "sim_knn_blocked",
+        # the same kernel runs kmeans_int8's lloyd assignments
+        "cluster_kmeans",
+        # the same kernel assigns every point to its nearest of the k
+        # collected centers (operators/clustering.kcenter_assign)
+        "sample_kcenter",
     }
     audited = 0
     for name in REGISTRY:
@@ -435,12 +442,12 @@ def test_zorder_key_is_pure_projection(spark):
 
 
 def test_kmeans_broadcasts_centroids(spark):
-    """Assignment must broadcast the k centroid rows (BNLJ against the
-    corpus), never shuffle the corpus against them."""
+    """The final assignment ships the collected k centroid rows in the task
+    closure (nearest_centroid): map-only over the codes, no exchange and no
+    join against the corpus."""
     plan = _plan(spark, "cluster_kmeans")
-    # one BNLJ per assignment pass (tree + detail sections each mention it)
-    assert len(re.findall(r"BroadcastNestedLoopJoin[^\n]*\(\d+\)", plan)) == 2
-    assert "CartesianProduct" not in plan and "SortMergeJoin" not in plan
+    assert "MapInPandas" in plan
+    assert "Exchange" not in plan and "Join" not in plan, "k-means assignment must be map-only"
 
 
 def test_salted_join_keys_on_salt(spark):

@@ -3,6 +3,8 @@ exactly, HLL lands within its error bound and merges by MAX, int8 k-means
 recovers planted clusters, z-score flags planted spikes, Morton keys
 interleave correctly."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -206,17 +208,13 @@ def test_auto_cluster_count_holds_mean_cluster_size_constant():
         assert n / auto_cluster_count(n) <= 2500
 
 
-def test_semantic_assignment_kernels_agree_bit_for_bit(spark):
-    """The Arrow assignment kernel (round-7: _assign's n x k crossJoin was
-    the quadratic term left after §40 made pair work linear) must reproduce
-    the Catalyst assignment EXACTLY — same integer distances, same
-    ties-to-smallest-cid rule — across multiple Lloyd rounds."""
-    from etl_healthcare_spark.operators.clustering import _cluster_assignments
-
-    df = spark.range(120).select(
+def _hashed_vectors(spark, n, dims=8, lo=0):
+    """``n`` deterministic pseudo-random embeddings with ids lo..lo+n-1:
+    each component is an integer 0..65535 taken from sha256(id:i)."""
+    return spark.range(lo, lo + n).select(
         F.col("id").alias("vec_id"),
         F.transform(
-            F.sequence(F.lit(1), F.lit(8)),
+            F.sequence(F.lit(1), F.lit(dims)),
             lambda i: F.conv(
                 F.substring(
                     F.sha2(F.concat_ws(":", F.col("id").cast("string"), i.cast("string")), 256),
@@ -228,17 +226,137 @@ def test_semantic_assignment_kernels_agree_bit_for_bit(spark):
             ).cast("float"),
         ).alias("embedding"),
     )
-    expr = sorted(
-        (r.id, r.cluster)
-        for r in _cluster_assignments(df, "embedding", "vec_id", k=5, rounds=2).collect()
-    )
-    arrow = sorted(
-        (r.id, r.cluster)
-        for r in _cluster_assignments(
-            df, "embedding", "vec_id", k=5, rounds=2, kernel="arrow"
-        ).collect()
-    )
-    assert expr == arrow and len(expr) == 120 and len({c for _, c in expr}) > 1
+
+
+def _python_int8_lloyd(vecs, k, rounds):
+    """Reference integer k-means over {id: [float]}: the per-dimension
+    min/max int8 grid, seeds = the k lowest ids, floor-mean updates,
+    nearest centroid by (squared L2, centroid id).  Returns {id: (cluster,
+    dist2)}."""
+    ids = sorted(vecs)
+    dims = len(vecs[ids[0]])
+    mn = [min(vecs[i][d] for i in ids) for d in range(dims)]
+    mx = [max(vecs[i][d] for i in ids) for d in range(dims)]
+    code = {
+        i: [
+            0 if mx[d] == mn[d] else min(math.floor((vecs[i][d] - mn[d]) * 255.0 / (mx[d] - mn[d])), 255)
+            for d in range(dims)
+        ]
+        for i in ids
+    }
+
+    def assign(cents):
+        out = {}
+        for i in ids:
+            out[i] = min(
+                (sum((a - b) * (a - b) for a, b in zip(code[i], cv)), cid) for cid, cv in cents.items()
+            )[::-1]
+        return out
+
+    got = assign({i: code[i] for i in ids[:k]})
+    for _ in range(rounds):
+        members = {}
+        for i, (cid, _) in got.items():
+            members.setdefault(cid, []).append(code[i])
+        cents = {
+            cid: [sum(m[d] for m in ms) // len(ms) for d in range(dims)] for cid, ms in members.items()
+        }
+        got = assign(cents)
+    return got
+
+
+def test_kmeans_int8_equals_python_integer_lloyd(spark):
+    """kmeans_int8 (lloyd: k lowest-id seeds, floor-mean updates, the int64
+    GEMM nearest_centroid) equals a pure-Python integer Lloyd over the same
+    int8 grid, cluster ids and distances, across two rounds."""
+    df = _hashed_vectors(spark, 120)
+    vecs = {r.vec_id: [float(x) for x in r.embedding] for r in df.collect()}
+    want = _python_int8_lloyd(vecs, k=5, rounds=2)
+    got = {
+        r.id: (r.cluster, r.dist2)
+        for r in kmeans_int8(df, "embedding", "vec_id", k=5, rounds=2).collect()
+    }
+    assert got == want and len(got) == 120 and len({c for c, _ in got.values()}) > 1
+
+
+def test_null_embedding_is_never_seed_member_or_neighbour(spark, tmp_path):
+    """A NULL embedding at the lowest and at the highest id: it is never a
+    seed, a centroid member, a neighbour or a query with neighbours, it gets
+    a NULL cluster, and every other row's answer equals the run without it."""
+    from etl_healthcare_spark.operators.clustering import kcenter_assign, semantic_keep
+    from etl_healthcare_spark.operators.similarity import ivf_build_index, ivf_probe, knn_blocked
+
+    clean = _hashed_vectors(spark, 60, lo=1)
+    nulls = spark.createDataFrame([(0, None), (61, None)], "vec_id long, embedding array<float>")
+    dirty = clean.unionByName(nulls)
+
+    def split(rows, key, *vals):
+        by_id = {r[key]: tuple(r[v] for v in vals) for r in rows}
+        return {i: v for i, v in by_id.items() if i not in (0, 61)}, [by_id.get(i) for i in (0, 61)]
+
+    # k-means: NULL rows are assigned NULL, the others as without them
+    runs = [kmeans_int8(d, "embedding", "vec_id", k=3, rounds=2).collect() for d in (clean, dirty)]
+    want, _ = split(runs[0], "id", "cluster", "dist2")
+    got, null_rows = split(runs[1], "id", "cluster", "dist2")
+    assert got == want and len({c for c, _ in want.values()}) == 3
+    assert null_rows == [(None, None), (None, None)]
+
+    # k-center: a NULL row is never a center
+    runs = [kcenter_assign(d, "embedding", "vec_id", k=4).collect() for d in (clean, dirty)]
+    want, _ = split(runs[0], "vec_id", "center_id", "d2")
+    got, null_rows = split(runs[1], "vec_id", "center_id", "d2")
+    assert got == want and null_rows == [(None, None), (None, None)]
+
+    # SemDeDup keep-list, both pair kernels: the NULL rows never pair
+    for kernel in ("expr", "arrow"):
+        kw = dict(k=4, rounds=1, tau_num=30, tau_den=100, kernel=kernel)
+        runs = [semantic_keep(d, "embedding", "vec_id", **kw).collect() for d in (clean, dirty)]
+        want, _ = split(runs[0], "id", "cluster")
+        got, null_rows = split(runs[1], "id", "cluster")
+        assert got == want and len(want) < 60, kernel
+        assert null_rows == [(None,), (None,)], kernel
+
+    # blocked k-NN: the NULL query has no neighbours and is nobody's neighbour
+    def knn(d):
+        rows = knn_blocked(d, "embedding", "vec_id", F.col("vec_id") < 10, k=3).collect()
+        return sorted((r.query_id, r.neighbor_id, r.n_rank) for r in rows)
+
+    want, got = knn(clean), knn(dirty)
+    assert got == want and len(want) == 27
+
+    # IVF index: same cells and centroids; a NULL query probes nothing
+    def ivf(d, name):
+        path = str(tmp_path / name)
+        ivf_build_index(d, "embedding", "vec_id", path, k=4)
+        cells = spark.read.parquet(path + "/vectors").collect()
+        cents = sorted((r.cid, list(r.cv)) for r in spark.read.parquet(path + "/centroids").collect())
+        probe = [(r.id, r.dist2) for r in ivf_probe(spark, path, query_id=1, nprobe=2, k_top=5).collect()]
+        return cells, cents, probe, path
+
+    c_cells, c_cents, c_probe, _ = ivf(clean, "clean")
+    d_cells, d_cents, d_probe, d_path = ivf(dirty, "dirty")
+    want, _ = split(c_cells, "id", "cell")
+    got, null_rows = split(d_cells, "id", "cell")
+    assert got == want and null_rows == [(None,), (None,)]
+    assert d_cents == c_cents and d_probe == c_probe and len(c_probe) == 5
+    assert ivf_probe(spark, d_path, query_id=0).count() == 0
+
+
+def test_nearest_centroid_rejects_ragged_and_null_element_codes(spark):
+    """A code of another length than the centroids', or with a NULL
+    element, raises a ValueError naming its row id."""
+    from etl_healthcare_spark.operators.clustering import nearest_centroid
+
+    cents = [{"cid": 0, "cv": [0, 0]}, {"cid": 1, "cv": [9, 9]}]
+    ok = spark.createDataFrame([(1, [1, 2]), (2, None)], "id long, qv array<bigint>")
+    assert sorted(map(tuple, nearest_centroid(ok, cents).select("id", "cluster", "dist2").collect())) == [
+        (1, 0, 5),
+        (2, None, None),
+    ]
+    for bad in ([1, 2, 3], [1, None]):
+        vecs = spark.createDataFrame([(1, [1, 2]), (7, bad)], "id long, qv array<bigint>")
+        with pytest.raises(Exception, match=r"ValueError: nearest_centroid: row 7 "):
+            nearest_centroid(vecs, cents).collect()
 
 
 def test_semantic_collect_k_guard_raises_with_migration_note():
@@ -258,12 +376,12 @@ def test_semantic_collect_k_guard_raises_with_migration_note():
 def test_assign_arrow_empty_centroids_returns_empty(spark):
     """An empty centroid table must early-return an empty typed frame — the
     numpy kernel would AxisError on a 1-D empty C matrix (round-7 advice)."""
-    from etl_healthcare_spark.operators.clustering import _assign_arrow
+    from etl_healthcare_spark.operators.clustering import nearest_centroid
 
     vecs = spark.range(0).select(
         F.col("id"), F.array(F.lit(1).cast("bigint")).alias("qv")
     )
-    out = _assign_arrow(vecs, [], "bigint")
+    out = nearest_centroid(vecs, [])
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == ["id", "qv", "cluster", "dist2"]
 

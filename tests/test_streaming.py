@@ -285,7 +285,6 @@ def test_moments_stream_equals_batch_sketch(spark, tmp_path):
     stream equals the batch aggregate — the exactly-once handoff that lets
     z-score flagging read a live sketch."""
     from etl_healthcare_spark.operators.anomaly import group_moments
-    from etl_healthcare_spark.streaming.pipeline import moments_stream
 
     src = str(tmp_path / "mom_src")
     events = spark.createDataFrame(
@@ -299,7 +298,7 @@ def test_moments_stream_equals_batch_sketch(spark, tmp_path):
     events.write.parquet(src)
     stream = spark.readStream.schema(events.schema).parquet(src)
     q = (
-        moments_stream(stream)
+        group_moments(stream, "event_type", "value")
         .writeStream.format("memory")
         .queryName("smom")
         .outputMode("complete")
