@@ -103,12 +103,18 @@ def ivf_cells(
     df: DataFrame, vec_col: str, id_col: str, nlist: int = 8, iters: int = 2
 ) -> list[list[float]]:
     """Deterministic k-means-lite coarse quantizer: seeds = the ``nlist``
-    lowest-id vectors, then ``iters`` Lloyd rounds (map-only assignment, one
-    (cell, pos) shuffle for the means).  Each round fetches nlist x dim
+    lowest-id non-NULL vectors, then ``iters`` Lloyd rounds (map-only
+    assignment, one (cell, pos) shuffle for the means).  Each round fetches nlist x dim
     doubles to the driver — O(small), like the hyperplane fetch.  At 100 TB
     the cell id becomes a partition column written once (index build); probes
     then prune to nprobe partitions."""
-    seeds = df.orderBy(id_col).limit(nlist).select(F.col(vec_col).cast("array<double>")).collect()
+    seeds = (
+        df.where(F.col(vec_col).isNotNull())
+        .orderBy(id_col)
+        .limit(nlist)
+        .select(F.col(vec_col).cast("array<double>"))
+        .collect()
+    )
     centroids = [list(r[0]) for r in seeds]
     for _ in range(iters):
         a = assign_cells(df, vec_col, id_col, centroids)

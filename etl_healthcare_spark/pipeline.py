@@ -9,9 +9,9 @@ append the audit trail (S8).
 The batch is derived once.  Both gates tag one frame with its reject reason,
 the gate counts ride that frame's one materialisation as an Observation, and
 the merge reads the pinned valid rows, so the inputs are parsed once per
-batch.  A warm micro-batch of CSV + HL7 runs 14 Spark jobs: 6 parse, tag and
-pin the batch (the CSV header read, the HL7 parse's adaptive stages and the
-checkpoint), 5 are the merge's one materialisation (its adaptive stages and
+batch.  A warm micro-batch of CSV + HL7 runs 10 Spark jobs: 2 parse, tag and
+pin the batch (the CSV header read and the checkpoint; the HL7 parse is
+map-only), 5 are the merge's one materialisation (its adaptive stages and
 the checkpoint), 2 write the commit and 1 appends the audit trail.
 
 Replay (§3.2) is this same function re-run on the same inputs — the

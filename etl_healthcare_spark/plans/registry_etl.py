@@ -193,8 +193,8 @@ def p2_hl7_segments(spark, sf_dir):
     """,
     doc="P3+P4+P5+J1 full HL7 parse: PID-3 extraction with component fallback "
     "(v2.ts:34-46), OBX code/value/unit rules (v2.ts:49-92), HL7 TS parse with "
-    "01/00 defaults (v2.ts:23-31), per-line sha256 (v2.ts:80), broadcast PID "
-    "context join.  Keeps non-numeric values as valueString (extension noted "
+    "01/00 defaults (v2.ts:23-31), per-line sha256 (v2.ts:80), first-PID "
+    "context carried on each message row (map-only, no join).  Keeps non-numeric values as valueString (extension noted "
     "at v2.ts:88; reference drops them).",
 )
 def p4_hl7_obx_dto(spark, sf_dir):

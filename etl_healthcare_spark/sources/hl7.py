@@ -14,11 +14,11 @@ Reference: libs/adapters/hl7/v2.ts — the hardest parser in the reference
   parameter (v2.ts:24 uses now(); parameterized for determinism, SURVEY §7.3)
 * per-OBX-line sha256 ingestHash (v2.ts:80), sourceSystem "hl7v2:file"
 
-Spark-first plan: the reference's two-pass loop (PID pass then OBX pass) is a
-broadcast self-join on messageId — explode segments once, split PID context
-from OBX rows, join PID onto OBX.  Everything is native expressions; the whole
-parse compiles into two codegen stages plus one broadcast join (no shuffle of
-the big side).
+Spark-first plan: the reference's loop per message (find the PID, then emit
+the OBX rows with its patient) is one map-only pass — split each message into
+its segment array once, take the patient from the array's first PID, explode
+the array and keep the OBX rows.  Every OBX row carries its own message's
+patient, so no join, no aggregate and no shuffle.
 """
 
 from __future__ import annotations
@@ -53,33 +53,22 @@ def messages_to_segments(msgs: DataFrame) -> DataFrame:
 
 
 def parse_hl7_messages(msgs: DataFrame, batch_time: dt.datetime | None = None) -> DataFrame:
-    """P2-P5 + J1 over a (messageId, message) DataFrame -> Observation DTOs."""
+    """P2-P5 + J1 over a (messageId, message) DataFrame -> Observation DTOs.
+
+    J1: every OBX row carries its own message's first-PID patient."""
     batch_time = batch_time or DEFAULT_BATCH_TIME
-    segs = messages_to_segments(msgs)
-
-    # FIRST PID wins, matching the reference's single-pass loop — as a
-    # two-phase hash argmin on segIndex (operators/argmax.py).  The previous
-    # dropDuplicates planned SortAggregate (its first(string) buffer is not
-    # UnsafeRow-mutable — a per-partition sort of the PID stream, the
-    # SCALE.md §48 super-linear class) AND picked an arbitrary row per
-    # message rather than the first; argmin by segIndex is deterministic.
-    from ..operators.argmax import argmin_rows
-
-    pid = argmin_rows(
-        segs.where(H.seg_id(F.col("segment")) == "PID").select(
-            "messageId",
-            "segIndex",
-            H.pid3_patient_id(H.field(F.col("segment"), 3)).alias("patientId"),
-        ),
-        ["messageId"],
-        ["segIndex"],
-    ).select("messageId", "patientId")
-
-    obx = segs.where(H.seg_id(F.col("segment")) == "OBX")
+    # one row per message: the segment array, and the patient of its FIRST
+    # PID (a PID after the OBX segments still applies; none -> "unknown")
+    segs = msgs.select(H.split_segments(F.col("message")).alias("segs"))
+    first_pid = F.try_element_at(F.filter("segs", lambda s: H.seg_id(s) == "PID"), F.lit(1))
+    obx = (
+        segs.select(H.pid3_patient_id(H.field(first_pid, 3)).alias("patientId"), "segs")
+        .select("patientId", F.explode("segs").alias("segment"))
+        .where(H.seg_id(F.col("segment")) == "OBX")
+    )
     f = F.col("segment")
     obx_dto = obx.select(
-        "messageId",
-        "segIndex",
+        "patientId",
         F.coalesce(H.nonempty(H.component(H.field(f, 3), 1)), H.nonempty(H.component(H.field(f, 3), 2))).alias("code"),
         H.nonempty(H.field(f, 5)).alias("valueRaw"),
         F.coalesce(H.nonempty(H.component(H.field(f, 6), 2)), H.nonempty(H.component(H.field(f, 6), 1)), F.lit("1")).alias(
@@ -96,13 +85,9 @@ def parse_hl7_messages(msgs: DataFrame, batch_time: dt.datetime | None = None) -
         content_hash(f).alias("ingestHash"),
     )
 
-    # J1: broadcast the per-message PID context onto OBX rows — the PID side is
-    # one row per message, always tiny relative to observations.
-    joined = obx_dto.join(F.broadcast(pid), "messageId", "left")
-
-    return joined.select(
+    return obx_dto.select(
         F.lit(1).alias("schemaVersion"),
-        F.coalesce(F.col("patientId"), F.lit("unknown")).alias("patientId"),
+        F.col("patientId"),
         F.col("code"),
         F.col("valueRaw").try_cast("double").alias("value"),
         F.when(F.col("valueRaw").try_cast("double").isNull(), F.col("valueRaw")).alias("valueString"),

@@ -93,3 +93,14 @@ def test_hl7_obx7_reference_range(spark):
     assert rows["718-7"].rangeLo == 3.5 and rows["718-7"].rangeHi == 7.8
     assert rows["718-7"].abnormal is True  # 9.9 > 7.8
     assert rows["8867-4"].abnormal is False  # 72 in 60-100
+
+
+def test_hl7_pid_placement(spark):
+    # the first PID in segment order names the patient of every OBX row of its
+    # message, wherever the PID sits; messages never share a patient
+    two_pids = "MSH|x\nPID|1||first\nOBX|1|NM|1-1^A||1|u\nPID|2||second\nOBX|2|NM|2-2^B||2|u\n"
+    pid_last = "MSH|x\nOBX|1|NM|3-3^C||3|u\nOBX|2|NM|4-4^D||4|u\nPID|1||late\n"
+    own = "MSH|x\nPID|1||own\nOBX|1|NM|5-5^E||5|u\n"
+    msgs = spark.createDataFrame([(1, two_pids), (2, pid_last), (3, own)], ["messageId", "message"])
+    got = {r.code: r.patientId for r in parse_hl7_messages(msgs).collect()}
+    assert got == {"1-1": "first", "2-2": "first", "3-3": "late", "4-4": "late", "5-5": "own"}

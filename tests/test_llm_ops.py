@@ -423,6 +423,20 @@ def test_ivf_full_probe_equals_exact_topk(spark):
     assert ivf == exact
 
 
+def test_ivf_full_probe_skips_null_embedding_seed(spark):
+    """A NULL embedding at the lowest id is never a seed: full probe still
+    equals brute-force top-k."""
+    from etl_healthcare_spark.operators.similarity import ivf_topk
+
+    df = _clustered_vectors(spark, per_cluster=10).withColumn(
+        "embedding", F.when(F.col("vec_id") != 0, F.col("embedding"))
+    )
+    q = [1.0] + [0.02] * 11
+    exact = [r.id for r in topk_cosine(df, "embedding", "vec_id", q, k=10).collect()]
+    ivf = [r.id for r in ivf_topk(df, "embedding", "vec_id", q, nlist=3, nprobe=3, k=10).collect()]
+    assert ivf == exact
+
+
 def test_ivf_partial_probe_full_recall_on_clustered_data(spark):
     """On clustered data (the real-corpus case) one probed cell of three
     already holds every true neighbor: recall@10 == 1.0 at nprobe=1, with

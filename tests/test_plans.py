@@ -148,6 +148,12 @@ def test_quality_gate_is_map_only(spark):
     assert "Exchange" not in plan, "the quality gate is a projection — no shuffle"
 
 
+def test_hl7_parse_is_map_only(spark):
+    plan = _plan(spark, "p4_hl7_obx_dto")  # parse_hl7_messages over two messages
+    for node in ("Exchange", "Join", "Aggregate"):
+        assert node not in plan, f"each OBX row takes its message's PID in the same pass — no {node}"
+
+
 def test_source_cap_broadcasts_count_table(spark):
     plan = _plan(spark, "sample_source_cap")
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan, (
